@@ -2,7 +2,8 @@
 
 Runs a small crawl (default 20k docs, depth 5) twice — once warm-up,
 once under cProfile — and prints the top cumulative py4j / plan-side
-costs plus the WAVE_TIMERS decomposition.  Small corpus on purpose:
+costs plus each wave's phase decomposition (the ``phase_ms`` the engine
+records in every wave's commit summary).  Small corpus on purpose:
 executor work is negligible, so wall ~= driver floor and the profile
 isolates exactly the non-scaling seconds the scaling analysis charges
 to "plan" / "union_build" / "obs_fold".
@@ -17,8 +18,6 @@ import os
 import pstats
 import sys
 import tempfile
-
-os.environ.setdefault("SPARK_GRAFT_WAVE_TIMERS", "1")
 
 from pyspark.sql import SparkSession
 
@@ -60,7 +59,15 @@ def main() -> None:
         cid = eng.start_crawl(seed, DEPTH, crawl_id=f"prof_{tag}")
         t0 = time.time()
         eng.run_crawl(cid)
-        return time.time() - t0
+        wall = time.time() - t0
+        for w in store.committed_waves(cid):
+            phases = store.wave_summary(cid, w).get("phase_ms", {})
+            print(
+                f"phase_ms {tag} w{w} "
+                + " ".join(f"{k}={v}" for k, v in phases.items()),
+                flush=True,
+            )
+        return wall
 
     w = one_crawl("warm")
     print(f"warm-up crawl wall: {w:.2f}s", flush=True)

@@ -8,42 +8,44 @@ from __future__ import annotations
 import json
 
 import numpy as np
-import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from tests.helpers import engine_state, good_seeds
 from web_crawler_spark.config import CrawlConfig
 from web_crawler_spark.corpus import CorpusParams, build_corpus_py, documents_df_from_py
 from web_crawler_spark.engine import CrawlEngine
 from web_crawler_spark.functions.xxh64 import xxhash64_str
-from web_crawler_spark.operators.dedup import (
-    BloomState,
-    BroadcastBloom,
-    _PartitionLocalTester,
-    _test_hashes,
-    bloom_maybe_seen,
-    build_bloom_bitmaps,
-)
+from web_crawler_spark.operators.dedup import BloomState, _PartitionLocalTester
 from web_crawler_spark.store import SnapshotStore
 
 CFG = CrawlConfig()
 
 
-def test_no_false_negatives_and_low_fpp(spark):
-    members = [xxhash64_str(f"member-{i}") for i in range(5000)]
-    others = [xxhash64_str(f"other-{i}") for i in range(5000)]
-    seen = spark.createDataFrame([(h,) for h in members], "url_hash long")
-    bitmaps = build_bloom_bitmaps(seen, CFG)
-    bcast = spark.sparkContext.broadcast(bitmaps)
+def _keys_df(spark, keys):
+    return spark.createDataFrame([(h,) for h in keys], "url_hash long")
 
+
+def _verdicts(st, spark, members, others):
+    """{(hash, kind): maybe_seen} of members ("m") and non-members ("o")
+    through the partition-local verdict."""
     cand = spark.createDataFrame(
         [(h, "m") for h in members] + [(h, "o") for h in others],
         "child_hash long, kind string",
     )
-    flagged = {
-        (r.child_hash, r.kind): r.maybe_seen
-        for r in bloom_maybe_seen(cand, bcast, CFG).collect()
-    }
+    rows = st.verdict(cand, F.col("child_hash")).collect()
+    assert len(rows) == len(members) + len(others)  # no rows lost/duplicated
+    return {(r.child_hash, r.kind): r.maybe_seen for r in rows}
+
+
+def test_no_false_negatives_and_low_fpp(spark, tmp_path):
+    members = [xxhash64_str(f"member-{i}") for i in range(5000)]
+    others = [xxhash64_str(f"other-{i}") for i in range(5000)]
+    st = BloomState.build(
+        _keys_df(spark, members), CFG, n_seen=len(members),
+        root=tmp_path / "bloom", wave=0,
+    )
+    flagged = _verdicts(st, spark, members, others)
     # bloom property 1: every member is maybe_seen (no false negatives)
     assert all(flagged[(h, "m")] for h in members)
     # bloom property 2: false-positive rate is tiny at this load factor
@@ -51,36 +53,29 @@ def test_no_false_negatives_and_low_fpp(spark):
     assert fp / len(others) < 0.01, f"FPP too high: {fp / len(others)}"
 
 
-def test_empty_seen_set(spark):
-    seen = spark.createDataFrame([], "url_hash long")
-    bitmaps = build_bloom_bitmaps(seen, CFG)
-    assert bitmaps == {}
-    bcast = spark.sparkContext.broadcast(bitmaps)
-    cand = spark.createDataFrame([(123,), (456,)], "child_hash long")
-    rows = bloom_maybe_seen(cand, bcast, CFG).collect()
-    assert not any(r.maybe_seen for r in rows)
+def test_empty_seen_set(spark, tmp_path):
+    st = BloomState.build(
+        _keys_df(spark, []), CFG, n_seen=0, root=tmp_path / "bloom", wave=0,
+    )
+    assert st.bucket_paths == {}
+    flagged = _verdicts(st, spark, [], [123, 456])
+    assert not any(flagged.values())
 
 
-def test_adaptive_sizing_no_false_negatives(spark):
-    """n_seen-adaptive bitmaps (self-describing m_bits) keep the
-    no-false-negative property and a bounded FPP at their design load."""
-    n = 50_000
+def test_adaptive_sizing_no_false_negatives(spark, tmp_path):
+    """Capacity that follows the live seen-set size (bloom_min_seen=0,
+    n_seen above the 2^17 floor) keeps the no-false-negative property
+    and a bounded FPP at its design load."""
+    n = 80_000
+    cfg = CrawlConfig(bloom_min_seen=0)
     members = [xxhash64_str(f"m{i}") for i in range(n)]
     others = [xxhash64_str(f"o{i}") for i in range(n)]
-    seen = spark.createDataFrame([(h,) for h in members], "url_hash long")
-    small = build_bloom_bitmaps(seen, CFG, n_seen=n)
-    static = build_bloom_bitmaps(seen, CFG)
-    # adaptive sizing actually changed the bitmap size vs the static guess
-    assert len(next(iter(small.values()))) != len(next(iter(static.values())))
-    bcast = spark.sparkContext.broadcast(small)
-    cand = spark.createDataFrame(
-        [(h, "m") for h in members] + [(h, "o") for h in others],
-        "child_hash long, kind string",
+    st = BloomState.build(
+        _keys_df(spark, members), cfg, n_seen=n, root=tmp_path / "bloom", wave=0,
     )
-    flagged = {
-        (r.child_hash, r.kind): r.maybe_seen
-        for r in bloom_maybe_seen(cand, bcast, CFG).collect()
-    }
+    # sizing actually followed n_seen, not the floor or bloom_min_seen
+    assert st.capacity == 2 * n
+    flagged = _verdicts(st, spark, members, others)
     assert all(flagged[(h, "m")] for h in members)
     fp = sum(1 for h in others if flagged[(h, "o")])
     assert fp / n < 0.01, f"FPP too high: {fp / n}"
@@ -118,11 +113,9 @@ def test_bloom_sizing_bits_per_key_at_capacity():
     assert total_bits >= cfg.bloom_bits_per_key * capacity
 
 
-@pytest.mark.parametrize("distribution", ["partition_local", "broadcast"])
-def test_bloom_path_equals_plain_join_path(spark, tmp_path, distribution):
-    """use_bloom_prefilter on/off produce bit-identical crawl state under
-    BOTH distributions (the bloom is a pure physical optimization; the
-    exact join absorbs FPs)."""
+def test_bloom_path_equals_plain_join_path(spark, tmp_path):
+    """use_bloom_prefilter on/off produce bit-identical crawl state (the
+    bloom is a pure physical optimization; the exact join absorbs FPs)."""
     params = CorpusParams(n_docs=80)
     corpus = build_corpus_py(params)
     docs = documents_df_from_py(spark, corpus).cache()
@@ -131,13 +124,10 @@ def test_bloom_path_equals_plain_join_path(spark, tmp_path, distribution):
     for label, cfg in {
         # bloom_min_seen=0 forces the prefilter on despite the tiny corpus
         # (the engine otherwise skips it below the threshold)
-        "bloom": CrawlConfig(
-            use_bloom_prefilter=True, bloom_min_seen=0,
-            bloom_distribution=distribution,
-        ),
+        "bloom": CrawlConfig(use_bloom_prefilter=True, bloom_min_seen=0),
         "plain": CrawlConfig(use_bloom_prefilter=False),
     }.items():
-        store = SnapshotStore(tmp_path / f"{distribution}_{label}")
+        store = SnapshotStore(tmp_path / label)
         eng = CrawlEngine(spark, store, docs, cfg)
         cid = eng.start_crawl(seed, 2, crawl_id="c")
         eng.run_crawl(cid)
@@ -150,10 +140,6 @@ def test_bloom_path_equals_plain_join_path(spark, tmp_path, distribution):
 # partition-local state (BloomState)
 # ---------------------------------------------------------------------------
 
-def _keys_df(spark, keys):
-    return spark.createDataFrame([(h,) for h in keys], "url_hash long")
-
-
 def test_bloom_state_build_verdict_no_false_negatives(spark, tmp_path):
     members = [xxhash64_str(f"m{i}") for i in range(20_000)]
     others = [xxhash64_str(f"o{i}") for i in range(20_000)]
@@ -161,15 +147,7 @@ def test_bloom_state_build_verdict_no_false_negatives(spark, tmp_path):
         _keys_df(spark, members), CFG, n_seen=len(members),
         root=tmp_path / "bloom", wave=0,
     )
-    cand = spark.createDataFrame(
-        [(h, "m") for h in members] + [(h, "o") for h in others],
-        "child_hash long, kind string",
-    )
-    from pyspark.sql import functions as F
-
-    rows = st.verdict(cand, F.col("child_hash")).collect()
-    flagged = {(r.child_hash, r.kind): r.maybe_seen for r in rows}
-    assert len(rows) == len(members) + len(others)  # no rows lost/duplicated
+    flagged = _verdicts(st, spark, members, others)
     assert all(flagged[(h, "m")] for h in members)
     fp = sum(1 for h in others if flagged[(h, "o")])
     assert fp / len(others) < 0.01, f"FPP too high: {fp / len(others)}"
@@ -230,11 +208,12 @@ def test_bloom_state_incremental_equals_full(spark, tmp_path):
         a = np.load(tmp_path / "inc" / inc.bucket_paths[b])
         f = np.load(tmp_path / "full" / full.bucket_paths[b])
         assert (a == f).all(), f"bucket {b}"
-    # no false negatives through the verdict path either
-    bitmaps = {
-        b: np.load(tmp_path / "inc" / p) for b, p in inc.bucket_paths.items()
-    }
-    assert _test_hashes(bitmaps, np.array(all_keys, dtype=np.int64), CFG).all()
+    # no false negatives through the verdict's probe loop either
+    tester = _PartitionLocalTester(
+        str(tmp_path / "inc"), inc.bucket_paths, CFG.dedup_buckets,
+        CFG.bloom_num_probes,
+    )
+    assert tester.test(np.array(all_keys, dtype=np.int64)).all()
 
 
 def test_bloom_state_load_guards(spark, tmp_path):
@@ -279,8 +258,6 @@ def test_bloom_state_gc_drops_stale_versions(spark, tmp_path):
         prev_live = {p.split("/", 1)[0] for p in st.bucket_paths.values()}
         # verdict BEFORE the update, collected AFTER it — the public
         # sequence immediate GC broke with task-level FileNotFoundError
-        from pyspark.sql import functions as F
-
         cand = _keys_df(spark, [xxhash64_str(f"k{i}") for i in range(50)])
         v = st.verdict(cand, F.col("url_hash"))
         st.update(
@@ -292,20 +269,6 @@ def test_bloom_state_gc_drops_stale_versions(spark, tmp_path):
     assert live <= on_disk <= live | prev_live  # one-version deferral only
     m = json.loads((root / BloomState.MANIFEST).read_text())
     assert m["wave"] == 3
-
-
-def test_broadcast_bloom_incremental_equals_full(spark):
-    """The retained A/B twin: driver-side OR == full rebuild."""
-    all_keys = [xxhash64_str(f"k{i}") for i in range(30_000)]
-    half1, half2 = all_keys[:15_000], all_keys[15_000:]
-    inc = BroadcastBloom.build(_keys_df(spark, half1), CFG, n_seen=len(half1))
-    inc.update(_keys_df(spark, half2))
-    full = BroadcastBloom.build(_keys_df(spark, all_keys), CFG, n_seen=len(half1))
-    assert inc.m_bits == full.m_bits
-    assert set(inc.bitmaps) == set(full.bitmaps)
-    for b in inc.bitmaps:
-        assert (inc.bitmaps[b] == full.bitmaps[b]).all(), f"bucket {b}"
-    assert _test_hashes(inc.bitmaps, np.array(all_keys, dtype=np.int64), CFG).all()
 
 
 def test_bloom_resume_with_persisted_state(spark, tmp_path):
@@ -379,6 +342,27 @@ def test_bloom_min_cut_frac_validated():
         CrawlConfig(bloom_min_cut_frac=1.5)
     with pytest.raises(ValueError, match="bloom_min_cut_frac"):
         CrawlConfig(bloom_min_cut_frac=-0.1)
+
+
+@pytest.mark.parametrize(
+    "kwargs, field",
+    [
+        ({"bloom_distribution": "broadcast"}, "bloom_distribution"),
+        ({"bloom_distribution": "partition-local"}, "bloom_distribution"),
+        ({"compact_shuffle_keys": True}, "compact_shuffle_keys"),
+    ],
+)
+def test_removed_plan_switches_fail_at_construction(kwargs, field):
+    """Removed alternates (and typos of the surviving value) fail when the
+    config is built, not mid-crawl."""
+    with pytest.raises(ValueError, match=field):
+        CrawlConfig(**kwargs)
+
+
+def test_bench_config_shape_constructs():
+    """bench.py passes both switches explicitly, at their surviving values."""
+    cfg = CrawlConfig(bloom_distribution="partition_local", compact_shuffle_keys=False)
+    assert cfg == CrawlConfig()
 
 
 def test_bloom_adaptive_gate_disables_in_dup_regime(spark, tmp_path, monkeypatch):

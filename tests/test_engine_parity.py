@@ -55,20 +55,15 @@ def test_parity_depth3(spark, corpus, docs_df, tmp_path):
         assert m[w].fetched == om["fetched"], f"wave {w} fetched"
         assert m[w].children == om["children"], f"wave {w} children"
         assert m[w].candidates == om["candidates"], f"wave {w} candidates"
-
-
-def test_parity_compact_shuffle_keys(spark, corpus, docs_df, tmp_path):
-    """The hash-keyed local-distinct experiment (config.py
-    compact_shuffle_keys) is a pure physical alternative: full oracle
-    parity on the crawl state."""
-    cfg = CrawlConfig(compact_shuffle_keys=True)
-    seed = good_seeds(corpus, cfg)[0]
-    oracle = OracleCrawler(corpus, cfg).crawl(seed, 3, crawl_id="c")
-    store = SnapshotStore(tmp_path / "s")
-    eng = CrawlEngine(spark, store, docs_df, cfg)
-    cid = eng.start_crawl(seed, 3, crawl_id="c")
-    eng.run_crawl(cid)
-    assert_parity(spark, store, cid, oracle)
+    # every committed wave records its phase timings in the commit summary
+    phases = {
+        "plan", "resolve", "union_build", "metrics_job", "bloom_upd",
+        "write_wait", "obs_fold",
+    }
+    for w in store.committed_waves(cid):
+        phase_ms = store.wave_summary(cid, w)["phase_ms"]
+        assert set(phase_ms) == phases, (w, phase_ms)
+        assert all(v >= 0 for v in phase_ms.values()), (w, phase_ms)
 
 
 def test_parity_politeness_budget(spark, corpus, docs_df, tmp_path):

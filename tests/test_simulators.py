@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 from web_crawler_spark.config import CrawlConfig
 from web_crawler_spark.sources.simulators import (
-    dns_cols,
+    dns_cols_unrolled,
     dns_py,
     fetch_outcome_cols,
     fetch_outcome_py,
@@ -54,31 +54,15 @@ def test_fetch_outcome_parity(spark):
             assert r["lat"] == lat, r
 
 
-def test_dns_parity(spark):
-    df = spark.createDataFrame([(n,) for n in NAMES], ["name"])
-    cols = dns_cols(F.col("name"), CFG)
-    rows = df.select(
-        "name", cols["dns_ok"].alias("ok"), cols["domain"].alias("dom"), cols["ip"].alias("ip")
-    ).collect()
-    for r in rows:
-        ok, dom, ip = dns_py(r["name"], CFG)
-        assert r["ok"] == ok, r["name"]
-        assert r["dom"] == dom, r["name"]
-        assert r["ip"] == ip, r["name"]
-    # single-label name must always fail, like the reference
-    assert dns_py("LOCALHOST:3000", CFG)[0] is False
-
-
 def test_dns_unrolled_parity(spark):
-    """The unrolled hot-path form (substring_index when-chain, zero HOFs,
-    zero Python) is bit-identical to dns_py and dns_cols — including
-    port-glued last labels, deep subdomains, and single-label names."""
-    from web_crawler_spark.sources.simulators import dns_cols_unrolled
-
+    """The unrolled Spark form (substring_index when-chain, zero HOFs,
+    zero Python) is bit-identical to dns_py — including port-glued last
+    labels, deep subdomains, and single-label names."""
     extra = [
         "A.B.C.D.E.F.BASE-0001.TEST",  # deeper than max_dns_depth
         "S00001.BASE-0001.TEST:8080",  # port glued to the last label
         "SINGLELABEL",
+        "LOCALHOST:3000",  # single label with a port
         "X.Y",
     ]
     names = NAMES + extra
@@ -93,3 +77,8 @@ def test_dns_unrolled_parity(spark):
         assert r["ok"] == ok, r["name"]
         assert r["dom"] == dom, r["name"]
         assert r["ip"] == ip, r["name"]
+    # single-label names must always fail, like the reference
+    by_name = {r["name"]: r["ok"] for r in rows}
+    assert dns_py("LOCALHOST:3000", CFG)[0] is False
+    assert by_name["LOCALHOST:3000"] is False
+    assert by_name["SINGLELABEL"] is False

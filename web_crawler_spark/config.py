@@ -22,16 +22,6 @@ class CrawlConfig:
     # deterministic-simulation knobs (sandbox stand-ins for live HTTP/DNS)
     dns_resolve_permille: int = 985   # P(suffix resolves) = 985/1000
     seed_tag: str = "v1"              # namespaces all hash-derived randomness
-    # "unrolled" (default): pure scalar column expressions — the
-    # max_dns_depth loop unrolled into a substring_index/xxhash64
-    # when-chain, fully inside whole-stage codegen, zero Python;
-    # "pandas": Arrow-batched UDF (one eval per name — kept as the
-    # fallback for regex/semantics experiments; JVM threads block on the
-    # Arrow socket while Python works);
-    # "expr": array/HOF column expressions (interpreted by Spark —
-    # profiled ~6x slower than the UDF; kept for parity testing).
-    # All three produce bit-identical output (tested).
-    dns_impl: str = "unrolled"
 
     # politeness / skew (north-rule additions; None = unlimited, reference parity)
     host_budget_per_wave: int | None = None
@@ -48,21 +38,19 @@ class CrawlConfig:
     # 20 GB/n_buckets — size so one bucket's bitmap fits a task comfortably
     # (production: 1024 buckets => ~20 MB/task).
     dedup_buckets: int = 32
-    # "partition_local" (default): file-backed per-bucket bitmaps; build/
+    # seen-set distribution: file-backed per-bucket bitmaps; build/
     # update/verdict are bucket-partitioned jobs and no task or the driver
     # ever holds more than one bucket's bitmap (the north rule's design —
-    # the only one feasible at 10^10 keys).  "broadcast": round-2 path
-    # (whole bitmap dict built driver-side, broadcast each wave) — kept
-    # for A/B benchmarking and regimes where the state is tiny.
+    # the only one feasible at 10^10 keys).  "partition_local" is the only
+    # accepted value; the field stays so existing callers that pass it
+    # keep constructing.
     bloom_distribution: str = "partition_local"
     # below this seen-set size the bloom prefilter cannot pay for itself.
-    # History: round 2's broadcast verdict cost 5x the whole crawl at
-    # 600k/local[32] (425 s vs 85 s without).  Round 3's partition-local
-    # verdict (bucket-partitioned JVM shuffle + NARROW hash-only scalar
-    # UDF) brought bloom-on to within run-to-run steal noise of bloom-off
+    # The partition-local verdict (bucket-partitioned JVM shuffle + NARROW
+    # hash-only scalar UDF) runs within run-to-run noise of bloom-off
     # (105 s at 1.8% steal vs 129 s at 25% steal — BENCH/ANALYSIS.md
-    # round 3), so the gate is now cheap insurance rather than a cliff.
-    # The prefilter's PURPOSE is still the regime where the seen set is
+    # round 3), so the gate is cheap insurance rather than a cliff.
+    # The prefilter's PURPOSE is the regime where the seen set is
     # huge relative to executor memory and most candidates are duplicates
     # (late-crawl convergence at the 10^10-row design point); below the
     # threshold the exact join alone is simpler and at least as fast.
@@ -80,42 +68,10 @@ class CrawlConfig:
     # cannot see that, only the measured cut can.  0 disables the gate.
     bloom_min_cut_frac: float = 0.05
 
-    # EXPERIMENT (round-3 A/B, default off): key the local-distinct
-    # groupBy on (crawl_id, parent_key, child_hash) instead of the full
-    # child URL string, recovering strings post-agg from a per-wave
-    # distinct (hash -> string) mapping join.  Trades ~32 B/row of
-    # shuffle key for an extra narrow shuffle + join; measured at 600k
-    # docs either way (BENCH/ANALYSIS.md round 3).  Caveat: trusts
-    # xxhash64 to be collision-free within one wave's candidate set
-    # (expected collisions ~n^2/2^65 — ~3 pairs at the FULL 10^10 frontier,
-    # 0 at any wave size this sandbox can hold), which is why it is an
-    # experiment flag and not the default.
+    # the per-parent local distinct groups on the full child URL string.
+    # False is the only accepted value; the field stays so existing
+    # callers that pass it keep constructing.
     compact_shuffle_keys: bool = False
-
-    # EXPERIMENT (round-4 A/B, default OFF): broadcast the per-wave
-    # updates delta into the frontier-fold join when its exact row count
-    # (observed at write time) is at most this, making the fold map-only
-    # (no re-shuffle of the whole frontier).  Measured a net LOSS on this
-    # host: the build-side collect+broadcast is serial driver time (the
-    # scarce resource), while the shuffled fold's ~100 MB/wave runs at
-    # full parallelism overlapped with planning — 200k/local[32] calm
-    # windows: broadcast 62.5 s vs shuffled 55.9/59.4 s
-    # (BENCH/ANALYSIS.md round 4).  Kept as a knob: on a real cluster
-    # with many executors the trade can invert (broadcast once vs
-    # re-shuffling a 10^10-row frontier), and the updates side is
-    # politeness-bounded by design.
-    fold_broadcast_max_rows: int = 0
-
-    # Disable PySpark's per-API-call call-site capture for DataFrame
-    # error context (public conf
-    # spark.python.sql.dataFrameDebugging.enabled) for the engine's
-    # session: the capture is an inspect stack walk + 2-3 extra py4j
-    # round-trips on EVERY DataFrame/Column call — measured ~65% of the
-    # wave loop's py4j traffic (29.3k -> 8.9k round-trips/crawl together
-    # with the union-cols cache, scripts/profile_wave_plan.py), pure
-    # driver-serial floor.  Cost:
-    # error messages lose the user-code call-site line.  Session-wide.
-    disable_df_debugging: bool = True
 
     # snapshot store: plan-lineage checkpoint cadence (in-memory frontier)
     compact_every_waves: int = 8
@@ -127,23 +83,21 @@ class CrawlConfig:
     store_compact_every_waves: int | None = None
 
     def __post_init__(self) -> None:
-        # typo-guard the string-valued physical-plan switches: a
-        # misspelled bloom_distribution silently fell through to the
-        # broadcast path (losing persistence/resume and the 10^10-scale
-        # behavior); a misspelled dns_impl fell through to the unrolled
-        # chain (round-3 ADVICE)
-        if self.bloom_distribution not in ("partition_local", "broadcast"):
+        # fail at construction, not mid-crawl, on a removed or misspelled
+        # physical-plan switch
+        if self.bloom_distribution != "partition_local":
             raise ValueError(
-                f"bloom_distribution must be 'partition_local' or "
-                f"'broadcast' (got {self.bloom_distribution!r})"
+                f"bloom_distribution must be 'partition_local' (got "
+                f"{self.bloom_distribution!r}); the broadcast distribution "
+                "was removed"
+            )
+        if self.compact_shuffle_keys:
+            raise ValueError(
+                "compact_shuffle_keys must be False; the hash-keyed local "
+                "distinct was removed"
             )
         if not 0.0 <= self.bloom_min_cut_frac < 1.0:
             raise ValueError(
                 f"bloom_min_cut_frac must be in [0, 1) "
                 f"(got {self.bloom_min_cut_frac!r})"
-            )
-        if self.dns_impl not in ("unrolled", "expr", "pandas"):
-            raise ValueError(
-                f"dns_impl must be 'unrolled', 'expr' or 'pandas' "
-                f"(got {self.dns_impl!r})"
             )

@@ -49,7 +49,6 @@ Scale design (10^10-URL frontier, 1000 executors):
 from __future__ import annotations
 
 import logging
-import os
 import shutil
 import time
 import uuid
@@ -61,9 +60,7 @@ from pyspark.sql import functions as F
 from .config import CrawlConfig
 from .functions.urls import URL_REGEX_JAVA, normalize_cols, normalize_url_py
 from .sources.simulators import (
-    dns_cols,
     dns_cols_unrolled,
-    dns_pandas_udf,
     dns_py,
     fetch_outcome_cols,
     fetch_outcome_py,
@@ -76,10 +73,6 @@ log = logging.getLogger(__name__)
 # before its measured cut can switch the prefilter off — tail waves with
 # a handful of candidates would otherwise noise-trip the sticky gate
 BLOOM_GATE_MIN_SAMPLE = 1024
-
-# per-wave phase timers (serial-floor attribution; prints one line per
-# wave to the log — measurement only, zero cost when off)
-WAVE_TIMERS = os.environ.get("SPARK_GRAFT_WAVE_TIMERS", "") == "1"
 
 PENDING, COMPLETED, FAILED, CANCELLED = "PENDING", "COMPLETED", "FAILED", "CANCELLED"
 
@@ -160,7 +153,7 @@ class CrawlEngine:
                 .persist()
             )
         self.robots = robots  # columns: host, disallowed
-        # larger Arrow batches for the narrow bloom/DNS UDF stages: fewer
+        # larger Arrow batches for the narrow bloom verdict UDF: fewer
         # batch boundaries => better JVM<->Python pipelining per task
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         # PySpark wraps every DataFrame/Column API call in a call-site
@@ -176,14 +169,14 @@ class CrawlEngine:
         # engine receives an already-built session — so flip the
         # module-level cache the wrapper consults instead; it exists
         # precisely to make this check cheap and is only ever filled
-        # from that conf.
-        if self.cfg.disable_df_debugging:
-            try:
-                import pyspark.errors.utils as _peu
+        # from that conf.  Cost: error messages lose the user-code
+        # call-site line, session-wide.
+        try:
+            import pyspark.errors.utils as _peu
 
-                _peu._enable_debugging_cache = False
-            except Exception:
-                pass  # best-effort: older/newer PySpark layouts keep working
+            _peu._enable_debugging_cache = False
+        except Exception:
+            pass  # best-effort: older/newer PySpark layouts keep working
         # constant unresolved column-expression trees, built ONCE per
         # engine: Column objects are immutable and reusable across waves,
         # and re-deriving them per wave (the DNS when-chain alone is
@@ -202,11 +195,7 @@ class CrawlEngine:
         x["fo"] = fetch_outcome_cols(
             F.col("full_key"), F.col("doc_id").isNotNull(), F.col("attempts"), cfg
         )
-        if cfg.dns_impl == "pandas":
-            x["dns_struct"] = dns_pandas_udf(cfg)(F.col("child_name"))
-        else:
-            dns_fn = dns_cols if cfg.dns_impl == "expr" else dns_cols_unrolled
-            x["dns"] = dns_fn(F.col("child_name"), cfg)
+        x["dns"] = dns_cols_unrolled(F.col("child_name"), cfg)
         x["norm"] = normalize_cols(F.col("raw"))
         x["text_spans"] = F.filter(F.col("spans"), lambda s: s["kind"] == "text")
         x["winner_w"] = Window.partitionBy("crawl_id", "child_full").orderBy(
@@ -405,13 +394,12 @@ class CrawlEngine:
             return meta
         from concurrent.futures import ThreadPoolExecutor
 
-        from .operators.dedup import BloomState, BroadcastBloom
+        from .operators.dedup import BloomState
 
         self.store.clean_uncommitted(crawl_id)
         last_wave = self.store.last_committed_wave(crawl_id)
         wave = last_wave + 1
         bloom_root = self.store.crawl_dir(crawl_id) / "bloom"
-        partition_local = self.cfg.bloom_distribution == "partition_local"
 
         waves_done = 0
         frontier: DataFrame | None = None
@@ -424,7 +412,7 @@ class CrawlEngine:
         # materialization job, and (bloom path) state updates overlap on it
         pool = ThreadPoolExecutor(max_workers=4)
         n_seen = n_pending = 0
-        bloom = None  # BloomState | BroadcastBloom | None
+        bloom: BloomState | None = None
         # adaptive payoff gate (cfg.bloom_min_cut_frac): sticky-off once
         # a measured wave shows the prefilter certifying almost nothing —
         # in a BFS the duplicate fraction of candidates only grows as the
@@ -495,10 +483,9 @@ class CrawlEngine:
                         self.store.frontier(self.spark, crawl_id)
                     )
                     n_seen, n_pending = count_fn()  # no overlap available yet
-                    if last_wave and partition_local and bloom_pays:
+                    if last_wave and bloom_pays:
                         # resume: reuse persisted per-bucket state only if
-                        # its manifest matches the last committed wave
-                        # (BroadcastBloom is never persisted — rebuilt).
+                        # its manifest matches the last committed wave.
                         # Skipped entirely when the persisted gate already
                         # tripped: the on-disk state is stale by design.
                         bloom = BloomState.load(
@@ -550,13 +537,10 @@ class CrawlEngine:
                     seen_hashed = frontier.select(
                         F.xxhash64("crawl_id", "full_key").alias("url_hash")
                     )
-                    if partition_local:
-                        # state as of the last committed wave (= wave-1)
-                        bloom = BloomState.build(
-                            seen_hashed, self.cfg, n_seen, bloom_root, wave - 1
-                        )
-                    else:
-                        bloom = BroadcastBloom.build(seen_hashed, self.cfg, n_seen)
+                    # state as of the last committed wave (= wave-1)
+                    bloom = BloomState.build(
+                        seen_hashed, self.cfg, n_seen, bloom_root, wave - 1
+                    )
                 elif not use_bloom:
                     bloom = None
                 eligible = self._eligible(
@@ -754,7 +738,7 @@ class CrawlEngine:
         seen: DataFrame | None,
         is_root: bool,
         root_fetched: int = 1,
-        bloom=None,  # BloomState | BroadcastBloom, managed by run_crawl
+        bloom=None,  # BloomState, managed by run_crawl
         cancel_ids: list[str] | None = None,
         prev_frontier: DataFrame | None = None,
         checkpoint: bool = False,
@@ -834,30 +818,13 @@ class CrawlEngine:
         c_name, c_http = self._x["norm"]
         canon = links.withColumn("child_full", F.concat(c_http, c_name))
         agg_cols = self._x["agg_cols"]
-        if cfg.compact_shuffle_keys:
-            # A/B experiment (config.py): shuffle the 8-byte child hash as
-            # the grouping key instead of the ~40-byte URL string; strings
-            # are recovered post-agg from a per-wave distinct mapping.
-            # Map-side partial agg dedups both paths identically — the
-            # difference is key bytes vs one extra narrow shuffle + join.
-            canon_h = canon.withColumn("child_hash", F.xxhash64("child_full"))
-            mapping = canon_h.select(
-                "crawl_id", "child_hash", "child_full"
-            ).dropDuplicates(["crawl_id", "child_hash"])
-            local = (
-                canon_h.groupBy("crawl_id", "parent_key", "child_hash")
-                .agg(*agg_cols)
-                .join(mapping, ["crawl_id", "child_hash"], "inner")
-            )
-        else:
-            local = (
-                canon.groupBy("crawl_id", "parent_key", "child_full")
-                .agg(*agg_cols)
-                .withColumn("child_hash", F.xxhash64("child_full"))
-            )
-        local = local.withColumn(
-            "child_http", self._x["child_http"]
-        ).withColumn("child_name", self._x["child_name"])
+        local = (
+            canon.groupBy("crawl_id", "parent_key", "child_full")
+            .agg(*agg_cols)
+            .withColumn("child_hash", F.xxhash64("child_full"))
+            .withColumn("child_http", self._x["child_http"])
+            .withColumn("child_name", self._x["child_name"])
+        )
 
         # ---- seen-set dedup (J1): bloom stage 1 + exact stage 2 ----
         # expressed as a left join + is_fresh flag (not left_anti) so the
@@ -866,8 +833,6 @@ class CrawlEngine:
         # a single pass — no extra jobs re-deriving the lineage.  All rows
         # of a given child share is_fresh, so downstream windows per child
         # are never mixed.
-        to_unpersist: list[DataFrame] = []
-        bcast = None
         bloom_candidates = bloom_maybe = 0
         # the prefilter runs only when run_crawl decided the seen set is
         # worth it and handed over live state (below cfg.bloom_min_seen
@@ -888,8 +853,7 @@ class CrawlEngine:
                 # another crawl's fresh candidate (isolation, SURVEY §1.1);
                 # cross-crawl false positives would only cost exact-join
                 # rows, but scoping keeps the prefilter effective too.
-                from .operators.dedup import BloomState, bloom_maybe_seen_udf
-
+                #
                 # materialize the flagged candidate set ONCE, eagerly,
                 # before the verdict split: `flagged` fans out into the
                 # certain/maybe branches, whose stages race to fill a lazy
@@ -904,20 +868,12 @@ class CrawlEngine:
                 if frontier_resolve is not None:
                     frontier_resolve()  # first Spark action of the wave
 
-                bloom_key = F.xxhash64("crawl_id", "child_full")
-                if isinstance(bloom, BloomState):
-                    # partition-local: candidates co-partitioned with the
-                    # per-bucket bitmap FILES; each task holds one bucket's
-                    # bitmap (total/n_buckets bytes) — no driver state, no
-                    # whole-state broadcast (the 10^10-point design)
-                    flagged = bloom.verdict(local, bloom_key)
-                else:
-                    # broadcast twin (A/B benchmarking; small-state regime)
-                    bcast = self.spark.sparkContext.broadcast(bloom.bitmap_bytes())
-                    flagged = local.withColumn(
-                        "maybe_seen", bloom_maybe_seen_udf(bcast, cfg)(bloom_key)
-                    )
-                flagged = flagged.localCheckpoint(eager=True)
+                # candidates co-partitioned with the per-bucket bitmap
+                # FILES: each task holds one bucket's bitmap
+                # (total/n_buckets bytes) — no driver state, no broadcast
+                flagged = bloom.verdict(
+                    local, F.xxhash64("crawl_id", "child_full")
+                ).localCheckpoint(eager=True)
                 # prefilter effectiveness, measured: one cheap scan of the
                 # just-materialized rows — maybe-seen rows are the ONLY
                 # input of the stage-2 exact join below
@@ -950,21 +906,12 @@ class CrawlEngine:
             fresh = local.withColumn("is_fresh", F.lit(True))
 
         # ---- DNS + robots admission (S2/D6) ----
-        if cfg.dns_impl == "pandas":
-            cand = (
-                fresh.withColumn("_dns", self._x["dns_struct"])
-                .withColumn("dns_ok", F.col("_dns.dns_ok"))
-                .withColumn("child_domain", F.col("_dns.domain"))
-                .withColumn("child_ip", F.col("_dns.ip"))
-                .drop("_dns")
-            )
-        else:
-            dns = self._x["dns"]
-            cand = (
-                fresh.withColumn("dns_ok", dns["dns_ok"])
-                .withColumn("child_domain", dns["domain"])
-                .withColumn("child_ip", dns["ip"])
-            )
+        dns = self._x["dns"]
+        cand = (
+            fresh.withColumn("dns_ok", dns["dns_ok"])
+            .withColumn("child_domain", dns["domain"])
+            .withColumn("child_ip", dns["ip"])
+        )
         if cfg.respect_robots and self.robots is not None:
             rb = self.robots.select(
                 F.col("host").alias("_r_host"), F.col("disallowed").alias("_r_disallowed")
@@ -1100,12 +1047,20 @@ class CrawlEngine:
         # wave pipeline (explode/bloom/window over millions of rows)
         # through that handful of tasks and serialize the heavy stage —
         # the cache must be filled by a full-width job first.
-        _tm: dict | None = {"plan": time.time() - t0} if WAVE_TIMERS else None
+        # Wall time per phase rides the commit summary as ``phase_ms``.
+        phase_ms: dict[str, int] = {}
+        t_lap = t0
+
+        def lap(phase: str) -> None:
+            nonlocal t_lap
+            now = time.time()
+            phase_ms[phase] = int((now - t_lap) * 1000)
+            t_lap = now
+
+        lap("plan")
         if frontier_resolve is not None:
             frontier_resolve()  # idempotent (bloom path resolved earlier)
-        if _tm is not None:
-            _tm["resolve"] = time.time() - t0 - _tm["plan"]
-            _t_prev = time.time()
+        lap("resolve")
         f = F.col("is_fresh")
         part_agg = (
             cand.groupBy(F.spark_partition_id().alias("partition_id"))
@@ -1164,9 +1119,7 @@ class CrawlEngine:
             )
             if updates is not None:
                 delta = delta.unionByName(self._as_union(updates, "updates"))
-            if _tm is not None:
-                _tm["union_build"] = time.time() - _t_prev
-                _t_prev = time.time()
+            lap("union_build")
             st = self.spark.sparkContext.statusTracker()
             ids0 = set(st.getActiveJobsIds())
             metrics_fut = pool.submit(part_agg.collect)
@@ -1181,9 +1134,7 @@ class CrawlEngine:
                 self.store.write_delta_union, delta, crawl_id, wave
             )
             part_rows = metrics_fut.result()
-            if _tm is not None:
-                _tm["metrics_job"] = time.time() - _t_prev
-                _t_prev = time.time()
+            lap("metrics_job")
             raw_total = sum(int(r["n_raw"]) for r in part_rows)
             candidates = sum(int(r["candidates"]) for r in part_rows)
             dns_dropped = sum(int(r["dns_dropped"]) for r in part_rows)
@@ -1193,26 +1144,18 @@ class CrawlEngine:
             )
             if bloom is not None:
                 # O(wave) incremental maintenance: OR this wave's insert
-                # keys into the state.  Partition-local: a bucket-
-                # partitioned job writes only the touched buckets' files +
-                # a new manifest; broadcast: driver-side dict OR.  Runs on
-                # this thread while the union write runs on the pool.
-                from .operators.dedup import BloomState
-
-                bloom_delta = children.select(
-                    F.xxhash64("crawl_id", "full_key").alias("url_hash")
+                # keys into the state — a bucket-partitioned job writes
+                # only the touched buckets' files + a new manifest.  Runs
+                # on this thread while the union write runs on the pool.
+                bloom.update(
+                    children.select(
+                        F.xxhash64("crawl_id", "full_key").alias("url_hash")
+                    ),
+                    wave,
                 )
-                if isinstance(bloom, BloomState):
-                    bloom.update(bloom_delta, wave)
-                else:
-                    bloom.update(bloom_delta)
-            if _tm is not None:
-                _tm["bloom_upd"] = time.time() - _t_prev
-                _t_prev = time.time()
+            lap("bloom_upd")
             write_fut.result()
-            if _tm is not None:
-                _tm["write_wait"] = time.time() - _t_prev
-                _t_prev = time.time()
+            lap("write_wait")
             if upd_obs is not None:
                 og = upd_obs.get
                 fetched, ok = int(og["fetched"]), int(og["ok"])
@@ -1228,18 +1171,11 @@ class CrawlEngine:
                 # an in-memory fold through the wave pipeline references
                 # prev in three branches and the plan grows 3^waves, OOM
                 # by wave ~6); its one-job materialization starts now and
-                # resolves lazily in the caller.  The updates row count
-                # (known exactly from the write's observation) gates the
-                # broadcast fold below.
-                fold = self._fold_frontier(
-                    prev_frontier, crawl_id, wave,
-                    n_updates=fetched + n_cancelled,
-                )
+                # resolves lazily in the caller.
+                fold = self._fold_frontier(prev_frontier, crawl_id, wave)
                 next_df, count_fn = self._prepare_frontier(fold, checkpoint)
                 mat = (next_df, pool.submit(count_fn))
-            if _tm is not None:
-                _tm["obs_fold"] = time.time() - _t_prev
-                _t_prev = time.time()
+            lap("obs_fold")
 
             elapsed_ms = int((time.time() - t0) * 1000)
             metrics_rows = [
@@ -1277,27 +1213,13 @@ class CrawlEngine:
                 bloom_maybe=bloom_maybe,
             )
             self.store.commit_wave(
-                crawl_id, wave, {k: v for k, v in result.__dict__.items()}
+                crawl_id, wave, {**result.__dict__, "phase_ms": phase_ms}
             )
-            if _tm is not None:
-                _tm["commit"] = time.time() - _t_prev
-                _tm["total"] = time.time() - t0
-                print(
-                    f"WAVE_TIMERS {crawl_id} w{wave} "
-                    + " ".join(f"{k}={v:.3f}" for k, v in _tm.items()),
-                    flush=True,
-                )
         finally:
             # always reached (round-3 ADVICE: a raise between pool
             # creation and the success-path shutdown leaked the pool)
             outcomes.unpersist()
             cand.unpersist()
-            for df in to_unpersist:
-                df.unpersist()
-            if bcast is not None:
-                # several-MB bitmap broadcast per wave: release it now or a
-                # deep crawl accumulates broadcast blocks for the session
-                bcast.destroy()
             if local_pool:
                 pool.shutdown(wait=False)
         return result, mat
@@ -1325,25 +1247,12 @@ class CrawlEngine:
             self._union_cols_cache[key] = cols
         return df.select(*cols)
 
-    def _fold_frontier(
-        self, prev: DataFrame, crawl_id: str, wave: int,
-        n_updates: int | None = None,
-    ) -> DataFrame:
+    def _fold_frontier(self, prev: DataFrame, crawl_id: str, wave: int) -> DataFrame:
         """Fold one written wave's deltas into the cached frontier: apply
-        the status updates to existing rows, append the inserts.  Reads
-        only the new wave's files — stable, bounded lineage (prev appears
-        exactly once in the plan); updates-only waves simply have no
-        inserts file.
-
-        The updates side is BROADCAST whenever its exact row count (known
-        from the write job's observation: one row per fetched parent +
-        per cancelled row) is bounded: a shuffled fold re-partitions the
-        ENTIRE frontier every wave — measured ~100 MB/wave of shuffle at
-        the 600k bench, the single largest stage group — while the wave
-        side is bounded by the politeness budget.  Broadcast makes the
-        fold map-only: the frontier is scanned once from cache and never
-        re-shuffled.  Above the bound (or unknown) it falls back to the
-        shuffled sort-merge fold."""
+        the status updates to existing rows (a shuffled left join), append
+        the inserts.  Reads only the new wave's files — stable, bounded
+        lineage (prev appears exactly once in the plan); updates-only
+        waves simply have no inserts file."""
         from .store import UPDATES_SCHEMA
 
         upd_path = self.store.delta_path(crawl_id, wave, "updates")
@@ -1361,11 +1270,6 @@ class CrawlEngine:
                     F.col("attempts").alias("_u_attempts"),
                 )
             )
-            if (
-                n_updates is not None
-                and n_updates <= self.cfg.fold_broadcast_max_rows
-            ):
-                upd = F.broadcast(upd)
             merged = (
                 prev.join(upd, ["crawl_id", "url_hash", "full_key"], "left")
                 .withColumn("status", F.coalesce("_u_status", "status"))

@@ -53,11 +53,6 @@ The bucket of a key is the low ``log2(n_buckets)`` bits of its uint64
 xxhash64 (``n_buckets`` must be a power of two): Spark-side
 ``bitwiseAND(n_buckets-1)`` and numpy-side ``% uint64(n_buckets)`` agree
 exactly for every signed/unsigned reinterpretation.
-
-``build_bloom_bitmaps`` / ``bloom_maybe_seen`` keep the round-2
-*broadcast* distribution for A/B benchmarking and small fleets where one
-broadcast genuinely beats a candidate repartition; the engine defaults to
-the partition-local path (``CrawlConfig.bloom_distribution``).
 """
 
 from __future__ import annotations
@@ -71,7 +66,6 @@ from pathlib import Path
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..config import CrawlConfig
 
@@ -97,21 +91,10 @@ def bucket_col(hash_col: F.Column, n_buckets: int) -> F.Column:
     return hash_col.bitwiseAND(F.lit(n_buckets - 1))
 
 
-def _bucket_bits(cfg: CrawlConfig, expected_keys_per_bucket: int = 1 << 16) -> int:
+def _bucket_bits(cfg: CrawlConfig, expected_keys_per_bucket: int) -> int:
     """Bitmap size per bucket, rounded up to whole 64-bit words."""
     bits = max(1 << 10, expected_keys_per_bucket * cfg.bloom_bits_per_key)
     return ((bits + _WORD_BITS - 1) // _WORD_BITS) * _WORD_BITS
-
-
-def bucket_bits_for(cfg: CrawlConfig, n_seen: int | None) -> int:
-    """Adaptive bitmap sizing: size each bucket for the *live* seen-set
-    count (with 50% headroom) instead of a static 2^16/bucket guess —
-    a static bitmap degrades toward FPP=1 once the frontier outgrows it,
-    turning the prefilter into pure overhead (round-1 finding)."""
-    if n_seen is None:
-        return _bucket_bits(cfg)
-    per_bucket = max(1 << 12, (n_seen * 3) // (2 * cfg.dedup_buckets))
-    return _bucket_bits(cfg, per_bucket)
 
 
 def _probe_positions(hashes: np.ndarray, n_probes: int, m_bits: int) -> list[np.ndarray]:
@@ -147,205 +130,6 @@ def _test_bits(bitmap: np.ndarray, positions: np.ndarray) -> np.ndarray:
     mask = np.uint64(1) << (positions % _WORD_BITS).astype(np.uint64)
     return (words & mask) != 0
 
-
-# ---------------------------------------------------------------------------
-# broadcast distribution (round-2 path, kept for A/B + small seen sets)
-# ---------------------------------------------------------------------------
-
-def build_bloom_bitmaps(
-    seen: DataFrame,
-    cfg: CrawlConfig,
-    hash_col: str = "url_hash",
-    n_seen: int | None = None,
-    m_bits: int | None = None,
-    shuffle: bool = True,
-) -> dict[int, bytes]:
-    """Per-bucket bloom bitmaps of a key set, collected driver-side.
-
-    One narrow job: mapInPandas emits (bucket, partial-bitmap) pairs —
-    a map-side reduction; the driver ORs partials per bucket.  Nothing
-    about the frontier is shuffled when ``shuffle=False`` (small input,
-    one partial set per input partition); with ``shuffle=True`` keys are
-    bucketed first so each task emits exactly one bitmap.  Bitmaps are
-    self-describing: the test path derives m_bits from each bitmap's
-    length, so adaptive sizing (``n_seen``) needs no config round-trip.
-
-    This is the BROADCAST distribution: fine when total_bits fits
-    comfortably in driver + executor memory, infeasible at the 10^10
-    design point — use :class:`BloomState` there.
-    """
-    n_buckets = cfg.dedup_buckets
-    _require_pow2(n_buckets)
-    if m_bits is None:
-        m_bits = bucket_bits_for(cfg, n_seen)
-    n_probes = cfg.bloom_num_probes
-
-    def partial(batches):
-        import pandas as pd  # noqa: PLC0415
-
-        acc: dict[int, np.ndarray] = {}
-        for pdf in batches:
-            h = pdf[hash_col].to_numpy(dtype=np.int64)
-            buckets = bucket_of_np(h, n_buckets)
-            hu = h.astype(np.uint64)
-            for b in np.unique(buckets):
-                bm = acc.setdefault(int(b), np.zeros(m_bits // _WORD_BITS, np.uint64))
-                hb = hu[buckets == b]
-                for pos in _probe_positions(hb, n_probes, m_bits):
-                    _set_bits(bm, pos)
-        yield pd.DataFrame(
-            {"bucket": list(acc), "bitmap": [bm.tobytes() for bm in acc.values()]}
-        )
-
-    keys = seen.select(hash_col)
-    if shuffle:
-        # one shuffle of (url_hash) only, bucket-per-partition: each task
-        # emits exactly one bitmap, so the driver collects n_buckets
-        # bitmaps total instead of n_partitions x n_buckets partials
-        keys = keys.repartition(n_buckets, bucket_col(F.col(hash_col), n_buckets))
-    rows = keys.mapInPandas(partial, schema="bucket int, bitmap binary").collect()
-    out: dict[int, np.ndarray] = {}
-    for r in rows:
-        bm = np.frombuffer(r.bitmap, dtype=np.uint64)
-        if r.bucket in out:
-            out[r.bucket] = out[r.bucket] | bm
-        else:
-            out[r.bucket] = bm
-    return {b: bm.tobytes() for b, bm in out.items()}
-
-
-def _test_hashes(bitmaps: dict, h_signed: np.ndarray, cfg: CrawlConfig) -> np.ndarray:
-    """Vectorized bloom membership verdict for an int64 hash array.
-    m_bits is derived per bucket from the bitmap's own length, so it
-    always matches whatever sizing the build used."""
-    n_buckets = cfg.dedup_buckets
-    h = h_signed.astype(np.uint64)
-    verdict = np.zeros(len(h), dtype=bool)
-    buckets = bucket_of_np(h_signed, n_buckets)
-    for b in np.unique(buckets):
-        bm = bitmaps.get(int(b))
-        if bm is None:  # empty bucket => certainly fresh
-            continue
-        m_bits = len(bm) * _WORD_BITS
-        sel = buckets == b
-        hits = np.ones(int(sel.sum()), dtype=bool)
-        for pos in _probe_positions(h[sel], cfg.bloom_num_probes, m_bits):
-            hits &= _test_bits(bm, pos)
-        verdict[sel] = hits
-    return verdict
-
-
-def bloom_maybe_seen_udf(bitmaps_bcast, cfg: CrawlConfig):
-    """Scalar pandas UDF ``url_hash -> maybe_seen`` over BROADCAST bitmaps.
-
-    Narrow by construction: only the hash column crosses the Arrow
-    boundary.  Kept for A/B benchmarking against the partition-local
-    path; at the 10^10 design point the broadcast itself is the problem.
-    """
-    from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
-
-    def _test(hashes):  # pd.Series[int64] -> pd.Series[bool]
-        import pandas as pd  # noqa: PLC0415
-
-        bitmaps = {
-            b: np.frombuffer(v, dtype=np.uint64)
-            for b, v in bitmaps_bcast.value.items()
-        }
-        return pd.Series(_test_hashes(bitmaps, hashes.to_numpy(dtype=np.int64), cfg))
-
-    return pandas_udf(_test, "boolean")
-
-
-def bloom_maybe_seen(
-    cand: DataFrame,
-    bitmaps_bcast,
-    cfg: CrawlConfig,
-    hash_col: str = "child_hash",
-) -> DataFrame:
-    """Stage-1 verdict column ``maybe_seen`` from BROADCAST bitmaps
-    (no false negatives).  Schema in == schema out + the flag column."""
-    n_buckets = cfg.dedup_buckets
-    n_probes = cfg.bloom_num_probes
-    # fresh StructType — StructType.add would MUTATE cand's cached schema
-    out_schema = T.StructType(
-        list(cand.schema.fields) + [T.StructField("maybe_seen", T.BooleanType())]
-    )
-
-    def test(batches):
-        bitmaps = {
-            b: np.frombuffer(v, dtype=np.uint64)
-            for b, v in bitmaps_bcast.value.items()
-        }
-        for pdf in batches:
-            h = pdf[hash_col].to_numpy(dtype=np.int64)
-            hu = h.astype(np.uint64)
-            verdict = np.zeros(len(pdf), dtype=bool)
-            buckets = bucket_of_np(h, n_buckets)
-            for b in np.unique(buckets):
-                bm = bitmaps.get(int(b))
-                sel = buckets == b
-                if bm is None:  # bucket empty => certainly fresh
-                    continue
-                m_bits = len(bm) * _WORD_BITS
-                hits = np.ones(int(sel.sum()), dtype=bool)
-                for pos in _probe_positions(hu[sel], n_probes, m_bits):
-                    hits &= _test_bits(bm, pos)
-                verdict[sel] = hits
-            pdf = pdf.copy()
-            pdf["maybe_seen"] = verdict
-            yield pdf
-
-    return cand.mapInPandas(test, schema=out_schema)
-
-
-class BroadcastBloom:
-    """Round-2 distribution: driver-held incremental bitmaps, broadcast
-    whole to every executor each wave.  Kept ONLY for A/B benchmarking
-    against :class:`BloomState` and for regimes where the entire state is
-    a few MB — at the 10^10 design point (~40 GB of state) this shape is
-    infeasible by construction, which is exactly what round 3's
-    partition-local redesign fixes.  Not persisted (resume rebuilds)."""
-
-    def __init__(
-        self, cfg: CrawlConfig, bitmaps: dict[int, np.ndarray],
-        m_bits: int, capacity: int,
-    ) -> None:
-        self.cfg = cfg
-        self.bitmaps = bitmaps
-        self.m_bits = m_bits
-        self.capacity = capacity
-
-    @classmethod
-    def build(cls, seen_keys: DataFrame, cfg: CrawlConfig, n_seen: int):
-        """Full rebuild sized for 2x headroom (per-bucket sizing — the
-        round-2 double-division undersizing is fixed here too)."""
-        capacity = max(2 * n_seen, 2 * cfg.bloom_min_seen, 1 << 17)
-        per_bucket = max(1 << 12, -(-capacity // cfg.dedup_buckets))
-        m_bits = _bucket_bits(cfg, per_bucket)
-        raw = build_bloom_bitmaps(seen_keys, cfg, m_bits=m_bits, shuffle=True)
-        bitmaps = {b: np.frombuffer(v, dtype=np.uint64).copy() for b, v in raw.items()}
-        return cls(cfg, bitmaps, m_bits, capacity)
-
-    def needs_rebuild(self, n_seen: int) -> bool:
-        return n_seen > self.capacity
-
-    def update(self, delta_keys: DataFrame) -> None:
-        """OR one wave's insert keys into the state (shuffle-free job)."""
-        raw = build_bloom_bitmaps(
-            delta_keys.coalesce(8), self.cfg, m_bits=self.m_bits, shuffle=False
-        )
-        for b, v in raw.items():
-            arr = np.frombuffer(v, dtype=np.uint64)
-            cur = self.bitmaps.get(b)
-            self.bitmaps[b] = arr.copy() if cur is None else (cur | arr)
-
-    def bitmap_bytes(self) -> dict[int, bytes]:
-        return {b: bm.tobytes() for b, bm in self.bitmaps.items()}
-
-
-# ---------------------------------------------------------------------------
-# partition-local distribution (the 10^10-scale design, default)
-# ---------------------------------------------------------------------------
 
 def _atomic_write_bytes(path: Path, data: bytes) -> None:
     tmp = path.with_name(path.name + f".tmp-{uuid.uuid4().hex[:8]}")

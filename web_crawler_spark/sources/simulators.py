@@ -32,7 +32,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..config import CrawlConfig
-from ..functions.urls import dns_candidates_col, dns_candidates_py
+from ..functions.urls import dns_candidates_py
 from ..functions.xxh64 import pmod, xxhash64_str
 
 # ---------------------------------------------------------------------------
@@ -120,34 +120,8 @@ def _suffix_resolves_py(suffix: str, cfg: CrawlConfig) -> bool:
     return h < cfg.dns_resolve_permille
 
 
-def dns_cols(name: Column, cfg: CrawlConfig) -> dict[str, Column]:
-    """DNS outcome columns: dns_ok boolean, domain string, ip string.
-
-    Entirely split/slice/filter/hash column expressions — no UDF, stays in
-    whole-stage codegen.
-    """
-    cands = dns_candidates_col(name, cfg.max_dns_depth)
-    resolved = F.filter(cands, lambda c: _suffix_resolves_col(c, cfg))
-    first = F.element_at(resolved, 1)  # shortest resolving suffix, like the reference
-    ok = F.size(resolved) > 0
-    domain = F.element_at(F.split(first, r"\."), 1)
-    h = F.xxhash64(F.concat(F.lower(first), F.lit("#ip" + cfg.seed_tag)))
-    ip = F.concat_ws(
-        ".",
-        (F.pmod(h, F.lit(223)) + 1).cast("string"),
-        F.pmod(F.shiftright(h, 8), F.lit(256)).cast("string"),
-        F.pmod(F.shiftright(h, 16), F.lit(256)).cast("string"),
-        (F.pmod(F.shiftright(h, 24), F.lit(254)) + 1).cast("string"),
-    )
-    return {
-        "dns_ok": ok,
-        "domain": F.when(ok, domain),
-        "ip": F.when(ok, ip),
-    }
-
-
 def dns_cols_unrolled(name: Column, cfg: CrawlConfig) -> dict[str, Column]:
-    """DNS outcome columns via an UNROLLED when-chain — the hot-path form.
+    """DNS outcome columns via an UNROLLED when-chain — the one Spark form.
 
     ``max_dns_depth`` is a small constant (5), so the reference's
     iterative domain shortening (shared/src/dns.rs:15-48) unrolls into a
@@ -182,72 +156,6 @@ def dns_cols_unrolled(name: Column, cfg: CrawlConfig) -> dict[str, Column]:
         (F.pmod(F.shiftright(h, 24), F.lit(254)) + 1).cast("string"),
     )
     return {"dns_ok": ok, "domain": domain, "ip": F.when(ok, ip)}
-
-
-def dns_batch_py(
-    names, cfg: CrawlConfig, _cache: dict | None = None
-) -> list[tuple[bool, str | None, str | None]]:
-    """Batch DNS simulation with suffix-level memoization.
-
-    Distinct *names* are ~unique per URL, but their candidate *suffixes*
-    collapse onto a small set of base hosts, so caching per-suffix
-    resolution (the xxhash-heavy part) cuts the hashing by orders of
-    magnitude on real batches.  Bit-identical to :func:`dns_py` per name.
-    """
-    cache: dict[str, tuple[bool, str | None, str | None]] = (
-        {} if _cache is None else _cache
-    )
-    out = []
-    for name in names:
-        res: tuple[bool, str | None, str | None] = (False, None, None)
-        for cand in dns_candidates_py(name, cfg.max_dns_depth):
-            hit = cache.get(cand)
-            if hit is None:
-                if _suffix_resolves_py(cand, cfg):
-                    h = xxhash64_str(cand.lower() + "#ip" + cfg.seed_tag)
-                    ip = ".".join(
-                        str(o)
-                        for o in (
-                            pmod(h, 223) + 1,
-                            pmod(h >> 8, 256),
-                            pmod(h >> 16, 256),
-                            pmod(h >> 24, 254) + 1,
-                        )
-                    )
-                    hit = (True, cand.split(".")[0], ip)
-                else:
-                    hit = (False, None, None)
-                cache[cand] = hit
-            if hit[0]:
-                res = hit
-                break
-        out.append(res)
-    return out
-
-
-def dns_pandas_udf(cfg: CrawlConfig):
-    """Arrow-batched DNS simulation — one evaluation per name.
-
-    The pure column-expression form (:func:`dns_cols`) is built from
-    higher-order functions (transform/filter/slice/array_join), which
-    Spark evaluates in *interpreted* mode outside whole-stage codegen and
-    re-evaluates per output column — profiled at ~185 us/row on large
-    waves (executor threads pinned in UTF8String.split).  This UDF runs
-    the identical pure-Python twin once per name over Arrow batches
-    (~30 us/row) and returns all three outputs together.  Outputs are
-    bit-identical to :func:`dns_cols` / :func:`dns_py` (oracle parity).
-    """
-    from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
-
-    def _dns(names):  # pd.Series -> pd.DataFrame (scalar pandas UDF)
-        import pandas as pd  # noqa: PLC0415 — executor-side import
-
-        rows = dns_batch_py(names, cfg)
-        return pd.DataFrame(rows, columns=["dns_ok", "domain", "ip"])
-
-    # explicit eval type: `from __future__ import annotations` stringifies
-    # type hints, which breaks pandas_udf signature inference
-    return pandas_udf(_dns, "dns_ok boolean, domain string, ip string")
 
 
 def dns_py(name: str, cfg: CrawlConfig) -> tuple[bool, str | None, str | None]:

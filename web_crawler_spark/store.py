@@ -31,7 +31,6 @@ deltas into a consolidated base (Iceberg's rewrite_data_files).
 from __future__ import annotations
 
 import json
-import os
 import shutil
 import time
 from pathlib import Path
@@ -39,6 +38,10 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+# parquet files per wave delta write (the coalesce target of
+# write_delta / write_delta_union); 32 measured no better in round 6
+DELTA_FILES = 8
 
 FRONTIER_SCHEMA = T.StructType(
     [
@@ -388,20 +391,16 @@ class SnapshotStore:
         return json.loads((self.wave_dir(crawl_id, wave) / "_COMMITTED").read_text())
 
     # ---- writers (called by the engine inside a wave, pre-commit) ----
-    def write_delta(
-        self, df: DataFrame, crawl_id: str, wave: int, kind: str, files: int = 8
-    ) -> None:
+    def write_delta(self, df: DataFrame, crawl_id: str, wave: int, kind: str) -> None:
         """Write one wave delta.  Coalesced to a few files: per-wave deltas
         are small relative to the table, and the merge-on-read reader
         lists every delta file of every committed wave — at file counts,
         not bytes, that listing is the cost that grows with crawl depth.
         (Iceberg's manifest tree solves this structurally at production.)"""
         path = self.wave_dir(crawl_id, wave) / f"{kind}.parquet"
-        df.coalesce(files).write.mode("overwrite").parquet(str(path))
+        df.coalesce(DELTA_FILES).write.mode("overwrite").parquet(str(path))
 
-    def write_delta_union(
-        self, df: DataFrame, crawl_id: str, wave: int, files: int | None = None
-    ) -> None:
+    def write_delta_union(self, df: DataFrame, crawl_id: str, wave: int) -> None:
         """Write ALL of a wave's deltas as ONE Spark job: ``df`` is the
         union of the inserts/edges/updates rows over a superset schema
         with a ``kind`` discriminator column, written
@@ -415,11 +414,9 @@ class SnapshotStore:
         caps pre-saturation scaling, BENCH/BASELINE.md).  Reading the
         partition subdirectory directly yields only the file columns (no
         inferred ``kind``), so per-kind reads keep their exact schema."""
-        if files is None:
-            files = int(os.environ.get("SPARK_GRAFT_DELTA_FILES", "8"))
         path = self.wave_dir(crawl_id, wave) / "delta.parquet"
         (
-            df.coalesce(files)
+            df.coalesce(DELTA_FILES)
             .write.mode("overwrite")
             .partitionBy("kind")
             .parquet(str(path))
