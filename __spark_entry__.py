@@ -254,15 +254,15 @@ def q_minhash_band_buckets(spark, sf_dir):
     of md5(band|shingle), engine-portable) -> bucket by (band, signature);
     buckets with >1 doc are near-dup candidates.
 
-    All 4 band signatures come from ONE groupBy(doc_id) with 4 min()
-    aggregates, then unpivot (stack) — the round-1 plan exploded the
-    shingle set x4 bands before aggregating, quadrupling shuffle input
-    (it was the slowest bench query for exactly that reason)."""
+    All 4 band signatures come from ONE row-local Arrow pass per doc,
+    then unpivot (stack) — the round-1 plan exploded the shingle set x4
+    bands before aggregating, quadrupling shuffle input (it was the
+    slowest bench query for exactly that reason)."""
     from web_crawler_spark.operators.text import minhash_band_sigs
 
     # per-doc band sigs are ROW-LOCAL (min over the row's own shingle
     # set): one Arrow pass, no shingle explode / md5-per-occurrence-
-    # per-band / groupBy exchange (kernel == JVM path pytest-pinned;
+    # per-band / groupBy exchange (kernel == JVM form pytest-pinned;
     # spread_if_narrow applied inside so a single-file scan still fans
     # out)
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
@@ -350,15 +350,12 @@ def q_lang_id_heuristic(spark, sf_dir):
     )
 
 
-EMB_DIM = 64  # fixed embeddings dimension (TESTDATA schema)
-
-
 def _cosine(a, b):
-    # unrolled codegen form; bit-identical fold order to the HOF version
-    # (see operators/ann.py cosine_col)
+    # Arrow-batched cosine; bit-identical fold order to the HOF form the
+    # oracle SQL uses (see operators/ann.py cosine_col)
     from web_crawler_spark.operators.ann import cosine_col
 
-    return cosine_col(a, b, EMB_DIM)
+    return cosine_col(a, b)
 
 
 # hot-shingle document-frequency cap for the jaccard entry (axis B skew
@@ -385,9 +382,10 @@ def q_simhash_near_dup(spark, sf_dir):
 
     Round-6: the per-hamming counts come from per-bucket histograms
     (``simhash_pair_hamming_hist``) summed in one tiny aggregation —
-    the same exact pair set as ``simhash_candidate_pairs(...).groupBy
-    ("hamming").count()`` (equivalence pytest-pinned + oracle-gated)
-    without materializing the ~2e8 surviving pair rows at sf1.0."""
+    the same exact pair set as the plain band self-join's
+    ``groupBy("hamming").count()`` (equivalence pytest-pinned +
+    oracle-gated) without materializing the ~2e8 surviving pair rows
+    at sf1.0."""
     from web_crawler_spark.operators.text import (
         simhash_pair_hamming_hist,
         simhash_signatures,

@@ -6,13 +6,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from web_crawler_spark.operators.ann import brute_force_topk, lsh_topk
+from tests import reference_ops as ref
+from web_crawler_spark.operators.ann import lsh_topk
 from web_crawler_spark.operators.media import extract_media_features
-from web_crawler_spark.operators.text import (
-    jaccard_pairs,
-    simhash_candidate_pairs,
-    simhash_signatures,
-)
+from web_crawler_spark.operators.text import jaccard_pairs, simhash_signatures
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -35,10 +32,11 @@ def sim_docs(spark):
 
 def test_simhash_signatures_kernel_matches_jvm(spark):
     """The Arrow signature kernel must reproduce the JVM explode/md5/
-    64-sum-aggregate path bit-for-bit — including Java tokenization
-    edge cases the kernel re-implements in Python: trim strips ASCII
-    spaces ONLY, Java ``\\s`` excludes Unicode whitespace (NBSP), and
-    Java split keeps leading/trailing empty-string tokens."""
+    64-sum-aggregate form (tests/reference_ops.py) bit-for-bit —
+    including Java tokenization edge cases the kernel re-implements in
+    Python: trim strips ASCII spaces ONLY, Java ``\\s`` excludes
+    Unicode whitespace (NBSP), and Java split keeps leading/trailing
+    empty-string tokens."""
     texts = [
         "spark window merge table", "", "   ", None, "  padded  ",
         "a\tb", "a\t", "\ta", "\t\t", "a\xa0b", "x\x0by\fz\rw",
@@ -51,15 +49,11 @@ def test_simhash_signatures_kernel_matches_jvm(spark):
     )
     kern = {
         r.doc_id: (r.sig, r.sig_int, str(r.bands))
-        for r in simhash_signatures(
-            df, "doc_id", "text", use_kernel=True
-        ).collect()
+        for r in simhash_signatures(df, "doc_id", "text").collect()
     }
     jvm = {
         r.doc_id: (r.sig, r.sig_int, str(r.bands))
-        for r in simhash_signatures(
-            df, "doc_id", "text", use_kernel=False
-        ).collect()
+        for r in ref.simhash_signatures(df, "doc_id", "text").collect()
     }
     assert kern == jvm
 
@@ -68,7 +62,7 @@ def test_jaccard_shingle_kernel_matches_jvm(spark):
     """The Arrow shingle-emission kernel must produce EXACTLY the JVM
     explode(array_distinct(shingles))'s result set — across cap
     settings and Java tokenization edge cases."""
-    from web_crawler_spark.operators.text import jaccard_pairs
+    from web_crawler_spark.operators.text import _jaccard_from_shingles
 
     texts = [
         "spark window merge table query scan batch", "", "   ", None,
@@ -86,13 +80,12 @@ def test_jaccard_shingle_kernel_matches_jvm(spark):
         kern = sorted(
             map(tuple, jaccard_pairs(
                 df, "doc_id", "text", min_jaccard=0.0, max_df=md,
-                use_kernel=True,
             ).collect())
         )
         jvm = sorted(
-            map(tuple, jaccard_pairs(
-                df, "doc_id", "text", min_jaccard=0.0, max_df=md,
-                use_kernel=False,
+            map(tuple, _jaccard_from_shingles(
+                ref.jaccard_shingles(df, "doc_id", "text", 3), "doc_id",
+                min_jaccard=0.0, max_df=md,
             ).collect())
         )
         assert kern == jvm, f"max_df={md}"
@@ -100,8 +93,9 @@ def test_jaccard_shingle_kernel_matches_jvm(spark):
 
 def test_minhash_band_sigs_kernel_matches_jvm(spark):
     """The row-local MinHash kernel must equal the JVM explode +
-    B×min(md5) aggregate path exactly — including the docs-with-no-
-    shingles row-absence and lexicographic hex ordering."""
+    B×min(md5) aggregate form (tests/reference_ops.py) exactly —
+    including the docs-with-no-shingles row-absence and lexicographic
+    hex ordering."""
     from web_crawler_spark.operators.text import minhash_band_sigs
 
     texts = [
@@ -116,12 +110,68 @@ def test_minhash_band_sigs_kernel_matches_jvm(spark):
     )
     for nb, n in [(4, 3), (2, 2)]:
         kern = sorted(map(tuple, minhash_band_sigs(
-            df, "doc_id", "text", n_bands=nb, n=n, use_kernel=True
+            df, "doc_id", "text", n_bands=nb, n=n
         ).collect()))
-        jvm = sorted(map(tuple, minhash_band_sigs(
-            df, "doc_id", "text", n_bands=nb, n=n, use_kernel=False
+        jvm = sorted(map(tuple, ref.minhash_band_sigs(
+            df, "doc_id", "text", n_bands=nb, n=n
         ).collect()))
         assert kern == jvm, f"n_bands={nb} n={n}"
+
+
+def _disjoint_vocab_batches(n_batches, rows=60, toks=25):
+    """pandas batches whose token vocabularies are pairwise disjoint."""
+    import numpy as np
+    import pandas as pd
+
+    return [
+        pd.DataFrame({
+            "doc_id": np.arange(b * rows, (b + 1) * rows, dtype=np.int64),
+            "text": [
+                " ".join(f"b{b}r{r}t{k}" for k in range(toks))
+                for r in range(rows)
+            ],
+        })
+        for b in range(n_batches)
+    ]
+
+
+@pytest.mark.parametrize("kernel", ["simhash", "minhash", "shingle"])
+def test_text_kernel_state_is_per_batch(kernel):
+    """Each text kernel keeps no state across the batches of a
+    partition (no Spark): its output over a batch stream equals the
+    concatenated per-batch outputs, and its traced peak memory does not
+    grow with the number of batches when every batch brings a fresh
+    vocabulary."""
+    import tracemalloc
+
+    import pandas as pd
+
+    from web_crawler_spark.operators import text
+
+    fn = {
+        "simhash": lambda: text._sig_kernel_fn("doc_id", "text"),
+        "minhash": lambda: text._minhash_kernel_fn("doc_id", "text", 4, 3),
+        "shingle": lambda: text._shingle_kernel_fn("doc_id", "text", 3),
+    }[kernel]
+    batches = _disjoint_vocab_batches(8)
+    stream = pd.concat(list(fn()(iter(batches))), ignore_index=True)
+    each = pd.concat(
+        [out for b in batches for out in fn()(iter([b]))], ignore_index=True
+    )
+    pd.testing.assert_frame_equal(stream, each)
+
+    def _peak(n_batches):
+        batches = _disjoint_vocab_batches(n_batches)
+        tracemalloc.start()
+        try:
+            for _ in fn()(iter(batches)):
+                pass
+            return tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+
+    p2, p8 = _peak(2), _peak(8)
+    assert p8 <= 1.3 * p2, (p2, p8)
 
 
 def test_simhash_identical_docs_distance_zero(spark, sim_docs):
@@ -133,7 +183,7 @@ def test_simhash_identical_docs_distance_zero(spark, sim_docs):
     assert by_id["e0"] == "0" * 64             # empty text => zero signature
     pairs = {
         (r.id_a, r.id_b): r.hamming
-        for r in simhash_candidate_pairs(sigs, "doc_id", max_hamming=7).collect()
+        for r in ref.simhash_pairs(sigs, "doc_id", max_hamming=7).collect()
     }
     assert pairs[("a1", "a2")] == 0
     # one-word-changed doc is near (shares bands), far doc is not paired
@@ -142,9 +192,8 @@ def test_simhash_identical_docs_distance_zero(spark, sim_docs):
 
 
 def test_simhash_hist_equals_pair_counts(spark):
-    """The round-6 histogram variant (per-bucket numpy kernel, triangle
-    salt blocks) must count EXACTLY the pair set of the pair-returning
-    exact path, per hamming value — on a corpus with identical docs
+    """The per-bucket histogram kernel (triangle salt blocks) must count
+    EXACTLY the pair set of the plain band self-join, per hamming value — on a corpus with identical docs
     (hamming-0 self-bucket cliques), near-dups, empty docs (shared
     all-zero signature => same-sig group bigger than 1), and unrelated
     docs, across several salt fanouts (diagonal/off-diagonal coverage)."""
@@ -162,7 +211,7 @@ def test_simhash_hist_equals_pair_counts(spark):
     for max_h in (0, 7, 16, 64):
         want = {
             (r.hamming, r.n_pairs)
-            for r in simhash_candidate_pairs(sigs, "doc_id", max_hamming=max_h)
+            for r in ref.simhash_pairs(sigs, "doc_id", max_hamming=max_h)
             .groupBy("hamming").agg(F.count("*").alias("n_pairs")).collect()
         }
         for n_salts in (1, 3, 8):
@@ -224,15 +273,6 @@ def test_jaccard_hot_shingle_cap(spark):
     assert capped[("n1", "n2")] > 0.2
 
 
-def test_simhash_bucket_cap_bounds_pairs(spark, sim_docs):
-    sigs = simhash_signatures(sim_docs, "doc_id", "text")
-    uncapped = simhash_candidate_pairs(sigs, "doc_id", max_hamming=64).count()
-    capped = simhash_candidate_pairs(
-        sigs, "doc_id", max_hamming=64, bucket_cap=1
-    ).count()
-    assert capped == 0 < uncapped  # cap=1 => no bucket can form a pair
-
-
 # ---------------------------------------------------------------------------
 # ANN: brute force vs LSH recall
 # ---------------------------------------------------------------------------
@@ -244,7 +284,7 @@ def test_ann_lsh_recall(spark):
     q = e.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
-    exact = brute_force_topk(e, q, k=5).collect()
+    exact = ref.brute_force_topk(e, q, k=5).collect()
     # random (structure-free) embeddings are the worst case for LSH —
     # short signatures + several tables keep recall high: the entry's
     # tuned (3 planes, 10 tables) measured 0.96 recall@5 on this data
@@ -278,7 +318,6 @@ def test_lsh_signatures_numpy_matches_hof(spark):
         _banded_signatures,
         hyperplanes,
         quantize_col,
-        signature_col,
     )
 
     rng = random.Random(7)
@@ -290,7 +329,7 @@ def test_lsh_signatures_numpy_matches_hof(spark):
     hof = vecs.withColumn("_qv", quantize_col(F.col("v"))).select(
         "vec_id",
         F.array(
-            *[signature_col(F.col("_qv"), planes[t]) for t in range(5)]
+            *[ref.signature_col(F.col("_qv"), planes[t]) for t in range(5)]
         ).alias("sig_arr"),
     )
     want = {r.vec_id: list(r.sig_arr) for r in hof.collect()}
@@ -304,7 +343,7 @@ def test_lsh_signatures_numpy_matches_hof(spark):
 
 def test_near_dup_kernel_equals_join_path(spark):
     """The per-bucket scored-pair kernel must produce EXACTLY the pair
-    set of the capped join path with bit-identical raw cosines — on a
+    set of the plain capped self-join with bit-identical raw cosines — on a
     clustered corpus (deliberate near-dups so buckets overflow a tiny
     cap and pairs co-occur in several tables, exercising both the cap
     and the first-surviving-table dedup)."""
@@ -312,7 +351,6 @@ def test_near_dup_kernel_equals_join_path(spark):
 
     from web_crawler_spark.operators.ann import (
         cosine_col,
-        near_dup_candidates_lsh,
         near_dup_scored_pairs_kernel,
     )
 
@@ -325,12 +363,12 @@ def test_near_dup_kernel_equals_join_path(spark):
     vecs = spark.createDataFrame(rows, "vec_id long, v array<double>")
     kw = {"dim": 16, "n_planes": 3, "n_tables": 4, "seed": 5}
     for cap in (5, 50):
-        old = near_dup_candidates_lsh(vecs, bucket_cap=cap, **kw)
+        old = ref.near_dup_pairs_capped(vecs, bucket_cap=cap, **kw)
         want = {
             (r.id_a, r.id_b): r.c
             for r in old.select(
                 "id_a", "id_b",
-                cosine_col(F.col("va"), F.col("vb"), 16).alias("c"),
+                cosine_col(F.col("va"), F.col("vb")).alias("c"),
             ).collect()
         }
         got = {
@@ -343,8 +381,8 @@ def test_near_dup_kernel_equals_join_path(spark):
 
 
 def test_cosine_pandas_matches_hof_bitexact(spark):
-    """The Arrow-batched cosine (dim set) must reproduce the JVM HOF
-    fold bit-for-bit — compared UNROUNDED, on adversarial vectors
+    """The Arrow-batched cosine must reproduce the JVM HOF fold
+    (tests/reference_ops.py) bit-for-bit — compared UNROUNDED, on adversarial vectors
     (denormals-adjacent magnitudes, negatives, zeros in places)."""
     import random
 
@@ -363,8 +401,8 @@ def test_cosine_pandas_matches_hof_bitexact(spark):
         r.i: (r.h, r.p)
         for r in df.select(
             "i",
-            cosine_col(F.col("a"), F.col("b")).alias("h"),
-            cosine_col(F.col("a"), F.col("b"), 17).alias("p"),
+            ref.cosine_hof(F.col("a"), F.col("b")).alias("h"),
+            cosine_col(F.col("a"), F.col("b")).alias("p"),
         ).collect()
     }
     assert all(h == p for h, p in got.values())  # exact, not approx
@@ -374,8 +412,9 @@ def test_near_dup_lsh_bucket_cap_bounds_pairs(spark):
     """Axis-B skew guard on the embedding near-dup path: a clustered
     corpus (many near-identical vectors) piles into one (table,
     signature) bucket; the cap bounds the candidate count where the
-    uncapped join goes quadratic, and capped output is a subset."""
-    from web_crawler_spark.operators.ann import near_dup_candidates_lsh
+    uncapped pair set goes quadratic, and capped output is a subset.
+    ``bucket_cap=10**6`` exceeds every bucket, i.e. uncapped."""
+    from web_crawler_spark.operators.ann import near_dup_scored_pairs_kernel
 
     dim, n_clustered = 16, 40
     base = [0.5 + 0.01 * d for d in range(dim)]
@@ -390,8 +429,10 @@ def test_near_dup_lsh_bucket_cap_bounds_pairs(spark):
     ]
     vecs = spark.createDataFrame(rows, "vec_id int, v array<double>")
     kw = {"dim": dim, "n_planes": 4, "n_tables": 2, "seed": 7}
-    uncapped = near_dup_candidates_lsh(vecs, **kw).select("id_a", "id_b").collect()
-    capped = near_dup_candidates_lsh(vecs, bucket_cap=8, **kw).select(
+    uncapped = near_dup_scored_pairs_kernel(
+        vecs, bucket_cap=10**6, **kw
+    ).select("id_a", "id_b").collect()
+    capped = near_dup_scored_pairs_kernel(vecs, bucket_cap=8, **kw).select(
         "id_a", "id_b"
     ).collect()
     n_unc, n_cap = len(uncapped), len(capped)

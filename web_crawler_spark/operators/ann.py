@@ -1,29 +1,30 @@
-"""Approximate nearest neighbors over an embedding column.
+"""Approximate nearest neighbors and near-dup pairs over an embedding
+column, DataFrame-native.
 
-Two strategies, both DataFrame-native:
-
-* ``brute_force_topk`` — exact cosine top-k: tiny query side broadcast,
-  scan side stays distributed.  The correctness baseline and the right
-  plan whenever |queries| is small (the 100 TB side is scanned once, no
-  shuffle).
-* ``lsh_topk`` — random-sign-projection LSH: ``n_tables`` independent
-  sign signatures of ``n_planes`` bits each; a vector is compared only
-  with vectors sharing a (table, signature) bucket.  Planes are seeded
-  ±1 (Rademacher) weights inlined as column literals and the vectors are
+* ``lsh_topk`` — random-sign-projection LSH top-k: ``n_tables``
+  independent sign signatures of ``n_planes`` bits each; a query is
+  compared only with vectors sharing a (table, signature) bucket.
+  Planes are seeded ±1 (Rademacher) weights and the vectors are
   quantized to integers first, so every signature bit is an *exact
   integer* comparison — bit-reproducible in any engine (this is what
   makes the DuckDB correctness oracle possible; Gaussian planes with
   float dot products are summation-order-sensitive near zero).  Sign
   projections with ±1 weights have the same locality-sensitive collision
   law as Gaussian ones (P[bit match] = 1 - angle/pi, asymptotically).
-  Recall/cost trades off via (n_planes, n_tables); the bucket join
-  shuffles only (signature, vector) pairs instead of the full cross
-  product.
+  Recall/cost trades off via (n_planes, n_tables).
+* ``near_dup_scored_pairs_kernel`` — near-dup candidate pairs from the
+  same banded signatures, enumerated and cosine-scored inside one
+  per-bucket kernel.
+* ``cosine_col`` — Arrow-batched cosine, bit-identical to the JVM
+  higher-order-function fold the oracle SQL mirrors.
 
 Skew handling (axis B): ``bucket_cap`` bounds candidates per (table,
-signature) bucket with a deterministic row_number window — near-dup-heavy
-corpora pile into few buckets and would otherwise go quadratic (same
-salted-window pattern as the crawl politeness queue).
+signature) bucket with a deterministic salted first-N — near-dup-heavy
+corpora pile into few buckets and would otherwise go quadratic.
+
+The exact brute-force top-k that LSH recall is measured against, and
+the JVM forms of the signature and cosine folds, live in
+``tests/reference_ops.py``.
 """
 
 from __future__ import annotations
@@ -38,14 +39,28 @@ from .skew import top_n_per_bucket
 QUANT = 1_000_000
 
 
-def _cosine_batch(va, vb):
-    """Vectorized cosine over two pandas Series of equal-length float64
-    arrays, reproducing the HOF fold BIT-EXACTLY: each of dot/na/nb is
-    accumulated left-to-right from 0.0 one dimension at a time (the
-    per-dimension op is vectorized across the batch, the fold order per
-    row is unchanged), so every intermediate IEEE-754 operation matches
+def _cosine_fold(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Cosine per column of two dimension-major (dim, rows) float64
+    arrays, reproducing the JVM HOF fold BIT-EXACTLY: each of dot/na/nb
+    is accumulated left-to-right from 0.0 one dimension at a time (the
+    per-dimension op is vectorized across rows, the fold order per row
+    is unchanged), so every intermediate IEEE-754 operation matches
     ``aggregate(zip_with(...))`` and the rounded result the DuckDB
     oracle checks is identical."""
+    n = a.shape[1]
+    dot = np.zeros(n)
+    na = np.zeros(n)
+    nb = np.zeros(n)
+    for ai, bi in zip(a, b):
+        dot = dot + ai * bi
+        na = na + ai * ai
+        nb = nb + bi * bi
+    return dot / (np.sqrt(na) * np.sqrt(nb))
+
+
+def _cosine_batch(va, vb):
+    """pandas-UDF body: cosine over two Series of equal-length float64
+    arrays (``_cosine_fold``)."""
     import pandas as pd  # noqa: PLC0415 — executor-side import
 
     if len(va) == 0:
@@ -54,55 +69,25 @@ def _cosine_batch(va, vb):
     # contiguous (the strided (rows, dim) column walk is ~3x slower)
     a = np.stack(va.to_numpy()).T.copy()
     b = np.stack(vb.to_numpy()).T.copy()
-    n_rows = a.shape[1]
-    dot = np.zeros(n_rows)
-    na = np.zeros(n_rows)
-    nb = np.zeros(n_rows)
-    for i in range(a.shape[0]):
-        ai, bi = a[i], b[i]
-        dot = dot + ai * bi
-        na = na + ai * ai
-        nb = nb + bi * bi
-    return pd.Series(dot / (np.sqrt(na) * np.sqrt(nb)))
+    return pd.Series(_cosine_fold(a, b))
 
 
-def cosine_col(a: F.Column, b: F.Column, dim: int | None = None) -> F.Column:
-    """Cosine similarity of two array<double> columns.
+def cosine_col(a: F.Column, b: F.Column) -> F.Column:
+    """Cosine similarity of two array<double> columns whose arrays all
+    have one common length (fixed-dimension dense embeddings — all
+    tables here).
 
-    With ``dim`` set (fixed-dimension dense embeddings — all tables
-    here) the computation runs as an Arrow-batched pandas UDF whose
-    per-row fold order is bit-identical to the JVM higher-order-function
-    form (see ``_cosine_batch``); the HOF form (``aggregate`` over
-    ``zip_with``) evaluates an interpreted lambda per element — HOFs
-    don't codegen — and was ~70% of the whole embedding_near_dup_lsh
-    query at sf1.0 (8s of 11s).  (A 64-term unrolled ``get`` expression
-    chain was tried first: it exceeds codegen limits and interprets
-    even slower than the HOF.)  Without ``dim`` (ragged or unknown
-    arrays) the original HOF form is used.
+    Runs as an Arrow-batched pandas UDF whose per-row fold order is
+    bit-identical to the JVM higher-order-function form (see
+    ``_cosine_fold``).  The HOF form (``aggregate`` over ``zip_with``)
+    evaluates an interpreted lambda per element — HOFs don't codegen —
+    and was ~70% of the whole embedding_near_dup_lsh query at sf1.0 (8s
+    of 11s); a 64-term unrolled ``get`` expression chain exceeds codegen
+    limits and interprets even slower than the HOF.
     """
-    if dim is not None:
-        from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
+    from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
 
-        cos = pandas_udf(_cosine_batch, "double")
-        return cos(a, b)
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
-    na = F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda s, x: s + x))
-    nb = F.sqrt(F.aggregate(F.transform(b, lambda x: x * x), F.lit(0.0), lambda s, x: s + x))
-    return dot / (na * nb)
-
-
-def brute_force_topk(
-    vectors: DataFrame, queries: DataFrame, k: int = 5, dim: int | None = None
-) -> DataFrame:
-    """Exact top-k: vectors(vec_id, v) x queries(query_id, qv) broadcast."""
-    pairs = vectors.join(F.broadcast(queries), F.col("vec_id") != F.col("query_id"))
-    scored = pairs.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(cosine_col(F.col("qv"), F.col("v"), dim), 6).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return pandas_udf(_cosine_batch, "double")(a, b)
 
 
 def hyperplanes(dim: int, n_planes: int, n_tables: int, seed: int = 42) -> np.ndarray:
@@ -120,28 +105,14 @@ def quantize_col(v: F.Column) -> F.Column:
     return F.transform(v, lambda x: F.round(x * QUANT, 0).cast("long"))
 
 
-def signature_col(qv: F.Column, planes: np.ndarray) -> F.Column:
-    """Sign-bit signature of one LSH table over a *quantized* vector:
-    each bit is sign(sum of ±qv[i]) — exact int64 arithmetic."""
-    bits = []
-    for p in planes:
-        w = F.array(*[F.lit(int(x)) for x in p])
-        dot = F.aggregate(
-            F.zip_with(qv, w, lambda x, y: x * y),
-            F.lit(0).cast("long"),
-            lambda s, x: s + x,
-        )
-        bits.append(F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
-
-
 def _sig_arr_batch_fn(planes: np.ndarray):
     """Build a pandas-UDF body computing every table's signature string
     from the QUANTIZED int64 vectors in one numpy pass.  All arithmetic
     is int64 (sums of ±q_i) — exact and order-free, so the bits are
-    provably identical to the JVM ``signature_col`` fold (pinned by
-    tests); the interpreted per-element HOF lambdas (n_tables x
-    n_planes folds per vector) were most of the banding stage's cost.
+    provably identical to the JVM higher-order-function fold (pinned by
+    ``test_lsh_signatures_numpy_matches_hof``); its interpreted
+    per-element lambdas (n_tables x n_planes folds per vector) were most
+    of the banding stage's cost.
     """
     flat = planes.reshape(-1, planes.shape[2]).T.astype(np.int64)
     n_tables, n_planes = planes.shape[0], planes.shape[1]
@@ -179,11 +150,11 @@ def _banded_signatures(
     per vector, all inside however few tasks the parquet split yields).
     Here the signatures are computed exactly once per vector into an
     array, after a round-robin repartition (``spread_if_narrow``: a
-    no-op when the scan is already wide) so the heavy
-    higher-order-function arithmetic spreads across the cluster instead
-    of riding the scan's (possibly single-file) task layout, and the
-    per-table rows come from one posexplode.  ``sig_arr`` stays on the
-    row so a self-join can re-check lower tables without another join.
+    no-op when the scan is already wide) so the signature arithmetic
+    spreads across the cluster instead of riding the scan's (possibly
+    single-file) task layout, and the per-table rows come from one
+    posexplode.  ``sig_arr`` stays on the row so a pair enumerator can
+    re-check lower tables without another join.
     """
     from .skew import spread_if_narrow  # noqa: PLC0415
     from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
@@ -192,9 +163,7 @@ def _banded_signatures(
     # quantization stays a JVM expression (its round() half-up is the
     # oracle-pinned step); the per-table sign bits over the resulting
     # int64 arrays are computed in one Arrow-batched numpy matmul —
-    # exact integer arithmetic, bit-identical to the JVM HOF fold it
-    # replaces (which interpreted n_tables x n_planes lambda folds per
-    # vector — most of the banding stage's cost)
+    # exact integer arithmetic, bit-identical to the JVM HOF fold
     sig_udf = pandas_udf(
         _sig_arr_batch_fn(planes), "array<string>"
     )
@@ -215,94 +184,6 @@ def _banded_signatures(
     )
 
 
-def near_dup_candidates_lsh(
-    vectors: DataFrame,
-    dim: int = 64,
-    n_planes: int = 6,
-    n_tables: int = 6,
-    seed: int = 7,
-    bucket_cap: int | None = None,
-    n_salts: int = 16,
-) -> DataFrame:
-    """Near-dup candidate pairs via banded LSH self-join — the 100 TB
-    plan: pairs only from shared (table, signature) buckets, deduped.
-
-    vectors(vec_id, v) -> (id_a, id_b, va, vb), id_a < id_b.
-
-    ``bucket_cap`` (axis B): a near-dup-heavy corpus piles into few
-    buckets and the self-join goes quadratic in the hottest bucket;
-    capping each (table, signature) bucket to its first N vec_ids (a
-    deterministic row_number window — same pattern as the crawl
-    politeness queue) bounds any bucket's contribution to N^2/2 pairs.
-    The cap is applied to the bucket MEMBERSHIP (both join sides see the
-    same capped set), so the output stays a subset of the uncapped one
-    and the DuckDB oracle can replicate it exactly.
-
-    Scale shape (round 5, same rework as simhash_candidate_pairs): the
-    self-join's input is tiny per (table, sig) bucket while its output is
-    quadratic in bucket size, and AQE coalesces by INPUT bytes — so the
-    left side is salted by pmod(xxhash64(id), n_salts) with a user-pinned
-    repartition (AQE must preserve it) and the right side replicates
-    across salts; in the exact path a pair is emitted only at its FIRST
-    shared table (lower tables re-checked row-side from the carried
-    sig_arr), so no dropDuplicates shuffle of the pair space exists.
-    """
-    planes = hyperplanes(dim, n_planes, n_tables, seed)
-    banded = _banded_signatures(vectors, planes, n_tables)
-    if bucket_cap is not None:
-        # salted two-stage first-N: with only 2^n_planes distinct
-        # signatures, a single-stage window would route each hot
-        # bucket through ONE task (round-3 VERDICT #3)
-        banded = top_n_per_bucket(banded, ["tbl", "sig"], "vec_id", bucket_cap)
-    n_part = int(
-        vectors.sparkSession.conf.get("spark.sql.shuffle.partitions", "64")
-    )
-    # the pair join moves IDs (+ the n_tables short signature strings in
-    # the exact path), never the vectors: the join output is quadratic in
-    # bucket size, so a ~0.5 KB embedding per side would dominate the
-    # shuffle, and a dedup over array columns can only run as a
-    # SortAggregate.  Vectors are re-attached by two id equi-joins on the
-    # (much smaller) deduped pair set.
-    arr_a = [F.col("sig_arr").alias("_arr_a")] if bucket_cap is None else []
-    arr_b = [F.col("sig_arr").alias("_arr_b")] if bucket_cap is None else []
-    a = banded.select(
-        F.col("vec_id").alias("id_a"), *arr_a, "tbl", "sig",
-        F.pmod(F.xxhash64("vec_id"), F.lit(n_salts)).cast("int").alias("salt"),
-    ).repartition(n_part, "tbl", "sig", "salt")
-    b = banded.select(
-        F.col("vec_id").alias("id_b"), *arr_b, "tbl", "sig",
-        F.explode(F.array(*[F.lit(s) for s in range(n_salts)])).alias("salt"),
-    )
-    pairs = a.join(b, ["tbl", "sig", "salt"]).filter(F.col("id_a") < F.col("id_b"))
-    if bucket_cap is None:
-        # keep a pair only at its first shared table: no lower table's
-        # signatures may match (row-local check on the carried arrays)
-        lower_match = F.exists(
-            F.zip_with(
-                F.slice(F.col("_arr_a"), 1, F.col("tbl")),
-                F.slice(F.col("_arr_b"), 1, F.col("tbl")),
-                lambda x, y: x == y,
-            ),
-            lambda m: m,
-        )
-        pairs = pairs.filter(~lower_match).select("id_a", "id_b")
-    else:
-        # pin the dedup exchange width: the deduped id-pair set is a few
-        # bytes/row, so AQE would coalesce it (and everything above it —
-        # the vector re-attach joins and the Arrow cosine stage) into a
-        # handful of tasks; a pinned hash repartition on the dedup keys
-        # is reused by the aggregate (one shuffle, no AQE shrink), so
-        # the expensive downstream per-pair work keeps full parallelism
-        pairs = (
-            pairs.select("id_a", "id_b")
-            .repartition(n_part, "id_a", "id_b")
-            .dropDuplicates(["id_a", "id_b"])
-        )
-    va = vectors.select(F.col("vec_id").alias("id_a"), F.col("v").alias("va"))
-    vb = vectors.select(F.col("vec_id").alias("id_b"), F.col("v").alias("vb"))
-    return pairs.join(va, "id_a").join(vb, "id_b")
-
-
 def near_dup_scored_pairs_kernel(
     vectors: DataFrame,
     dim: int = 64,
@@ -313,19 +194,23 @@ def near_dup_scored_pairs_kernel(
 ) -> DataFrame:
     """Capped near-dup candidate pairs WITH raw cosine, one kernel pass.
 
-    Same pair set as ``near_dup_candidates_lsh(..., bucket_cap)`` and
-    the same cosine doubles as ``cosine_col`` (pytest-pinned): the
-    banded + capped frame is grouped by (table, signature) — the cap
-    bounds every group at ``bucket_cap`` rows, so no salting is needed
-    — and a numpy kernel enumerates each bucket's pair triangle,
-    emitting a pair only at its first shared SURVIVING table (each
-    row carries a bitmap of the tables it survived the cap in), with
-    the exact bit-identical cosine fold computed in the same pass.
+    The pair set: unordered pairs (id_a < id_b) sharing a (table,
+    signature) bucket after each bucket is capped to its first
+    ``bucket_cap`` vec_ids — the capped bucket self-join, deduped;
+    cosines are ``cosine_col``'s doubles (both pytest-pinned against
+    ``tests/reference_ops.py``).  The banded + capped frame is grouped
+    by (table, signature) — the cap bounds every group at
+    ``bucket_cap`` rows, so no salting is needed — and a numpy kernel
+    enumerates each bucket's pair triangle, emitting a pair only at its
+    first shared SURVIVING table (each row carries a bitmap of the
+    tables it survived the cap in), with the bit-identical cosine fold
+    computed in the same pass.
 
-    Replaces, per pair: the id-pair join, the dropDuplicates exchange
-    of the ~quadratic pair set, two vector re-attach joins, and the
-    ~1 KB/pair Arrow transfer into the scoring UDF (sf1.0: 1.8 GB).
-    The kernel sees each capped bucket's ≤cap vectors once (~70 MB).
+    Versus the self-join form this saves, per pair: the id-pair join,
+    the dropDuplicates exchange of the ~quadratic pair set, two vector
+    re-attach joins, and the ~1 KB/pair Arrow transfer into a scoring
+    UDF (sf1.0: 1.8 GB).  The kernel sees each capped bucket's ≤cap
+    vectors once (~70 MB).
     """
     planes = hyperplanes(dim, n_planes, n_tables, seed)
     banded = _banded_signatures(vectors, planes, n_tables)
@@ -363,22 +248,11 @@ def near_dup_scored_pairs_kernel(
         if not keep.any():
             return empty
         ia, ib = iu[keep], ju[keep]
-        a = v[ia].T.copy()
-        b = v[ib].T.copy()
-        n_pairs = a.shape[1]
-        dot = np.zeros(n_pairs)
-        na = np.zeros(n_pairs)
-        nb = np.zeros(n_pairs)
-        for i in range(a.shape[0]):  # exact left-to-right fold per dim
-            ai, bi = a[i], b[i]
-            dot = dot + ai * bi
-            na = na + ai * ai
-            nb = nb + bi * bi
         return pd.DataFrame(
             {
                 "id_a": ids[ia],
                 "id_b": ids[ib],
-                "cosine": dot / (np.sqrt(na) * np.sqrt(nb)),
+                "cosine": _cosine_fold(v[ia].T.copy(), v[ib].T.copy()),
             }
         )
 
@@ -401,8 +275,8 @@ def lsh_topk(
     """Approximate top-k: compare only within shared LSH buckets.
 
     vectors(vec_id, v), queries(query_id, qv) — qv must be the same dim.
-    Union of n_tables bucket joins, deduped per (query, neighbor), then
-    exact cosine ranking of the surviving candidates.  ``bucket_cap``
+    One (table, signature) bucket join over all n_tables, deduped per
+    (query, neighbor), then exact cosine ranking of the candidates.  ``bucket_cap``
     bounds each (table, signature) bucket to its first N vec_ids.
     """
     planes = hyperplanes(dim, n_planes, n_tables, seed)
@@ -413,7 +287,8 @@ def lsh_topk(
     # with no shuffle.
     banded = _banded_signatures(vectors, planes, n_tables).drop("sig_arr")
     if bucket_cap is not None:
-        # salted two-stage first-N (see near_dup_candidates_lsh)
+        # salted two-stage first-N: with only 2^n_planes signatures, a
+        # single-stage window would route each hot bucket through ONE task
         banded = top_n_per_bucket(banded, ["tbl", "sig"], "vec_id", bucket_cap)
     qbanded = _banded_signatures(
         queries, planes, n_tables, id_col="query_id", vec_col="qv", spread=False
@@ -433,7 +308,7 @@ def lsh_topk(
     scored = cands.select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
-        F.round(cosine_col(F.col("qv"), F.col("v"), dim), 6).alias("cosine"),
+        F.round(cosine_col(F.col("qv"), F.col("v")), 6).alias("cosine"),
     ).dropDuplicates(["query_id", "neighbor_id"])
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)

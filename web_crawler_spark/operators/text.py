@@ -1,25 +1,26 @@
 """Text near-dup + analysis operators for the training-data pipeline.
 
-Everything here is built from JVM-side column expressions (explode /
-xxhash64 / bit ops / window) — no Python in the hot path — because these
-ops run over the *document corpus* side of the engine, which is the
-100 TB table.
+Each operator has one production path.  Work that depends only on one
+document's own text (tokenize, md5, vote, shingle) runs as a row-local
+Arrow ``mapInPandas`` kernel whose state lives for one batch; everything
+across documents (banding, pair enumeration, joins, aggregation) stays
+in the JVM plan.
 
-* ``simhash_signatures``: 64-bit SimHash per doc computed as 64 signed
-  bit-vote aggregates over ``xxhash64(token)`` — one hash aggregation,
-  whole-stage codegen friendly.  Output is the signature as a 64-char
-  bit string plus ``n_bands`` LSH bands (equal-substring join keys).
-* ``simhash_candidate_pairs``: banded self-join => candidate pairs with
-  exact Hamming distance (array ops over the bit strings).
+* ``simhash_signatures``: 64-bit SimHash per doc from md5 token votes —
+  the signature as a 64-char bit string, bit-packed into ``sig_int``,
+  plus ``n_bands`` LSH bands.
+* ``simhash_pair_hamming_hist``: per-hamming counts of the banded
+  candidate-pair set, enumerated inside a per-bucket numpy kernel
+  without materializing the pairs.
+* ``minhash_band_sigs``: per-doc MinHash band signatures over n-word
+  shingles.
 * ``jaccard_pairs``: n-gram shingle set Jaccard via distinct-shingle
   self-join — the classic exact near-dup join, SQL-expressible (has a
   DuckDB oracle in __spark_entry__).
 
-Scale notes: the banded self-join is the standard LSH trick — a pair is
-compared only if some band matches, so the shuffle key is (band_idx,
-band_bits) and hot bands (boilerplate text) are the skew risk; cap band
-bucket size upstream if needed.  The signature aggregation is a single
-groupBy(doc) with map-side partial aggregation.
+The JVM-expression forms the kernels replaced live in
+``tests/reference_ops.py``; each kernel is pytest-pinned bit-equal to
+its reference there.
 """
 
 from __future__ import annotations
@@ -40,22 +41,6 @@ def _popcount64(x: np.ndarray) -> np.ndarray:
     return (x * np.uint64(0x0101010101010101)) >> np.uint64(56)
 
 
-def tokens_col(text: F.Column) -> F.Column:
-    """Whitespace tokenization; empty/blank text => empty array."""
-    return F.when(
-        F.length(F.trim(text)) == 0, F.array().cast("array<string>")
-    ).otherwise(F.split(F.trim(text), r"\s+"))
-
-
-def shingles_col(words: F.Column, n: int = 3) -> F.Column:
-    """n-word shingles in order (array<string>); < n words => empty."""
-    cnt = F.greatest(F.size(words) - F.lit(n - 1), F.lit(0))
-    return F.when(cnt > 0, F.transform(
-        F.sequence(F.lit(1), cnt),
-        lambda i: F.array_join(F.slice(words, i, n), " "),
-    )).otherwise(F.array().cast("array<string>"))
-
-
 def _tok_votes(tok: str) -> np.ndarray:
     """±1 vote vector (64 x int8) for one token — EXACTLY the JVM rule:
     bit i = (nibble i//4 of the md5 hex digest) >> (i%4) & 1."""
@@ -68,12 +53,11 @@ def _tok_votes(tok: str) -> np.ndarray:
 
 
 def _java_tokenizer():
-    """Python twin of ``tokens_col`` — Spark's ``split(trim(text),
-    '\\s+')`` EXACTLY: ``trim`` strips ASCII spaces only, the pattern
-    is Java's ``\\s`` = ``[ \\t\\n\\x0b\\f\\r]`` (not Python's
-    Unicode-aware ``\\s``), and Java's limit=-1 keeps leading/trailing
-    empty-string tokens.  Returns a callable text -> list[str]
-    (empty list for null/blank text)."""
+    """Spark's ``split(trim(text), '\\s+')`` in Python, EXACTLY: ``trim``
+    strips ASCII spaces only, the pattern is Java's ``\\s`` =
+    ``[ \\t\\n\\x0b\\f\\r]`` (not Python's Unicode-aware ``\\s``), and
+    Java's limit=-1 keeps leading/trailing empty-string tokens.  Returns
+    a callable text -> list[str] (empty list for null/blank text)."""
     import re  # noqa: PLC0415
 
     ws = re.compile(r"[ \t\n\x0b\f\r]+")
@@ -89,16 +73,42 @@ def _java_tokenizer():
     return _toks
 
 
+def _distinct_shingler(n: int):
+    """Returns a callable text -> the doc's DISTINCT n-word shingles, as
+    a dict used as an ordered set (first occurrence kept, like
+    ``array_distinct``); fewer than n tokens => empty.  Each shingle is
+    " ".join of the token slice — byte-identical to Spark's
+    ``array_join(slice(tokens, i, n), " ")``."""
+    toks_of = _java_tokenizer()
+
+    def _shingles(t):
+        toks = toks_of(t)
+        return dict.fromkeys(
+            " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
+        )
+
+    return _shingles
+
+
+def _map_docs(
+    df: DataFrame, id_col: str, text_col: str, kernel, out_ddl: str,
+) -> DataFrame:
+    """Run a row-local text kernel over (id, text) as one ``mapInPandas``
+    pass, output schema ``id`` + ``out_ddl``; a single-file scan is
+    spread first (``spread_if_narrow``)."""
+    from .skew import spread_if_narrow  # noqa: PLC0415
+
+    base = spread_if_narrow(df).select(id_col, text_col)
+    id_ddl = base.schema[id_col].dataType.simpleString()
+    return base.mapInPandas(kernel, schema=f"{id_col} {id_ddl}, {out_ddl}")
+
+
 def _shingle_kernel_fn(id_col: str, text_col: str, n: int):
     """mapInPandas body emitting the per-doc DISTINCT n-gram shingle
-    rows (id, sh) — the Python twin of ``explode(array_distinct(
-    shingles_col(tokens_col(text), n)))``, which evaluated an
-    interpreted slice+array_join lambda per shingle (~52/doc).  Shingle
-    strings are byte-identical (" ".join of the same token slice);
-    distinctness keeps FIRST occurrence (same as ``array_distinct``,
-    though downstream consumers are order-insensitive).  Pinned by
-    ``test_jaccard_shingle_kernel_matches_jvm``."""
-    toks_of = _java_tokenizer()
+    rows (id, sh) — the JVM ``explode(array_distinct(shingles))`` form
+    evaluated an interpreted slice+array_join lambda per shingle
+    (~52/doc).  Pinned by ``test_jaccard_shingle_kernel_matches_jvm``."""
+    shingles_of = _distinct_shingler(n)
 
     def _fn(batches):
         import pandas as pd  # noqa: PLC0415 — executor-side import
@@ -106,17 +116,10 @@ def _shingle_kernel_fn(id_col: str, text_col: str, n: int):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            ids: list = []
             shs: list = []
             counts = np.zeros(len(pdf), dtype=np.int64)
             for k, t in enumerate(pdf[text_col]):
-                toks = toks_of(t)
-                cnt = len(toks) - (n - 1)
-                if cnt <= 0:
-                    continue
-                uniq = dict.fromkeys(
-                    " ".join(toks[i : i + n]) for i in range(cnt)
-                )
+                uniq = shingles_of(t)
                 counts[k] = len(uniq)
                 shs.extend(uniq)
             idv = np.repeat(pdf[id_col].to_numpy(), counts)
@@ -131,11 +134,10 @@ def _minhash_kernel_fn(id_col: str, text_col: str, n_bands: int, n: int):
     n-gram shingles, one column per band.  Row-local (min over the
     row's shingle set), so no explode and no aggregation exchange; a
     per-batch shingle→digests cache hashes each DISTINCT shingle once
-    per batch (the JVM path evaluated concat+md5 per occurrence × per
-    band).  Docs with no shingles emit NO row — matching the JVM
+    per batch.  Docs with no shingles emit NO row — matching the JVM
     ``explode`` (not outer) + groupBy.  Hex digests are ASCII, so
     Python ``<`` equals Spark's binary string ordering."""
-    toks_of = _java_tokenizer()
+    shingles_of = _distinct_shingler(n)
     prefixes = [f"{b}|".encode() for b in range(n_bands)]
 
     def _fn(batches):
@@ -143,18 +145,16 @@ def _minhash_kernel_fn(id_col: str, text_col: str, n_bands: int, n: int):
 
         import pandas as pd  # noqa: PLC0415
 
-        cache: dict = {}
         for pdf in batches:
             if len(pdf) == 0:
                 continue
+            cache: dict = {}
             out_ids: list = []
             out_sigs: list = [[] for _ in range(n_bands)]
             for did, t in zip(pdf[id_col], pdf[text_col]):
-                toks = toks_of(t)
-                cnt = len(toks) - (n - 1)
-                if cnt <= 0:
+                uniq = shingles_of(t)
+                if not uniq:
                     continue
-                uniq = set(" ".join(toks[i : i + n]) for i in range(cnt))
                 mins = [None] * n_bands
                 for s in uniq:
                     e = cache.get(s)
@@ -185,62 +185,29 @@ def _minhash_kernel_fn(id_col: str, text_col: str, n_bands: int, n: int):
 
 
 def minhash_band_sigs(
-    df: DataFrame, id_col: str, text_col: str, n_bands: int = 4,
-    n: int = 3, use_kernel: bool = True,
+    df: DataFrame, id_col: str, text_col: str, n_bands: int = 4, n: int = 3,
 ) -> DataFrame:
     """Per-doc MinHash band signatures (wide): columns ``_s0.._s{B-1}``
     = lexicographic min of ``md5(f"{b}|" + shingle)`` over the doc's
-    n-word shingles; docs with < n words emit no row.  The kernel path
-    (default) computes this row-locally in one Arrow pass — no shingle
-    explode, no md5-per-occurrence-per-band, no groupBy exchange; the
-    JVM explode + B×min() aggregate path is kept as the semantic
-    reference (bit-equality pytest-pinned)."""
-    from .skew import spread_if_narrow  # noqa: PLC0415
-
-    base = spread_if_narrow(df).select(id_col, text_col)
-    if use_kernel:
-        id_ddl = base.schema[id_col].dataType.simpleString()
-        sig_cols = ", ".join(f"_s{b} string" for b in range(n_bands))
-        return base.mapInPandas(
-            _minhash_kernel_fn(id_col, text_col, n_bands, n),
-            schema=f"{id_col} {id_ddl}, {sig_cols}",
-        )
-    words = tokens_col(F.col(text_col))
-    n_sh = F.greatest(F.size(words) - F.lit(n - 1), F.lit(0))
-    shingles = F.transform(
-        F.sequence(F.lit(1), n_sh),
-        lambda i: F.array_join(F.slice(words, i, n), " "),
-    )
-    sh = base.select(
-        id_col, F.explode(F.when(n_sh > 0, shingles)).alias("shingle")
-    )
-    return sh.groupBy(id_col).agg(
-        *[
-            F.min(
-                F.md5(F.concat(F.lit(f"{b}|"), F.col("shingle")))
-            ).alias(f"_s{b}")
-            for b in range(n_bands)
-        ]
+    n-word shingles; docs with < n words emit no row.  Computed
+    row-locally in one Arrow pass — no shingle explode, no
+    md5-per-occurrence-per-band, no groupBy exchange."""
+    return _map_docs(
+        df, id_col, text_col, _minhash_kernel_fn(id_col, text_col, n_bands, n),
+        ", ".join(f"_s{b} string" for b in range(n_bands)),
     )
 
 
 def _sig_kernel_fn(id_col: str, text_col: str):
     """mapInPandas body computing (id, sig, sig_int) per document.
 
-    Bit-identical to the JVM explode/md5/64-sum-aggregate path (pinned
-    by ``test_simhash_signatures_kernel_matches_jvm``):
+    Bit-identical to the JVM explode/md5/64-sum-aggregate form (pinned
+    by ``test_simhash_signatures_kernel_matches_jvm``): tokenization is
+    ``_java_tokenizer``, and votes are exact int64 sums of ±1 —
+    order-free, so the signature bits equal the JVM aggregate's.
 
-    * tokenization replicates Spark's ``split(trim(text), '\\s+')``
-      exactly — ``trim`` strips ASCII spaces ONLY, and the split
-      pattern is Java's ``\\s`` = ``[ \\t\\n\\x0b\\f\\r]`` (NOT
-      Python's Unicode-aware ``\\s``), keeping Java's leading/trailing
-      empty-string tokens (limit -1 semantics);
-    * votes are exact int64 sums of ±1 — order-free, so the signature
-      bits equal the JVM aggregate's.
-
-    A signature depends only on the row's own text, so this path has
-    NO shuffle at all (the JVM path exchanged one 64-column partial
-    aggregate per doc); per-batch token→vote cache makes the md5 cost
+    A signature depends only on the row's own text, so there is no
+    shuffle at all; the per-batch token→vote cache makes the md5 cost
     one hash per DISTINCT token per batch.
     """
     toks_of = _java_tokenizer()
@@ -248,13 +215,13 @@ def _sig_kernel_fn(id_col: str, text_col: str):
     def _fn(batches):
         import pandas as pd  # noqa: PLC0415 — executor-side import
 
-        cache: dict = {}
-        vote_rows: list = []
         weights = np.uint64(1) << np.arange(64, dtype=np.uint64)
         for pdf in batches:
             n = len(pdf)
             if n == 0:
                 continue
+            cache: dict = {}
+            vote_rows: list = []
             counts = np.zeros(n, dtype=np.int64)
             tok_idx: list = []
             for k, t in enumerate(pdf[text_col]):
@@ -298,7 +265,6 @@ def _sig_kernel_fn(id_col: str, text_col: str):
 
 def simhash_signatures(
     df: DataFrame, id_col: str, text_col: str, n_bands: int = 8,
-    use_kernel: bool = True,
 ) -> DataFrame:
     """Per-doc 64-bit SimHash as a bit string + LSH bands.
 
@@ -306,86 +272,21 @@ def simhash_signatures(
     pattern of the token's hash; the signature bit is the vote sign.
     Docs with no tokens get the all-zeros signature.
 
-    The token hash is the first 64 bits of md5 (hex nibbles decoded with
-    ``conv``) rather than ``xxhash64``: md5 is engine-portable, which
-    makes the whole operator reproducible in the DuckDB correctness
-    oracle (round-1 fix; bit i = nibble i//4 of the hex digest, within-
-    nibble bit i%4).
+    The token hash is the first 64 bits of md5 rather than ``xxhash64``:
+    md5 is engine-portable, which makes the whole operator reproducible
+    in the DuckDB correctness oracle (bit i = nibble i//4 of the hex
+    digest, within-nibble bit i%4).
 
-    ``use_kernel=True`` (default) computes the per-doc signature in one
-    Arrow ``mapInPandas`` pass — a signature is a row-local function of
-    the text, so this removes the token explode (~55 rows/doc), the 64
-    interpreted partial-aggregate expressions and the groupBy exchange
-    entirely; bit-equality with the JVM path is pytest-pinned.  The
-    JVM expression path (``use_kernel=False``) remains the semantic
-    reference.
+    A signature is a row-local function of the text, so it is computed
+    in one Arrow ``mapInPandas`` pass — no token explode (~55 rows/doc),
+    no 64 partial-aggregate expressions, no groupBy exchange.
+    ``sig_int`` is the same signature bit-packed into one bigint, so a
+    Hamming distance is ``bit_count(a ^ b)``.
     """
-    from .skew import spread_if_narrow  # noqa: PLC0415
-
-    if use_kernel:
-        base = spread_if_narrow(df).select(id_col, text_col)
-        id_ddl = base.schema[id_col].dataType.simpleString()
-        out = base.mapInPandas(
-            _sig_kernel_fn(id_col, text_col),
-            schema=f"{id_col} {id_ddl}, sig string, sig_int bigint",
-        )
-        return _with_bands(out, n_bands)
-
-    toks = spread_if_narrow(df).select(
-        id_col, F.explode_outer(tokens_col(F.col(text_col))).alias("tok")
+    out = _map_docs(
+        df, id_col, text_col, _sig_kernel_fn(id_col, text_col),
+        "sig string, sig_int bigint",
     )
-    # hoist the 16 hex-nibble decodes into ONE projection below the
-    # aggregate: referencing `nibbles[i//4]` inside each of the 64 vote
-    # sums repeats the md5+conv subtree per aggregate expression, and
-    # partial-aggregation codegen does not CSE across aggregate
-    # expressions — md5 ran up to 64x per token row (measured 2.4x on
-    # the whole operator at sf0.1).  After this projection each token
-    # row hashes once; the sums read plain int columns.
-    md5h = F.md5("tok")
-    toks = toks.select(
-        id_col,
-        F.col("tok").isNull().alias("no_tok"),
-        *[
-            F.conv(F.substring(md5h, d + 1, 1), 16, 10)
-            .cast("int")
-            .alias(f"nib{d}")
-            for d in range(16)
-        ],
-    )
-    votes = toks.groupBy(id_col).agg(
-        *[
-            F.sum(
-                F.when(F.col("no_tok"), 0).otherwise(
-                    F.when(
-                        F.shiftright(F.col(f"nib{i // 4}"), i % 4).bitwiseAND(
-                            F.lit(1)
-                        )
-                        == 1,
-                        1,
-                    ).otherwise(-1)
-                )
-            ).alias(f"b{i}")
-            for i in range(SIG_BITS)
-        ]
-    )
-    sig = F.concat(
-        *[
-            F.when(F.col(f"b{i}") > 0, F.lit("1")).otherwise(F.lit("0"))
-            for i in range(SIG_BITS - 1, -1, -1)
-        ]
-    )
-    # the same signature bit-packed into ONE bigint: hamming becomes
-    # bit_count(xor) (one instruction-ish) instead of split/zip_with over
-    # 64-element string arrays, and the pair join carries 8 bytes per
-    # side instead of a 64-char string.
-    sig_int = F.lit(0).cast("long")
-    for i in range(SIG_BITS):
-        sig_int = sig_int.bitwiseOR(
-            F.when(
-                F.col(f"b{i}") > 0, F.shiftleft(F.lit(1).cast("long"), i)
-            ).otherwise(F.lit(0).cast("long"))
-        )
-    out = votes.select(id_col, sig.alias("sig"), sig_int.alias("sig_int"))
     return _with_bands(out, n_bands)
 
 
@@ -403,24 +304,6 @@ def _with_bands(out: DataFrame, n_bands: int) -> DataFrame:
     return out.withColumn("bands", bands)
 
 
-def hamming_col(sig_a: F.Column, sig_b: F.Column) -> F.Column:
-    """Hamming distance between two equal-length bit strings.
-
-    Kept as the string-form public helper (useful against the ``sig``
-    column); the pair pipeline itself uses ``bit_count(sig_int ^
-    sig_int)`` — one integer op instead of split/zip_with over
-    64-element arrays (round-5 rework).
-    """
-    return F.size(
-        F.filter(
-            F.zip_with(
-                F.split(sig_a, ""), F.split(sig_b, ""), lambda a, b: a != b
-            ),
-            lambda x: x,
-        )
-    )
-
-
 def _band_int(sig_int: F.Column, b: int, band_w: int) -> F.Column:
     """Band ``b`` of a bit-packed signature as an int (matches the string
     banding: band b = sig-string chars b*w+1..(b+1)*w = bits 63-b*w down
@@ -431,206 +314,30 @@ def _band_int(sig_int: F.Column, b: int, band_w: int) -> F.Column:
     )
 
 
-def simhash_candidate_pairs(
-    sigs: DataFrame, id_col: str, max_hamming: int = 8,
-    bucket_cap: int | None = None, n_bands: int = 8, n_salts: int = 16,
-) -> DataFrame:
-    """Banded LSH self-join: pairs sharing >=1 band, with exact Hamming.
-
-    Standard SimHash near-dup guarantee: two docs within Hamming k of
-    each other share at least one of k+1 bands, so with n_bands=8 every
-    pair at distance <=7 is found exactly; max_hamming<=n_bands-1 keeps
-    the filter complete (no missed pairs).
-
-    ``bucket_cap`` bounds hot bands (axis B): at most ``bucket_cap`` docs
-    per (band_idx, band_bits) bucket enter the self-join, chosen in
-    sorted id order (deterministic) — a boilerplate-heavy corpus piles
-    thousands of docs into one band and would otherwise go quadratic.
-    Capping trades completeness for a hard bound on join fan-out; leave
-    None for exact semantics.
-
-    Scale shape (round-5 rework; the naive form ran the WHOLE pair space
-    in one task at sf0.1 — 75 s, 752 MB spill):
-
-    * The join carries ``sig_int`` (8 bytes) per side, never the 64-char
-      string; Hamming is ``bit_count(a xor b)``.
-    * AQE coalesces shuffle partitions by INPUT size, and an LSH
-      self-join's input (one row per doc per band) is tiny while its
-      output is quadratic in bucket size — so AQE folds the explosive
-      join into one partition.  The left side is therefore salted by
-      ``pmod(xxhash64(id), n_salts)`` and explicitly
-      ``repartition(P, band_idx, band_bits, salt)`` (a user-pinned
-      partition count, which AQE must preserve); the right side
-      replicates each row to all ``n_salts`` salt values, so every pair
-      is still produced exactly once while a hot band's pair space is
-      split across ``n_salts`` independent partitions.
-    * In the exact (uncapped) path a pair is emitted ONLY at its first
-      shared band — lower-band equality is re-checked row-side from the
-      two sig_ints — so no ``dropDuplicates`` shuffle of the pair space
-      exists at all.  With ``bucket_cap`` the per-band membership can
-      differ, so the capped path keeps the dedup.
-    """
-    band_w = SIG_BITS // n_bands
-    banded = sigs.select(
-        F.col(id_col),
-        F.col("sig_int"),
-        F.explode(F.array(*[F.lit(b) for b in range(n_bands)])).alias("band_idx"),
-    )
-    band_bits = F.lit(0).cast("long")
-    for b in range(n_bands):
-        band_bits = F.when(
-            F.col("band_idx") == b, _band_int(F.col("sig_int"), b, band_w)
-        ).otherwise(band_bits)
-    banded = banded.withColumn("band_bits", band_bits)
-    n_part = int(
-        sigs.sparkSession.conf.get("spark.sql.shuffle.partitions", "64")
-    )
-    if bucket_cap is not None:
-        # salted two-stage first-N: boilerplate-heavy corpora concentrate
-        # into few band values, and a single-stage window would route each
-        # hot band through ONE task (round-3 VERDICT #3)
-        from .skew import top_n_per_bucket  # noqa: PLC0415
-
-        banded = top_n_per_bucket(
-            banded, ["band_idx", "band_bits"], id_col, bucket_cap
-        )
-        a = banded.select(
-            F.col(id_col).alias("id_a"), F.col("sig_int").alias("sig_a_int"),
-            "band_idx", "band_bits",
-            F.pmod(F.xxhash64(id_col), F.lit(n_salts)).cast("int").alias("salt"),
-        ).repartition(n_part, "band_idx", "band_bits", "salt")
-        b = banded.select(
-            F.col(id_col).alias("id_b"), F.col("sig_int").alias("sig_b_int"),
-            "band_idx", "band_bits",
-            F.explode(F.array(*[F.lit(s) for s in range(n_salts)])).alias("salt"),
-        )
-        pairs = (
-            a.join(b, ["band_idx", "band_bits", "salt"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", "sig_a_int", "sig_b_int")
-            .dropDuplicates(["id_a", "id_b"])  # multiple shared bands => once
-        )
-        return pairs.withColumn(
-            "hamming",
-            F.bit_count(F.col("sig_a_int").bitwiseXOR(F.col("sig_b_int"))),
-        ).filter(
-            F.col("hamming") <= max_hamming
-        ).select("id_a", "id_b", "hamming")
-    # ---- exact path: vectorized per-bucket pair kernel (round-6) ----
-    # The banded self-join's OUTPUT is quadratic in bucket size (sf1.0
-    # profile: ~1.0e9 ordered pair rows through the join for 50k docs)
-    # while only the tiny hamming<=k tail survives — JVM row-at-a-time
-    # join output production was ~130 ns/pair, the whole query's cost.
-    # Same distribution mechanism as before (salted bucket split so no
-    # single hot band owns the pair space; deterministic salts), but the
-    # pair space is enumerated *inside* each task by a vectorized numpy
-    # kernel (SWAR popcount over uint64 xor blocks — guide §4.2), so a
-    # candidate pair costs ~1 ns and never materializes as a row unless
-    # it survives.  First-shared-band emission is a byte test on the xor
-    # (all lower band bytes nonzero), so each surviving pair is emitted
-    # exactly once with no dedup shuffle — same semantics as the join
-    # path it replaces (equivalence pinned by tests/test_operators.py).
-    id_type = dict(sigs.dtypes)[id_col]
-    # ONE explode emits the a-row (side 0, its own salt) and the n_salts
-    # replicated b-rows per banded row — a unionByName of two selects
-    # over `banded` would compute the whole signature-aggregation subtree
-    # once PER BRANCH (measured: 2 FlatMapGroupsInPandas / double the
-    # sig cost at sf1.0)
-    own_salt = F.pmod(F.xxhash64(id_col), F.lit(n_salts)).cast("int")
-    entries = F.array(
-        F.struct(F.lit(0).alias("side"), own_salt.alias("salt")),
-        *[
-            F.struct(F.lit(1).alias("side"), F.lit(s).cast("int").alias("salt"))
-            for s in range(n_salts)
-        ],
-    )
-    u = banded.select(
-        F.col(id_col).alias("_id"), "sig_int", "band_idx", "band_bits",
-        F.explode(entries).alias("_e"),
-    ).select(
-        "_id", "sig_int", "band_idx", "band_bits",
-        F.col("_e.side").alias("side"), F.col("_e.salt").alias("salt"),
-    ).repartition(n_part, "band_idx", "band_bits", "salt")
-
-    max_h = int(max_hamming)
-    n_b = int(n_bands)
-    b_w = int(band_w)
-
-    def _pair_kernel(key, pdf):
-        import pandas as pd  # noqa: PLC0415 — executor-side import
-
-        band_idx = int(key[0])
-        a_rows = pdf[pdf["side"] == 0]
-        b_rows = pdf[pdf["side"] == 1]
-        empty = pd.DataFrame({"id_a": [], "id_b": [], "hamming": []})
-        if a_rows.empty or b_rows.empty:
-            return empty
-        ids_a = a_rows["_id"].to_numpy()
-        ids_b = b_rows["_id"].to_numpy()
-        sig_a = a_rows["sig_int"].to_numpy(np.int64).view(np.uint64)
-        sig_b = b_rows["sig_int"].to_numpy(np.int64).view(np.uint64)
-        band_mask = np.uint64((1 << b_w) - 1)
-        n_bb = len(sig_b)
-        blk = max(1, (4 << 20) // max(1, n_bb))  # ~4M pairs per block
-        out_a, out_b, out_h = [], [], []
-        for lo in range(0, len(sig_a), blk):
-            xa = sig_a[lo : lo + blk]
-            x = xa[:, None] ^ sig_b[None, :]
-            ham = _popcount64(x)
-            m = ham <= np.uint64(max_h)
-            # first-shared-band emission: every lower band byte of the
-            # xor must be nonzero (bands are laid out MSB-first)
-            for j in range(band_idx):
-                shift = np.uint64(SIG_BITS - (j + 1) * b_w)
-                m &= ((x >> shift) & band_mask) != 0
-            ii, jj = np.nonzero(m)
-            if len(ii) == 0:
-                continue
-            sa = ids_a[lo + ii]
-            sb = ids_b[jj]
-            keep = sa < sb  # ordering + self/dup-orientation dedup
-            if not keep.any():
-                continue
-            out_a.append(sa[keep])
-            out_b.append(sb[keep])
-            out_h.append(ham[ii, jj][keep].astype(np.int32))
-        if not out_a:
-            return empty
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate(out_a),
-                "id_b": np.concatenate(out_b),
-                "hamming": np.concatenate(out_h),
-            }
-        )
-
-    return u.groupBy("band_idx", "band_bits", "salt").applyInPandas(
-        _pair_kernel,
-        schema=f"id_a {id_type}, id_b {id_type}, hamming int",
-    )
-
-
 def simhash_pair_hamming_hist(
     sigs: DataFrame, id_col: str, max_hamming: int = 8,
     n_bands: int = 8, n_salts: int = 8,
 ) -> DataFrame:
-    """Per-bucket (hamming, n) histograms of the EXACT candidate-pair set
-    — sum over ``hamming`` to get ``simhash_candidate_pairs(...)
-    .groupBy("hamming").count()`` without materializing the pairs.
+    """Per-bucket (hamming, n) histograms of the banded candidate-pair
+    set, without materializing the pairs.
 
-    Same pair semantics as the exact path of ``simhash_candidate_pairs``
-    (>=1 shared band, first-band emission, hamming <= max_hamming,
-    unordered pairs once; count equality is pytest-pinned against the
-    pair path and oracle-gated).  Distribution uses triangle salt
-    BLOCKS: each row (salt s = pmod(xxhash64(id), S)) is replicated to
-    the S blocks (min(s,t), max(s,t)); an off-diagonal block holds each
-    cross-salt pair exactly once (no order test at all), a diagonal
-    block (s,s) holds one salt's rows and dedups by the (xxhash64(id),
-    id) strict total order — any strict total order counts an unordered
-    pair exactly once.  vs the a/b salting of the pair path this halves
-    the enumerated pair space (c^2/2 instead of c^2 per hot bucket) and
-    replicates rows S times instead of S+1, while still splitting a hot
-    bucket's pair space over S(S+1)/2 independent tasks.
+    The pair set: unordered pairs of docs sharing >= 1 of ``n_bands``
+    bands with hamming <= ``max_hamming``, each counted once (at its
+    first shared band).  Two docs within Hamming k share at least one of
+    k+1 bands, so with ``max_hamming < n_bands`` no pair within the
+    bound is missed.  Summing ``n`` per ``hamming`` equals the plain
+    band self-join's ``groupBy("hamming").count()`` (pytest-pinned
+    against ``tests/reference_ops.py`` and oracle-gated).
+
+    Distribution uses triangle salt BLOCKS: each row (salt s =
+    pmod(xxhash64(id), S)) is replicated to the S blocks (min(s,t),
+    max(s,t)); an off-diagonal block holds each cross-salt pair exactly
+    once (no order test at all), a diagonal block (s,s) holds one salt's
+    rows and dedups by the (xxhash64(id), id) strict total order — any
+    strict total order counts an unordered pair exactly once.  A hot
+    bucket's c^2/2 pair space is thus split over S(S+1)/2 independent
+    tasks, which AQE cannot fold back together: the repartition width is
+    user-pinned.
     """
     band_w = SIG_BITS // n_bands
     banded = sigs.select(
@@ -649,8 +356,9 @@ def simhash_pair_hamming_hist(
     n_part = int(
         sigs.sparkSession.conf.get("spark.sql.shuffle.partitions", "64")
     )
-    # single-subtree explode (see simhash_candidate_pairs): S block
-    # entries per banded row — side 0 = row-salt side (s < t), side 1 =
+    # ONE explode emits the S block entries per banded row (a union of
+    # per-side selects over `banded` would compute the signature subtree
+    # once per branch) — side 0 = row-salt side (s < t), side 1 =
     # col-salt side (s > t), side 2 = diagonal (t == s)
     s_col = F.pmod(F.col("idh"), F.lit(n_salts)).cast("int")
     entries = F.array(
@@ -804,7 +512,6 @@ def jaccard_pairs(
     n: int = 3,
     min_jaccard: float = 0.5,
     max_df: int | None = None,
-    use_kernel: bool = True,
 ) -> DataFrame:
     """Exact n-gram-shingle Jaccard similarity join (set semantics).
 
@@ -816,39 +523,31 @@ def jaccard_pairs(
     space.  Standard practice in MinHash/shingle dedup pipelines; leave
     None for the uncapped exact join.
 
-    ``id_col`` must identify ONE row (one document) — the per-document
-    shingle-set dedup is ``array_distinct`` on the row's own shingle
-    array (row-local), replacing the previous global ``.distinct()``
-    aggregation over the exploded (id, shingle) rows.  The exploded
-    frame is then hash-repartitioned ONCE by shingle: that single
-    pinned exchange is reused by every consumer (the DF-cap aggregation
-    and both self-join sides run in place on the sh-partitioned data
-    with no further exchange; the old shape re-exchanged by sh for the
-    cap and for the join on top of the distinct's (id, sh) exchange).
+    ``id_col`` must identify ONE row (one document): the per-document
+    shingle-set dedup is row-local, inside the Arrow shingle kernel —
+    the JVM explode form evaluated an interpreted slice+array_join
+    lambda per shingle (~52/doc; measured 1.9 s of the 4.2 s
+    sf1.0-shape query).
     """
-    from .skew import spread_if_narrow  # noqa: PLC0415
+    sh = _map_docs(
+        df, id_col, text_col, _shingle_kernel_fn(id_col, text_col, n),
+        "sh string",
+    )
+    return _jaccard_from_shingles(sh, id_col, min_jaccard, max_df)
 
+
+def _jaccard_from_shingles(
+    sh: DataFrame, id_col: str, min_jaccard: float, max_df: int | None,
+) -> DataFrame:
+    """``jaccard_pairs`` from the per-doc distinct (id, sh) rows.
+
+    The rows are hash-repartitioned ONCE by shingle: that single pinned
+    exchange is reused by every consumer (the DF-cap window and both
+    self-join sides run in place on the sh-partitioned data with no
+    further exchange)."""
     from pyspark.sql import Window  # noqa: PLC0415
 
-    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "64"))
-    if use_kernel:
-        # per-doc distinct-shingle emission in one Arrow pass — the JVM
-        # explode path evaluated an interpreted slice+array_join lambda
-        # per shingle (~52/doc; measured 1.9 s of the 4.2 s sf1.0-shape
-        # query).  Byte-identical shingle strings, pytest-pinned.
-        base = spread_if_narrow(df).select(id_col, text_col)
-        id_ddl = base.schema[id_col].dataType.simpleString()
-        sh = base.mapInPandas(
-            _shingle_kernel_fn(id_col, text_col, n),
-            schema=f"{id_col} {id_ddl}, sh string",
-        )
-    else:
-        sh = spread_if_narrow(df).select(
-            id_col,
-            F.explode(
-                F.array_distinct(shingles_col(tokens_col(F.col(text_col)), n))
-            ).alias("sh"),
-        )
+    n_part = int(sh.sparkSession.conf.get("spark.sql.shuffle.partitions", "64"))
     sh = sh.repartition(n_part, "sh")
     if max_df is not None:
         # document frequency as a window over the sh-partitioned frame:
