@@ -2,11 +2,12 @@
 
 Runs a small crawl (default 20k docs, depth 5) twice — once warm-up,
 once under cProfile — and prints the top cumulative py4j / plan-side
-costs plus each wave's phase decomposition (the ``phase_ms`` the engine
-records in every wave's commit summary).  Small corpus on purpose:
-executor work is negligible, so wall ~= driver floor and the profile
-isolates exactly the non-scaling seconds the scaling analysis charges
-to "plan" / "union_build" / "obs_fold".
+costs plus each wave's phase decomposition and Spark job count (the
+``phase_ms`` and ``job_ids`` the engine records in every wave's commit
+summary; phases plan / union_build / write / bloom_upd / fold).  Small
+corpus on purpose: executor work is negligible, so wall ~= driver floor
+and the profile isolates exactly the non-scaling seconds the scaling
+analysis charges to "plan" / "union_build" / "fold".
 
 Usage: python scripts/profile_wave_plan.py [ndocs] [depth]
 """
@@ -61,9 +62,10 @@ def main() -> None:
         eng.run_crawl(cid)
         wall = time.time() - t0
         for w in store.committed_waves(cid):
-            phases = store.wave_summary(cid, w).get("phase_ms", {})
+            summary = store.wave_summary(cid, w)
+            phases = summary.get("phase_ms", {})
             print(
-                f"phase_ms {tag} w{w} "
+                f"phase_ms {tag} w{w} jobs={len(summary.get('job_ids', []))} "
                 + " ".join(f"{k}={v}" for k, v in phases.items()),
                 flush=True,
             )

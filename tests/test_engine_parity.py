@@ -10,6 +10,8 @@ against the deterministic oracle.
 
 from __future__ import annotations
 
+import logging
+
 import pytest
 
 from tests.helpers import assert_parity, engine_state, good_seeds, oracle_state
@@ -36,34 +38,49 @@ def docs_df(spark, corpus):
     df.unpersist()
 
 
-def test_parity_depth3(spark, corpus, docs_df, tmp_path):
+def test_parity_depth3(spark, corpus, docs_df, tmp_path, caplog):
     seed = good_seeds(corpus, CFG)[0]
     oracle = OracleCrawler(corpus, CFG).crawl(seed, 3, crawl_id="c")
     store = SnapshotStore(tmp_path / "s")
     eng = CrawlEngine(spark, store, docs_df, CFG)
-    cid = eng.start_crawl(seed, 3, crawl_id="c")
-    meta = eng.run_crawl(cid)
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "caller-group")
+    try:
+        with caplog.at_level("ERROR", logger="web_crawler_spark.engine"):
+            cid = eng.start_crawl(seed, 3, crawl_id="c")
+            meta = eng.run_crawl(cid)
+        # the waves' job groups never leak into the caller's thread
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
     assert meta["status"] == "completed"
+    # the wave-arithmetic invariant held on every wave
+    assert not [
+        r for r in caplog.records
+        if r.name == "web_crawler_spark.engine" and r.levelno >= logging.ERROR
+    ]
     assert_parity(spark, store, cid, oracle)
-    # wave metrics parity on the totals rows
+    # wave metrics parity on the totals rows: every total the oracle keeps
     m = {
-        r.wave: r
+        r.wave: r.asDict()
         for r in store.metrics(spark, cid).filter("partition_id = -1").collect()
     }
+    assert sorted(m) == [om["wave"] for om in oracle.wave_metrics]
     for om in oracle.wave_metrics:
-        w = om["wave"]
-        assert m[w].fetched == om["fetched"], f"wave {w} fetched"
-        assert m[w].children == om["children"], f"wave {w} children"
-        assert m[w].candidates == om["candidates"], f"wave {w} candidates"
-    # every committed wave records its phase timings in the commit summary
-    phases = {
-        "plan", "resolve", "union_build", "metrics_job", "bloom_upd",
-        "write_wait", "obs_fold",
-    }
+        for key, want in om.items():
+            assert m[om["wave"]][key] == want, f"wave {om['wave']} {key}"
+    # every committed wave records its phase timings and its own Spark jobs
+    phases = {"plan", "union_build", "write", "bloom_upd", "fold"}
+    seen_ids: set[int] = set()
     for w in store.committed_waves(cid):
-        phase_ms = store.wave_summary(cid, w)["phase_ms"]
+        summary = store.wave_summary(cid, w)
+        phase_ms = summary["phase_ms"]
         assert set(phase_ms) == phases, (w, phase_ms)
         assert all(v >= 0 for v in phase_ms.values()), (w, phase_ms)
+        job_ids = set(summary["job_ids"])
+        assert job_ids, w
+        assert not job_ids & seen_ids, (w, job_ids & seen_ids)
+        seen_ids |= job_ids
 
 
 def test_parity_politeness_budget(spark, corpus, docs_df, tmp_path):

@@ -43,7 +43,9 @@ Scale design (10^10-URL frontier, 1000 executors):
 * the politeness top-B per host is computed with a two-stage window
   (salted local top-B, then exact top-B over survivors): a hot host with
   10^8 pending URLs never lands in a single window partition (axis B).
-* per-wave metrics carry spark_partition_id lineage (north rule).
+* every wave's Spark jobs run in the job group ``crawl/{crawl_id}/w{wave}``;
+  the commit summary records their ids next to the wave totals and phase
+  timings, so an event log resolves each wave to its stages and tasks.
 """
 
 from __future__ import annotations
@@ -52,6 +54,7 @@ import logging
 import shutil
 import time
 import uuid
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
@@ -87,6 +90,15 @@ _UNION_COLS: list[tuple[str, str]] = [
 ] + [("src", "string"), ("dst", "string")]
 
 
+# Spark's job-group local property: every job submitted from a thread
+# carries it, and the status tracker lists jobs by it
+_JOB_GROUP = "spark.jobGroup.id"
+
+
+def _wave_group_id(crawl_id: str, wave: int) -> str:
+    return f"crawl/{crawl_id}/w{wave}"
+
+
 def _host_col(name: F.Column) -> F.Column:
     """Politeness/robots host: registrable base = last two labels, port
     stripped (must match ``oracle._host_of`` exactly)."""
@@ -105,11 +117,10 @@ class WaveResult:
     dedup_dropped: int
     dns_dropped: int
     children: int
-    pending_after: int
     elapsed_ms: int
     # wave-arithmetic inputs for the driver's pending/seen bookkeeping
-    # (no per-wave frontier count job): parents that stayed PENDING for a
-    # retry, and children born PENDING (non-leaf)
+    # (checked against the next frontier's observed counts): parents that
+    # stayed PENDING for a retry, and children born PENDING (non-leaf)
     parent_retries: int = 0
     children_pending: int = 0
     # PENDING rows of individually-cancelled fleet members flipped to
@@ -282,7 +293,8 @@ class CrawlEngine:
             "crawl_id string, full_key string, name string, http_type string, "
             "depth int, requested_depth int, attempts int",
         )
-        self._run_wave(crawl_id, 0, seed_df, seen=None, is_root=True)
+        with self._wave_group(crawl_id, 0):
+            self._run_wave(crawl_id, 0, seed_df, seen=None, is_root=True)
         return crawl_id
 
     def start_fleet(
@@ -368,10 +380,11 @@ class CrawlEngine:
                 "crawl_id string, full_key string, name string, http_type string, "
                 "depth int, requested_depth int, attempts int",
             )
-            self._run_wave(
-                fleet_id, 0, seed_df, seen=None, is_root=True,
-                root_fetched=len(rows),
-            )
+            with self._wave_group(fleet_id, 0):
+                self._run_wave(
+                    fleet_id, 0, seed_df, seen=None, is_root=True,
+                    root_fetched=len(rows),
+                )
         return fleet_id
 
     def cancel_crawl(self, crawl_id: str) -> None:
@@ -392,8 +405,6 @@ class CrawlEngine:
         meta = self.store.read_crawl_meta(crawl_id)
         if meta["status"] in ("failed", "cancelled", "completed"):
             return meta
-        from concurrent.futures import ThreadPoolExecutor
-
         from .operators.dedup import BloomState
 
         self.store.clean_uncommitted(crawl_id)
@@ -403,14 +414,6 @@ class CrawlEngine:
 
         waves_done = 0
         frontier: DataFrame | None = None
-        # previous frontier generation: unpersisted only once the NEXT
-        # generation's materialization (count_fut) has resolved — its
-        # cache feeds that fold's lineage
-        old_frontier: DataFrame | None = None
-        count_fut = None  # pending (n_rows, n_pending) job for `frontier`
-        # crawl-level pool: the wave's union write, the next frontier's
-        # materialization job, and (bloom path) state updates overlap on it
-        pool = ThreadPoolExecutor(max_workers=4)
         n_seen = n_pending = 0
         bloom: BloomState | None = None
         # adaptive payoff gate (cfg.bloom_min_cut_frac): sticky-off once
@@ -424,42 +427,12 @@ class CrawlEngine:
         # gate exists for.
         bloom_pays = not meta.get("bloom_gate_tripped")
 
-        def _resolve_counts() -> None:
-            """Block on the pending frontier-count job (if any), validate
-            the driver's wave arithmetic against the observed counts, and
-            release the superseded frontier cache.  Called lazily — from
-            inside the next wave right before its first Spark action — so
-            the count job overlaps the driver-side planning of that wave
-            (the per-wave serial floor is the pre-saturation scaling
-            constraint, BENCH/BASELINE.md)."""
-            nonlocal count_fut, n_seen, n_pending, old_frontier
-            if count_fut is None:
-                return
-            obs_rows, obs_pending = count_fut.result()
-            count_fut = None
-            if obs_pending != n_pending or obs_rows != n_seen:
-                # the observed counts from the merge job are authoritative;
-                # the arithmetic twin is a live invariant check — log
-                # loudly and continue on the observed values (a bare
-                # assert vanished under -O and aborted the whole crawl
-                # on a driver-side bookkeeping slip, round-2 ADVICE)
-                log.error(
-                    "frontier arithmetic (rows=%d pending=%d) != observed "
-                    "(rows=%d pending=%d) — engine bookkeeping bug, "
-                    "continuing on observed",
-                    n_seen, n_pending, obs_rows, obs_pending,
-                )
-                n_seen, n_pending = obs_rows, obs_pending
-            if old_frontier is not None:
-                old_frontier.unpersist()
-                old_frontier = None
-
         try:
             while True:
                 meta = self.store.read_crawl_meta(crawl_id)
                 if meta["status"] == "cancelling":
-                    _resolve_counts()
-                    self._cancel_wave(crawl_id, wave)
+                    with self._wave_group(crawl_id, wave):
+                        self._cancel_wave(crawl_id, wave)
                     meta["status"] = "cancelled"
                     self.store.write_crawl_meta(meta)
                     if meta.get("is_fleet"):  # members follow the fleet
@@ -479,10 +452,9 @@ class CrawlEngine:
                 # with each wave's own deltas — per-wave I/O stays O(wave),
                 # not O(crawl) (the in-memory twin of Iceberg merge-on-read)
                 if frontier is None:
-                    frontier, count_fn = self._prepare_frontier(
+                    frontier, n_seen, n_pending = self._prepare_frontier(
                         self.store.frontier(self.spark, crawl_id)
                     )
-                    n_seen, n_pending = count_fn()  # no overlap available yet
                     if last_wave and bloom_pays:
                         # resume: reuse persisted per-bucket state only if
                         # its manifest matches the last committed wave.
@@ -506,10 +478,6 @@ class CrawlEngine:
                     )
 
                 if n_pending == 0:
-                    # confirm the arithmetic with the observed count before
-                    # declaring completion (resolves the deferred job)
-                    _resolve_counts()
-                if n_pending == 0:
                     meta["status"] = "completed"
                     self.store.write_crawl_meta(meta)
                     if meta.get("is_fleet"):  # batch member completion
@@ -532,27 +500,30 @@ class CrawlEngine:
                     and bloom_pays
                     and n_seen >= self.cfg.bloom_min_seen
                 )
-                if use_bloom and (bloom is None or bloom.needs_rebuild(n_seen)):
-                    _resolve_counts()  # the build job scans the frontier
-                    seen_hashed = frontier.select(
-                        F.xxhash64("crawl_id", "full_key").alias("url_hash")
+                with self._wave_group(crawl_id, wave):
+                    if use_bloom and (bloom is None or bloom.needs_rebuild(n_seen)):
+                        seen_hashed = frontier.select(
+                            F.xxhash64("crawl_id", "full_key").alias("url_hash")
+                        )
+                        # state as of the last committed wave (= wave-1)
+                        bloom = BloomState.build(
+                            seen_hashed, self.cfg, n_seen, bloom_root, wave - 1
+                        )
+                    elif not use_bloom:
+                        bloom = None
+                    eligible = self._eligible(
+                        frontier, n_pending, exclude_crawl_ids=cancel_ids
                     )
-                    # state as of the last committed wave (= wave-1)
-                    bloom = BloomState.build(
-                        seen_hashed, self.cfg, n_seen, bloom_root, wave - 1
+                    result, (nxt, obs_rows, obs_pending) = self._run_wave(
+                        crawl_id, wave, eligible, seen=frontier, is_root=False,
+                        bloom=bloom, cancel_ids=cancel_ids,
+                        prev_frontier=frontier,
+                        checkpoint=(wave % self.cfg.compact_every_waves == 0),
                     )
-                elif not use_bloom:
-                    bloom = None
-                eligible = self._eligible(
-                    frontier, n_pending, exclude_crawl_ids=cancel_ids
-                )
-                result, nxt = self._run_wave(
-                    crawl_id, wave, eligible, seen=frontier, is_root=False,
-                    bloom=bloom, cancel_ids=cancel_ids,
-                    prev_frontier=frontier,
-                    checkpoint=(wave % self.cfg.compact_every_waves == 0),
-                    frontier_resolve=_resolve_counts, pool=pool,
-                )
+                # the next frontier is materialized; the superseded cache
+                # fed its lineage and is released now
+                frontier.unpersist()
+                frontier = nxt
                 if cancel_ids:  # the wave committed their CANCELLED rows
                     # re-read + targeted mutation, NOT a write-back of the
                     # pre-wave `reg` snapshot: a member cancelled DURING
@@ -566,9 +537,9 @@ class CrawlEngine:
                                 r[m]["status"] = "cancelled"
 
                     self.store.update_member_metas(crawl_id, _mark_cancelled)
-                # pending/seen bookkeeping by WAVE ARITHMETIC (validated
-                # against the merge job's observed counts when the deferred
-                # count resolves): every eligible parent left PENDING except
+                # pending/seen bookkeeping by WAVE ARITHMETIC, checked
+                # against the counts observed while materializing the next
+                # frontier: every eligible parent left PENDING except
                 # retries; children are born PENDING unless leaves;
                 # politeness-deferred parents stayed PENDING untouched;
                 # cancelled members' rows left PENDING.
@@ -578,6 +549,19 @@ class CrawlEngine:
                     + result.children_pending
                 )
                 n_seen = n_seen + result.children
+                if obs_pending != n_pending or obs_rows != n_seen:
+                    # the observed counts are authoritative; the arithmetic
+                    # twin is a live invariant check — log loudly and
+                    # continue on the observed values (a bare assert
+                    # vanished under -O and aborted the whole crawl on a
+                    # driver-side bookkeeping slip, round-2 ADVICE)
+                    log.error(
+                        "frontier arithmetic (rows=%d pending=%d) != observed "
+                        "(rows=%d pending=%d) — engine bookkeeping bug, "
+                        "continuing on observed",
+                        n_seen, n_pending, obs_rows, obs_pending,
+                    )
+                    n_seen, n_pending = obs_rows, obs_pending
                 # adaptive payoff gate: judge on a measured wave (sample
                 # floor guards tiny tail waves from noise-tripping it)
                 if (
@@ -603,30 +587,19 @@ class CrawlEngine:
                         meta["bloom_gate_tripped"] = wave
                         self.store.write_crawl_meta(meta)
                         shutil.rmtree(bloom_root, ignore_errors=True)
-                # the folded next frontier was constructed INSIDE the wave;
-                # its materialization job is still running on the pool and
-                # resolves lazily (next wave's first action / compaction /
-                # completion) — the job overlaps this driver bookkeeping
-                # AND the next wave's plan construction
-                old_frontier = frontier
-                frontier, count_fut = nxt
                 if (
                     self.cfg.store_compact_every_waves
                     and wave % self.cfg.store_compact_every_waves == 0
                 ):
-                    # resolve first: the pending count job reads the wave
-                    # files compaction is about to fold away
-                    _resolve_counts()
                     if wave % self.cfg.compact_every_waves != 0:
                         # the persisted frontier's LINEAGE still references
                         # the wave delta files compact() is about to GC —
                         # on cache eviction (or executor loss at the
                         # cluster design point) recomputation would hit
                         # FileNotFoundError mid-crawl (round-4 ADVICE).
-                        # Checkpoint waves are already lineage-free (the
-                        # lazy localCheckpoint materialized under the count
-                        # job _resolve_counts just awaited); for the rest,
-                        # truncate eagerly before deleting the files.
+                        # Checkpoint waves are already lineage-free (their
+                        # frontier was materialized as a localCheckpoint);
+                        # for the rest, truncate before deleting the files.
                         ckpt = frontier.localCheckpoint(eager=True)
                         frontier.unpersist()
                         frontier = ckpt
@@ -634,19 +607,28 @@ class CrawlEngine:
                 wave += 1
                 waves_done += 1
         finally:
-            try:
-                if count_fut is not None:
-                    count_fut.result()
-            except Exception:  # noqa: BLE001 — best-effort drain
-                pass
-            for df in (old_frontier, frontier):
-                if df is not None:
-                    df.unpersist()
-            pool.shutdown(wait=False)
+            if frontier is not None:
+                frontier.unpersist()
 
     # ------------------------------------------------------------------
     # wave internals
     # ------------------------------------------------------------------
+    @contextmanager
+    def _wave_group(self, crawl_id: str, wave: int):
+        """Run the block's Spark jobs in the wave's job group (restoring
+        the caller's group after), so the commit summary can list them."""
+        sc = self.spark.sparkContext
+        prev = sc.getLocalProperty(_JOB_GROUP)
+        sc.setLocalProperty(_JOB_GROUP, _wave_group_id(crawl_id, wave))
+        try:
+            yield
+        finally:
+            sc.setLocalProperty(_JOB_GROUP, prev)
+
+    def _wave_job_ids(self, crawl_id: str, wave: int) -> list[int]:
+        tracker = self.spark.sparkContext.statusTracker()
+        return sorted(tracker.getJobIdsForGroup(_wave_group_id(crawl_id, wave)))
+
     def _docs_present(self, keys: list[str]) -> set[str]:
         """ONE existence-check job for any number of root keys — the
         single-crawl path shares it with the fleet path (round 3 ran a
@@ -658,46 +640,30 @@ class CrawlEngine:
             .collect()
         }
 
-    def _prepare_frontier(self, df: DataFrame, checkpoint: bool = False):
-        """Construct the materialized-frontier DataFrame synchronously (no
-        Spark job) and return ``(df2, count_fn)``: ``count_fn()`` runs ONE
-        job that fills df2's storage and returns (n_rows, n_pending).
-
-        The split lets the caller run the materialization on a pool
-        thread while the driver plans the next wave — the counts ride the
-        same cache-fill action as observed metrics (checkpoint waves pay
-        one cheap agg over the just-materialized rows instead —
-        localCheckpoint does not surface observed metrics reliably)."""
+    def _prepare_frontier(
+        self, df: DataFrame, checkpoint: bool = False
+    ) -> tuple[DataFrame, int, int]:
+        """Materialize the frontier in ONE job and return ``(df2, n_rows,
+        n_pending)``.  The counts ride that job: an Observation under the
+        cache, or on checkpoint waves one agg over the checkpointed rows
+        (localCheckpoint does not surface observed metrics reliably)."""
         if checkpoint:
             # truncate the join/union lineage chain every few waves
             # (driver-side plan growth); content is identical and
             # already deterministic, so checkpointing is safe.  Lazy:
-            # the blocks materialize under count_fn's job.
+            # the blocks materialize under the agg job.
             df2 = df.localCheckpoint(eager=False)
-
-            def count_fn() -> tuple[int, int]:
-                row = df2.agg(
-                    F.count(F.lit(1)).alias("n_rows"),
-                    F.sum(
-                        F.when(F.col("status") == PENDING, 1).otherwise(0)
-                    ).alias("n_pending"),
-                ).first()
-                return int(row["n_rows"]), int(row["n_pending"] or 0)
-
-            return df2, count_fn
+            row = df2.agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.count_if(F.col("status") == PENDING).alias("n_pending"),
+            ).first()
+            return df2, int(row["n_rows"]), int(row["n_pending"])
         obs = Observation()
         df2 = df.observe(
-            obs,
-            F.sum(F.when(F.col("status") == PENDING, 1).otherwise(0)).alias(
-                "n_pending"
-            ),
+            obs, F.count_if(F.col("status") == PENDING).alias("n_pending")
         ).persist()
-
-        def count_fn() -> tuple[int, int]:
-            n_rows = df2.count()
-            return n_rows, int(obs.get["n_pending"] or 0)
-
-        return df2, count_fn
+        n_rows = df2.count()
+        return df2, n_rows, int(obs.get["n_pending"])
 
     def _eligible(
         self,
@@ -742,16 +708,11 @@ class CrawlEngine:
         cancel_ids: list[str] | None = None,
         prev_frontier: DataFrame | None = None,
         checkpoint: bool = False,
-        frontier_resolve=None,  # callable: block on the frontier count job
-        pool=None,  # run_crawl's ThreadPoolExecutor (wave 0: none needed)
-    ) -> tuple[WaveResult, tuple | None]:
-        """Returns (WaveResult, (next_frontier_df, count_future) | None).
-
-        The next frontier's materialization job is SUBMITTED here but not
-        awaited — it overlaps this wave's commit tail and the caller's
-        next-wave planning; ``frontier_resolve`` (this wave's own frontier
-        count, deferred the same way by the previous wave) is invoked just
-        before the first Spark action so planning above never blocks."""
+    ) -> tuple[WaveResult, tuple[DataFrame, int, int] | None]:
+        """Run and commit one wave; every Spark action runs on the calling
+        thread.  Returns the WaveResult and, when ``prev_frontier`` is
+        given, the materialized next frontier as ``_prepare_frontier``
+        returns it."""
         t0 = time.time()
         cfg = self.cfg
 
@@ -865,8 +826,6 @@ class CrawlEngine:
                 # An eager localCheckpoint pins exactly one computation of
                 # the pipeline AND of the verdict UDF, and keeps every
                 # downstream plan shallow.
-                if frontier_resolve is not None:
-                    frontier_resolve()  # first Spark action of the wave
 
                 # candidates co-partitioned with the per-bucket bitmap
                 # FILES: each task holds one bucket's bitmap
@@ -925,13 +884,27 @@ class CrawlEngine:
         cand = cand.withColumn("admitted", admitted)
 
         # ---- deterministic first-discoverer tie-break (J3/ST6, §3.4) ----
-        cand = cand.withColumn(
-            "rn", F.row_number().over(self._x["winner_w"])
-        ).persist()
-
-        winners = cand.filter(
-            F.col("is_fresh") & F.col("admitted") & (F.col("rn") == 1)
+        # The wave totals are observed UNDER the cache: the one job that
+        # fills it (the delta write) reports them, whatever reads it later.
+        f = F.col("is_fresh")
+        won = f & F.col("admitted") & (F.col("rn") == 1)
+        cand_obs = Observation()
+        cand = (
+            cand.withColumn("rn", F.row_number().over(self._x["winner_w"]))
+            .observe(
+                cand_obs,
+                F.coalesce(F.sum("n_raw"), F.lit(0)).alias("n_raw"),
+                F.count_if(f).alias("candidates"),
+                F.count_if(f & ~F.col("admitted")).alias("dns_dropped"),
+                F.count_if(won).alias("children"),
+                F.count_if(  # leaf rule F10 complement
+                    won & (F.col("parent_depth") + 1 < F.col("requested_depth"))
+                ).alias("children_pending"),
+            )
+            .persist()
         )
+
+        winners = cand.filter(won)
         child_depth = F.col("parent_depth") + F.lit(1)
         children = winners.select(
             "crawl_id",
@@ -961,13 +934,10 @@ class CrawlEngine:
 
         # ---- parent status transitions (ST4/P6/U2) ----
         if not is_root:
-            f = F.col("is_fresh")
             pstats = cand.groupBy("crawl_id", "parent_key").agg(
                 F.sum(F.when(f, 1).otherwise(0)).alias("n_cand"),
                 F.sum(F.when(f & ~F.col("admitted"), 1).otherwise(0)).alias("n_bad"),
-                F.sum(
-                    F.when(f & F.col("admitted") & (F.col("rn") == 1), 1).otherwise(0)
-                ).alias("n_wins"),
+                F.sum(F.when(won, 1).otherwise(0)).alias("n_wins"),
             )
             # attempts increments on EVERY fetch error including 4xx: the
             # reference's validate_job bumps attempts before classifying
@@ -1041,13 +1011,15 @@ class CrawlEngine:
                 cancel_upd if updates is None else updates.unionByName(cancel_upd)
             )
 
-        # ---- metrics pass FIRST: materializes the cand cache at full
-        # parallelism.  The delta write below is coalesced to few files;
-        # if it were the first action, its coalesce would pull the whole
-        # wave pipeline (explode/bloom/window over millions of rows)
-        # through that handful of tasks and serialize the heavy stage —
-        # the cache must be filled by a full-width job first.
-        # Wall time per phase rides the commit summary as ``phase_ms``.
+        # ---- commit the snapshot (S3): ONE delta write, then marker ----
+        # inserts + edges + updates ride a single union job partitioned by
+        # `kind`: one Catalyst analysis and one submission on the serial
+        # driver path.  It is the wave's one action: it fills the
+        # `cand`/`outcomes` caches, and the wave totals come back as the
+        # Observations on them.  Adaptive execution materializes those
+        # caches as their own full-width query stages, so the write's
+        # coalesce narrows only its final file-writing stage.  Wall time
+        # per phase rides the commit summary as ``phase_ms``.
         phase_ms: dict[str, int] = {}
         t_lap = t0
 
@@ -1058,61 +1030,7 @@ class CrawlEngine:
             t_lap = now
 
         lap("plan")
-        if frontier_resolve is not None:
-            frontier_resolve()  # idempotent (bloom path resolved earlier)
-        lap("resolve")
-        f = F.col("is_fresh")
-        part_agg = (
-            cand.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(
-                F.coalesce(F.sum("n_raw"), F.lit(0)).alias("n_raw"),
-                F.sum(F.when(f, 1).otherwise(0)).alias("candidates"),
-                F.sum(F.when(f & ~F.col("admitted"), 1).otherwise(0)).alias(
-                    "dns_dropped"
-                ),
-                F.sum(
-                    F.when(f & F.col("admitted") & (F.col("rn") == 1), 1).otherwise(0)
-                ).alias("children"),
-                F.sum(
-                    F.when(
-                        f
-                        & F.col("admitted")
-                        & (F.col("rn") == 1)
-                        & (F.col("parent_depth") + 1 < F.col("requested_depth")),
-                        1,
-                    ).otherwise(0)
-                ).alias("children_pending"),  # leaf rule F10 complement
-            )
-        )
-
-        # ---- commit the snapshot (S3): ONE delta write, then marker ----
-        # inserts + edges + updates ride a single union job partitioned by
-        # `kind` (round 3 submitted three writes: concurrent via threads,
-        # but three Catalyst analyses + three submissions on the serial
-        # driver path — the per-wave floor that caps pre-saturation
-        # scaling).  All branches read the cached `cand`/`outcomes`
-        # DataFrames the metrics job fills.  Round-6: the coalesced write
-        # job is submitted CONCURRENTLY with the metrics job instead of
-        # after it — FIFO gives the earlier (full-width) metrics job the
-        # cores, so the cache is still filled at full parallelism, and the
-        # write's few encode tasks back-fill the metrics tail instead of
-        # running on an otherwise idle cluster afterwards (~1-2 s/wave).
-        # The submission-order race is closed by waiting until the
-        # scheduler has REGISTERED the metrics job before submitting the
-        # write (a write-first registration would pull the whole wave
-        # pipeline through its 8 coalesce tasks — the round-5 failure
-        # mode this ordering exists to prevent).  Bloom-path state
-        # maintenance runs after the metrics resolve (its delta reads the
-        # then-cached rows), concurrent with the write tail; the next
-        # frontier is folded from the written files and its
-        # materialization job is submitted but NOT awaited — it overlaps
-        # the commit tail here and the caller's next-wave planning.
-        from concurrent.futures import ThreadPoolExecutor
-
-        local_pool = pool is None
-        if local_pool:
-            pool = ThreadPoolExecutor(max_workers=2)
-        mat = None
+        nxt = None
         try:
             delta = self._as_union(children, "inserts").unionByName(
                 self._as_union(edges, "edges")
@@ -1120,42 +1038,11 @@ class CrawlEngine:
             if updates is not None:
                 delta = delta.unionByName(self._as_union(updates, "updates"))
             lap("union_build")
-            st = self.spark.sparkContext.statusTracker()
-            ids0 = set(st.getActiveJobsIds())
-            metrics_fut = pool.submit(part_agg.collect)
-            deadline = time.time() + 5.0
-            while (
-                not metrics_fut.done()
-                and not (set(st.getActiveJobsIds()) - ids0)
-                and time.time() < deadline
-            ):
-                time.sleep(0.002)
-            write_fut = pool.submit(
-                self.store.write_delta_union, delta, crawl_id, wave
-            )
-            part_rows = metrics_fut.result()
-            lap("metrics_job")
-            raw_total = sum(int(r["n_raw"]) for r in part_rows)
-            candidates = sum(int(r["candidates"]) for r in part_rows)
-            dns_dropped = sum(int(r["dns_dropped"]) for r in part_rows)
-            n_children = sum(int(r["children"]) for r in part_rows)
-            n_children_pending = sum(
-                int(r["children_pending"]) for r in part_rows
-            )
-            if bloom is not None:
-                # O(wave) incremental maintenance: OR this wave's insert
-                # keys into the state — a bucket-partitioned job writes
-                # only the touched buckets' files + a new manifest.  Runs
-                # on this thread while the union write runs on the pool.
-                bloom.update(
-                    children.select(
-                        F.xxhash64("crawl_id", "full_key").alias("url_hash")
-                    ),
-                    wave,
-                )
-            lap("bloom_upd")
-            write_fut.result()
-            lap("write_wait")
+            self.store.write_delta_union(delta, crawl_id, wave)
+            lap("write")
+            co = cand_obs.get
+            raw_total, candidates = int(co["n_raw"]), int(co["candidates"])
+            dns_dropped, n_children = int(co["dns_dropped"]), int(co["children"])
             if upd_obs is not None:
                 og = upd_obs.get
                 fetched, ok = int(og["fetched"]), int(og["ok"])
@@ -1165,34 +1052,34 @@ class CrawlEngine:
                 fetched, ok, timeouts, n_failed = root_fetched, root_fetched, 0, 0
                 retries = 0
             n_cancelled = int(cancel_obs.get["n_cancelled"]) if cancel_obs else 0
+            if bloom is not None:
+                # O(wave) incremental maintenance: OR this wave's insert
+                # keys into the state — a bucket-partitioned job writes
+                # only the touched buckets' files + a new manifest.  It
+                # reads the inserts from the `cand` cache the write filled.
+                bloom.update(
+                    children.select(
+                        F.xxhash64("crawl_id", "full_key").alias("url_hash")
+                    ),
+                    wave,
+                )
+            lap("bloom_upd")
             if prev_frontier is not None:
                 # fold the next frontier from the files just written
                 # (linear lineage: prev appears ONCE + stable file scans —
                 # an in-memory fold through the wave pipeline references
                 # prev in three branches and the plan grows 3^waves, OOM
-                # by wave ~6); its one-job materialization starts now and
-                # resolves lazily in the caller.
+                # by wave ~6) and materialize it.
                 fold = self._fold_frontier(prev_frontier, crawl_id, wave)
-                next_df, count_fn = self._prepare_frontier(fold, checkpoint)
-                mat = (next_df, pool.submit(count_fn))
-            lap("obs_fold")
+                nxt = self._prepare_frontier(fold, checkpoint)
+            lap("fold")
 
             elapsed_ms = int((time.time() - t0) * 1000)
-            metrics_rows = [
-                (
-                    crawl_id, wave, -1, fetched, ok, n_failed, timeouts,
-                    candidates, raw_total - candidates, dns_dropped, n_children,
-                    elapsed_ms,
-                )
-            ] + [
-                (
-                    crawl_id, wave, int(r["partition_id"]), 0, 0, 0, 0,
-                    int(r["candidates"]), 0, int(r["dns_dropped"]),
-                    int(r["children"]), 0,
-                )
-                for r in part_rows
-            ]
-            self.store.write_metrics_rows(metrics_rows, crawl_id, wave)
+            total_row = (
+                crawl_id, wave, -1, fetched, ok, n_failed, timeouts, candidates,
+                raw_total - candidates, dns_dropped, n_children, elapsed_ms,
+            )
+            self.store.write_metrics_rows([total_row], crawl_id, wave)
 
             result = WaveResult(
                 wave=wave,
@@ -1204,25 +1091,26 @@ class CrawlEngine:
                 dedup_dropped=raw_total - candidates,
                 dns_dropped=dns_dropped,
                 children=n_children,
-                pending_after=-1,
                 elapsed_ms=elapsed_ms,
                 parent_retries=retries,
-                children_pending=n_children_pending,
+                children_pending=int(co["children_pending"]),
                 cancelled=n_cancelled,
                 bloom_candidates=bloom_candidates,
                 bloom_maybe=bloom_maybe,
             )
             self.store.commit_wave(
-                crawl_id, wave, {**result.__dict__, "phase_ms": phase_ms}
+                crawl_id,
+                wave,
+                {
+                    **result.__dict__,
+                    "phase_ms": phase_ms,
+                    "job_ids": self._wave_job_ids(crawl_id, wave),
+                },
             )
         finally:
-            # always reached (round-3 ADVICE: a raise between pool
-            # creation and the success-path shutdown leaked the pool)
             outcomes.unpersist()
             cand.unpersist()
-            if local_pool:
-                pool.shutdown(wait=False)
-        return result, mat
+        return result, nxt
 
     def _as_union(self, df: DataFrame, kind: str) -> DataFrame:
         """Lift one delta DataFrame onto the union superset schema with a
@@ -1294,4 +1182,8 @@ class CrawlEngine:
             F.lit(wave).alias("wave"),
         )
         self.store.write_delta(updates, crawl_id, wave, "updates")
-        self.store.commit_wave(crawl_id, wave, {"cancelled_wave": True})
+        self.store.commit_wave(
+            crawl_id,
+            wave,
+            {"cancelled_wave": True, "job_ids": self._wave_job_ids(crawl_id, wave)},
+        )

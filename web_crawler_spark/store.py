@@ -81,11 +81,14 @@ EDGES_SCHEMA = T.StructType(
     ]
 )
 
+# one row per committed wave: its totals.  ``partition_id`` is always -1
+# (the wave-total marker readers filter on); per-task lineage lives in the
+# event log, reached through the ``job_ids`` of the wave's commit summary
 METRICS_SCHEMA = T.StructType(
     [
         T.StructField("crawl_id", T.StringType()),
         T.StructField("wave", T.IntegerType()),
-        T.StructField("partition_id", T.IntegerType()),  # -1 = wave total
+        T.StructField("partition_id", T.IntegerType()),
         T.StructField("fetched", T.LongType()),
         T.StructField("ok", T.LongType()),
         T.StructField("failed", T.LongType()),
@@ -436,8 +439,8 @@ class SnapshotStore:
     def write_metrics_rows(self, rows: list[tuple], crawl_id: str, wave: int) -> None:
         """Driver-side metrics delta write (pyarrow, no Spark job).
 
-        The metrics rows are tiny and already driver-resident; routing
-        them through spark.createDataFrame + a parquet write job costs a
+        The wave's total row is tiny and already driver-resident; routing
+        it through spark.createDataFrame + a parquet write job costs a
         ~5 s single-task stage per wave (profiled: a Python-worker
         round-trip for the pickled local rows).  pyarrow writes the same
         schema directly; readers are unchanged."""

@@ -10,11 +10,10 @@ new wave commits become new micro-batch input files — no server, no push
 loop, any number of concurrent readers.
 
 Exactly-once by construction: markers are written once via atomic rename
-and never rewritten.  The per-partition ``metrics.parquet`` files, by
-contrast, are re-generated under fresh part-file names when a crashed
-wave re-runs, so a file-source stream over them is at-least-once
-(``metrics_stream`` keeps that source for partition-lineage tailing and
-documents the caveat); the progress totals come from the markers.
+and never rewritten.  A wave's ``metrics.parquet`` (one total row), by
+contrast, is written before the marker and re-written when a crashed wave
+re-runs (``metrics_stream`` documents the caveat); the progress totals
+come from the markers.
 
 ``tail_progress`` aggregates per crawl (cumulative fetched/children/
 failed and last wave) into an in-memory sink table the caller can query;
@@ -68,13 +67,13 @@ def commit_stream(spark: SparkSession, store: SnapshotStore) -> DataFrame:
 
 
 def metrics_stream(spark: SparkSession, store: SnapshotStore) -> DataFrame:
-    """Per-partition lineage source (metrics rows per wave x partition).
+    """Wave-totals source: one metrics row per wave (``partition_id``
+    is always -1).
 
-    At-least-once: a wave that crashed between its metrics write and its
-    commit marker is re-run deterministically, but the re-written parquet
-    part files have fresh names, so the file source ingests that wave's
-    rows twice.  Consumers must dedupe by (crawl_id, wave, partition_id)
-    or use ``commit_stream`` (exactly-once) for totals.
+    Commit-unaware: the file source can pick a wave's row up before the
+    wave's commit marker exists; a wave that crashes there re-runs and
+    re-writes the same row.  Consumers dedupe by (crawl_id, wave) or use
+    ``commit_stream`` (exactly-once) for totals.
     """
     pattern = str(store.root / "crawls" / "*" / "wave_*" / "metrics.parquet")
     return (
