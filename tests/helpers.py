@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import time
+
 from web_crawler_spark.corpus import good_seeds  # noqa: F401 — re-export
 from web_crawler_spark.oracle import OracleResult
 from web_crawler_spark.store import SnapshotStore
@@ -42,3 +44,18 @@ def assert_parity(spark, store, crawl_id, oracle_res):
     diffs = {k: (s_nodes[k], o_nodes[k]) for k in o_nodes if s_nodes[k] != o_nodes[k]}
     assert not diffs, f"node attr mismatches: {dict(list(diffs.items())[:5])}"
     assert s_edges == o_edges, f"edge mismatch: {sorted(s_edges ^ o_edges)[:8]}"
+
+
+def stored_rdd_ids(spark) -> set[int]:
+    """Ids of the RDDs that hold blocks in the block manager: caches and
+    local checkpoints alike."""
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def assert_released(spark, before: set[int], timeout_s: float = 5.0) -> None:
+    """Every RDD stored since ``before`` was taken is freed within
+    ``timeout_s`` (unpersisting is asynchronous)."""
+    deadline = time.monotonic() + timeout_s
+    while (leaked := stored_rdd_ids(spark) - before) and time.monotonic() < deadline:
+        time.sleep(0.1)
+    assert not leaked, f"RDDs still stored after the crawl: {sorted(leaked)}"

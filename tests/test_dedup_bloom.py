@@ -11,7 +11,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from tests.helpers import engine_state, good_seeds
+from tests.helpers import assert_released, engine_state, good_seeds, stored_rdd_ids
 from web_crawler_spark.config import CrawlConfig
 from web_crawler_spark.corpus import CorpusParams, build_corpus_py, documents_df_from_py
 from web_crawler_spark.engine import CrawlEngine
@@ -91,11 +91,9 @@ def test_probe_positions_distinct():
 
 
 def test_dedup_buckets_must_be_pow2():
-    from web_crawler_spark.operators.dedup import _require_pow2
-
-    _require_pow2(32)
-    with pytest.raises(ValueError):
-        _require_pow2(12)
+    assert CrawlConfig(dedup_buckets=32).dedup_buckets == 32
+    with pytest.raises(ValueError, match="dedup_buckets"):
+        CrawlConfig(dedup_buckets=12)
 
 
 def test_bloom_sizing_bits_per_key_at_capacity():
@@ -274,7 +272,9 @@ def test_bloom_state_gc_drops_stale_versions(spark, tmp_path):
 def test_bloom_resume_with_persisted_state(spark, tmp_path):
     """Crash/resume across waves with the partition-local bloom forced
     on: resume loads (or safely rebuilds) the file-backed state and the
-    final crawl state matches the no-bloom twin bit-exactly."""
+    final crawl state matches the no-bloom twin bit-exactly.  Both runs
+    free every checkpoint they stored, the bloom waves' flagged
+    candidate sets included."""
     params = CorpusParams(n_docs=80)
     corpus = build_corpus_py(params)
     docs = documents_df_from_py(spark, corpus).cache()
@@ -282,6 +282,8 @@ def test_bloom_resume_with_persisted_state(spark, tmp_path):
     seed = good_seeds(corpus, cfg)[0]
     store = SnapshotStore(tmp_path / "a")
     eng = CrawlEngine(spark, store, docs, cfg)
+    eng.documents.count()  # the corpus caches outlive the crawls
+    before = stored_rdd_ids(spark)
     cid = eng.start_crawl(seed, 3, crawl_id="c")
     eng.run_crawl(cid, max_waves=2)          # stop mid-crawl
     # persisted manifest matches the last committed wave
@@ -289,6 +291,7 @@ def test_bloom_resume_with_persisted_state(spark, tmp_path):
     assert st is not None and st.wave == 2
     eng2 = CrawlEngine(spark, store, docs, cfg)   # fresh engine => resume
     eng2.run_crawl(cid)
+    assert_released(spark, before)
     plain_store = SnapshotStore(tmp_path / "b")
     eng3 = CrawlEngine(
         spark, plain_store, docs, CrawlConfig(use_bloom_prefilter=False)
@@ -350,6 +353,7 @@ def test_bloom_min_cut_frac_validated():
         ({"bloom_distribution": "broadcast"}, "bloom_distribution"),
         ({"bloom_distribution": "partition-local"}, "bloom_distribution"),
         ({"compact_shuffle_keys": True}, "compact_shuffle_keys"),
+        ({"compact_every_waves": 4}, "compact_every_waves"),
     ],
 )
 def test_removed_plan_switches_fail_at_construction(kwargs, field):
@@ -360,8 +364,13 @@ def test_removed_plan_switches_fail_at_construction(kwargs, field):
 
 
 def test_bench_config_shape_constructs():
-    """bench.py passes both switches explicitly, at their surviving values."""
-    cfg = CrawlConfig(bloom_distribution="partition_local", compact_shuffle_keys=False)
+    """bench.py passes the retired switches explicitly, at their surviving
+    values."""
+    cfg = CrawlConfig(
+        bloom_distribution="partition_local",
+        compact_shuffle_keys=False,
+        compact_every_waves=8,
+    )
     assert cfg == CrawlConfig()
 
 

@@ -14,7 +14,14 @@ import logging
 
 import pytest
 
-from tests.helpers import assert_parity, engine_state, good_seeds, oracle_state
+from tests.helpers import (
+    assert_parity,
+    assert_released,
+    engine_state,
+    good_seeds,
+    oracle_state,
+    stored_rdd_ids,
+)
 from web_crawler_spark.config import CrawlConfig
 from web_crawler_spark.corpus import CorpusParams, build_corpus_py, documents_df_from_py
 from web_crawler_spark.engine import CrawlEngine
@@ -43,6 +50,8 @@ def test_parity_depth3(spark, corpus, docs_df, tmp_path, caplog):
     oracle = OracleCrawler(corpus, CFG).crawl(seed, 3, crawl_id="c")
     store = SnapshotStore(tmp_path / "s")
     eng = CrawlEngine(spark, store, docs_df, CFG)
+    eng.documents.count()  # the engine's corpus cache outlives its crawls
+    before = stored_rdd_ids(spark)
     sc = spark.sparkContext
     sc.setLocalProperty("spark.jobGroup.id", "caller-group")
     try:
@@ -54,6 +63,8 @@ def test_parity_depth3(spark, corpus, docs_df, tmp_path, caplog):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert meta["status"] == "completed"
+    # every frontier checkpoint and wave cache the crawl stored is freed
+    assert_released(spark, before)
     # the wave-arithmetic invariant held on every wave
     assert not [
         r for r in caplog.records

@@ -219,13 +219,12 @@ def test_markerless_base_dir_gcd(spark, tmp_path):
 
 def test_compact_safe_with_cache_eviction_mid_run(spark, tmp_path):
     """round-4 ADVICE (medium): store.compact() GCs the wave delta files
-    the live cached frontier's lineage references; if the cache is
-    evicted (executor loss at the cluster design point) recomputation
-    must NOT hit FileNotFoundError.  The engine now truncates lineage
-    (eager localCheckpoint) before compacting on non-checkpoint waves.
-    Simulated by clearing the Spark block-manager cache right after
-    every compaction, with compaction cadence deliberately NOT aligned
-    to the plan-checkpoint cadence."""
+    a frontier's lineage would reference; if a cache is evicted, no later
+    read may recompute from the deleted files (FileNotFoundError).  Every
+    wave's frontier is a local checkpoint, whose lineage reaches no wave
+    file, so compaction needs no truncation of its own.  Simulated by
+    clearing every Spark cache right after each compaction: the crawl
+    must finish in the same state as an uncompacted one."""
     from tests.helpers import engine_state, good_seeds
     from web_crawler_spark.config import CrawlConfig
     from web_crawler_spark.corpus import (
@@ -237,9 +236,7 @@ def test_compact_safe_with_cache_eviction_mid_run(spark, tmp_path):
 
     corpus = build_corpus_py(CorpusParams(n_docs=60))
     docs = documents_df_from_py(spark, corpus).cache()
-    # store-compaction every 2 waves; plan checkpoint never (1000) => the
-    # frontier is a persist()ed DataFrame whose lineage reads wave files
-    cfg = CrawlConfig(store_compact_every_waves=2, compact_every_waves=1000)
+    cfg = CrawlConfig(store_compact_every_waves=2)
     seed = good_seeds(corpus, cfg)[0]
     store = SnapshotStore(tmp_path / "evict")
 
@@ -247,8 +244,8 @@ def test_compact_safe_with_cache_eviction_mid_run(spark, tmp_path):
 
     def compact_then_evict(sess, crawl_id):
         upto = orig_compact(sess, crawl_id)
-        # evict every persisted block: any later action on the frontier
-        # must recompute — from truncated lineage, not the deleted files
+        # evict every cached block: any later read of a cache must
+        # recompute — from the checkpointed frontier, not deleted files
         sess.catalog.clearCache()
         return upto
 

@@ -5,6 +5,9 @@ Defaults mirror the reference's configuration surface
 max_attempts=3, max_dns_depth=5, max_crawl_depth=5.  Politeness / robots /
 bloom knobs are new capabilities required by the north rule (the reference
 has no per-host awareness).
+
+``__post_init__`` rejects every value the wave loop cannot run with, so it
+fails when the config is built, not mid-crawl.
 """
 
 from __future__ import annotations
@@ -32,9 +35,8 @@ class CrawlConfig:
     use_bloom_prefilter: bool = True
     bloom_bits_per_key: int = 16      # ~0.04% FPP with 2 probes
     bloom_num_probes: int = 2
-    # co-partition bucket count for the seen-set state; POWER OF TWO (the
-    # bucket id is the hash's low bits so Spark int64 and numpy uint64
-    # agree bit-exactly).  At 10^10 keys x 16 bits, per-bucket state =
+    # co-partition bucket count for the seen-set state; POWER OF TWO
+    # (checked below).  At 10^10 keys x 16 bits, per-bucket state =
     # 20 GB/n_buckets — size so one bucket's bitmap fits a task comfortably
     # (production: 1024 buckets => ~20 MB/task).
     dedup_buckets: int = 32
@@ -73,7 +75,9 @@ class CrawlConfig:
     # callers that pass it keep constructing.
     compact_shuffle_keys: bool = False
 
-    # snapshot store: plan-lineage checkpoint cadence (in-memory frontier)
+    # every wave's frontier is a local checkpoint, so there is no
+    # plan-lineage checkpoint cadence.  8 is the only accepted value; the
+    # field stays so existing callers that pass it keep constructing.
     compact_every_waves: int = 8
     # physical delta compaction cadence (store.compact: fold committed
     # wave deltas into a consolidated base snapshot + GC the wave dirs —
@@ -96,8 +100,41 @@ class CrawlConfig:
                 "compact_shuffle_keys must be False; the hash-keyed local "
                 "distinct was removed"
             )
+        if self.compact_every_waves != 8:
+            raise ValueError(
+                f"compact_every_waves must be 8 (got "
+                f"{self.compact_every_waves!r}); every wave's frontier is "
+                "checkpointed, the cadence was removed"
+            )
+        # fail at construction, not mid-crawl, on a value the wave loop
+        # cannot run with
         if not 0.0 <= self.bloom_min_cut_frac < 1.0:
             raise ValueError(
                 f"bloom_min_cut_frac must be in [0, 1) "
                 f"(got {self.bloom_min_cut_frac!r})"
+            )
+        n = self.dedup_buckets
+        if n <= 0 or n & (n - 1):
+            raise ValueError(
+                f"dedup_buckets must be a power of two (got {n!r}): the "
+                "bucket id is the hash's low bits so Spark (signed int64) "
+                "and numpy (uint64) agree bit-exactly"
+            )
+        for name in (
+            "max_attempts", "max_crawl_depth", "politeness_salt",
+            "bloom_bits_per_key", "bloom_num_probes",
+        ):
+            if getattr(self, name) < 1:
+                raise ValueError(f"{name} must be >= 1 (got {getattr(self, name)!r})")
+        # host_budget_per_wave=0 would leave every wave with nothing
+        # eligible while rows stay PENDING: run_crawl would commit empty
+        # waves forever
+        for name in ("host_budget_per_wave", "store_compact_every_waves"):
+            value = getattr(self, name)
+            if value is not None and value < 1:
+                raise ValueError(f"{name} must be None or >= 1 (got {value!r})")
+        if not 0 <= self.dns_resolve_permille <= 1000:
+            raise ValueError(
+                f"dns_resolve_permille must be in [0, 1000] "
+                f"(got {self.dns_resolve_permille!r})"
             )

@@ -72,15 +72,6 @@ from ..config import CrawlConfig
 _WORD_BITS = 64
 
 
-def _require_pow2(n_buckets: int) -> None:
-    if n_buckets <= 0 or (n_buckets & (n_buckets - 1)) != 0:
-        raise ValueError(
-            f"dedup_buckets must be a power of two (got {n_buckets}): the "
-            "bucket id is the hash's low bits so Spark (signed int64) and "
-            "numpy (uint64) agree bit-exactly"
-        )
-
-
 def bucket_of_np(h_signed: np.ndarray, n_buckets: int) -> np.ndarray:
     """uint64 bucket id of a signed-int64 hash array (low-bits for pow2)."""
     return (h_signed.astype(np.uint64) % np.uint64(n_buckets)).astype(np.int64)
@@ -245,7 +236,6 @@ class BloomState:
         wave: int,
         bucket_paths: dict[int, str],
     ) -> None:
-        _require_pow2(cfg.dedup_buckets)
         self.root = Path(root)
         self.cfg = cfg
         self.m_bits = m_bits

@@ -436,37 +436,21 @@ class SnapshotStore:
         per_kind = wd / f"{kind}.parquet"
         return per_kind if per_kind.exists() else None
 
-    def write_metrics_rows(self, rows: list[tuple], crawl_id: str, wave: int) -> None:
-        """Driver-side metrics delta write (pyarrow, no Spark job).
+    def write_metrics_row(self, row: tuple, crawl_id: str, wave: int) -> None:
+        """Driver-side write of the wave's total row (pyarrow, no Spark job).
 
-        The wave's total row is tiny and already driver-resident; routing
-        it through spark.createDataFrame + a parquet write job costs a
-        ~5 s single-task stage per wave (profiled: a Python-worker
-        round-trip for the pickled local rows).  pyarrow writes the same
-        schema directly; readers are unchanged."""
+        The row is tiny and already driver-resident; routing it through
+        spark.createDataFrame + a parquet write job costs a ~5 s
+        single-task stage per wave (profiled: a Python-worker round-trip
+        for the pickled local rows).  pyarrow writes the same schema
+        directly; readers are unchanged."""
         import pyarrow as pa  # noqa: PLC0415
         import pyarrow.parquet as pq  # noqa: PLC0415
+        from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
 
-        arrow_schema = pa.schema(
-            [
-                ("crawl_id", pa.string()),
-                ("wave", pa.int32()),
-                ("partition_id", pa.int32()),
-                ("fetched", pa.int64()),
-                ("ok", pa.int64()),
-                ("failed", pa.int64()),
-                ("timeouts", pa.int64()),
-                ("candidates", pa.int64()),
-                ("dedup_dropped", pa.int64()),
-                ("dns_dropped", pa.int64()),
-                ("children", pa.int64()),
-                ("elapsed_ms", pa.int64()),
-            ]
-        )
-        cols = list(zip(*rows)) if rows else [[] for _ in arrow_schema]
-        table = pa.Table.from_arrays(
-            [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
-            schema=arrow_schema,
+        table = pa.Table.from_pylist(
+            [dict(zip(METRICS_SCHEMA.names, row))],
+            schema=to_arrow_schema(METRICS_SCHEMA),
         )
         d = self.wave_dir(crawl_id, wave)
         d.mkdir(parents=True, exist_ok=True)

@@ -10,10 +10,7 @@ new wave commits become new micro-batch input files — no server, no push
 loop, any number of concurrent readers.
 
 Exactly-once by construction: markers are written once via atomic rename
-and never rewritten.  A wave's ``metrics.parquet`` (one total row), by
-contrast, is written before the marker and re-written when a crashed wave
-re-runs (``metrics_stream`` documents the caveat); the progress totals
-come from the markers.
+and never rewritten.
 
 ``tail_progress`` aggregates per crawl (cumulative fetched/children/
 failed and last wave) into an in-memory sink table the caller can query;
@@ -28,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..store import METRICS_SCHEMA, SnapshotStore
+from ..store import SnapshotStore
 
 # _COMMITTED marker payload (store.commit_wave): WaveResult fields +
 # identity; cancel-wave markers carry only identity + cancelled_wave
@@ -63,23 +60,6 @@ def commit_stream(spark: SparkSession, store: SnapshotStore) -> DataFrame:
         # so progress is monotone per crawl
         .option("maxFilesPerTrigger", 64)
         .json(pattern)
-    )
-
-
-def metrics_stream(spark: SparkSession, store: SnapshotStore) -> DataFrame:
-    """Wave-totals source: one metrics row per wave (``partition_id``
-    is always -1).
-
-    Commit-unaware: the file source can pick a wave's row up before the
-    wave's commit marker exists; a wave that crashes there re-runs and
-    re-writes the same row.  Consumers dedupe by (crawl_id, wave) or use
-    ``commit_stream`` (exactly-once) for totals.
-    """
-    pattern = str(store.root / "crawls" / "*" / "wave_*" / "metrics.parquet")
-    return (
-        spark.readStream.schema(METRICS_SCHEMA)
-        .option("maxFilesPerTrigger", 64)
-        .parquet(pattern)
     )
 
 
