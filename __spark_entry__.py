@@ -537,6 +537,7 @@ def q_crawl_bfs_demo(spark, sf_dir):
     seed = good_seeds(corpus, cfg, limit=1)[0]
     cid = eng.start_crawl(seed, CRAWL_DEMO["depth"], crawl_id="demo")
     eng.run_crawl(cid)
+    eng.close()
     return store.frontier(spark, cid).select(
         "full_key", "depth", "status", "attempts", "wave", "domain"
     )

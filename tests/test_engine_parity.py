@@ -49,9 +49,8 @@ def test_parity_depth3(spark, corpus, docs_df, tmp_path, caplog):
     seed = good_seeds(corpus, CFG)[0]
     oracle = OracleCrawler(corpus, CFG).crawl(seed, 3, crawl_id="c")
     store = SnapshotStore(tmp_path / "s")
-    eng = CrawlEngine(spark, store, docs_df, CFG)
-    eng.documents.count()  # the engine's corpus cache outlives its crawls
     before = stored_rdd_ids(spark)
+    eng = CrawlEngine(spark, store, docs_df, CFG)
     sc = spark.sparkContext
     sc.setLocalProperty("spark.jobGroup.id", "caller-group")
     try:
@@ -63,7 +62,9 @@ def test_parity_depth3(spark, corpus, docs_df, tmp_path, caplog):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert meta["status"] == "completed"
-    # every frontier checkpoint and wave cache the crawl stored is freed
+    # every frontier checkpoint and wave cache the crawl stored is freed,
+    # and so is the engine's corpus copy once the engine is closed
+    eng.close()
     assert_released(spark, before)
     # the wave-arithmetic invariant held on every wave
     assert not [
@@ -153,6 +154,25 @@ def test_parity_cancellation(spark, corpus, docs_df, tmp_path):
     assert_parity(spark, store, cid, oracle)
 
 
+def test_cancel_with_nothing_pending(spark, corpus, docs_df, tmp_path):
+    """A depth-1 crawl has no PENDING row after wave 0; cancelled before
+    run_crawl, it still ends 'cancelled' (the oracle cancels before its
+    empty-frontier check too) after one empty cancel wave."""
+    seed = good_seeds(corpus, CFG)[0]
+    oracle = OracleCrawler(corpus, CFG).crawl(
+        seed, 1, crawl_id="c", cancel_after_wave=0
+    )
+    assert oracle.crawl_status == "cancelled"
+    store = SnapshotStore(tmp_path / "s")
+    eng = CrawlEngine(spark, store, docs_df, CFG)
+    cid = eng.start_crawl(seed, 1, crawl_id="c")
+    eng.cancel_crawl(cid)
+    assert eng.run_crawl(cid)["status"] == "cancelled"
+    assert store.committed_waves(cid) == [0, 1]
+    assert store.wave_summary(cid, 1)["fetched"] == 0
+    assert_parity(spark, store, cid, oracle)
+
+
 def test_resume_equals_uninterrupted(spark, corpus, docs_df, tmp_path):
     """Stop after each committed wave, resume with a fresh engine+store
     handle: final state identical to the one-shot run (ST2/ST3)."""
@@ -184,10 +204,10 @@ def test_resume_drops_uncommitted_wave(spark, corpus, docs_df, tmp_path):
     cid = eng.start_crawl(seed, 3, crawl_id="c")
     eng.run_crawl(cid, max_waves=1)
     committed = store.committed_waves(cid)
-    # simulate a crash mid-wave-2: directory exists, no _COMMITTED marker
-    fake = store.wave_dir(cid, committed[-1] + 1)
-    (fake / "inserts.parquet").mkdir(parents=True)
-    (fake / "inserts.parquet" / "part-garbage.parquet").write_bytes(b"not parquet")
+    # simulate a crash mid-wave-2: directory exists, no commit.json marker
+    fake = store.wave_dir(cid, committed[-1] + 1) / "delta.parquet" / "kind=inserts"
+    fake.mkdir(parents=True)
+    (fake / "part-garbage.parquet").write_bytes(b"not parquet")
     assert store.committed_waves(cid) == committed  # invisible to readers
     eng.run_crawl(cid)
     oracle = OracleCrawler(corpus, CFG).crawl(seed, 3, crawl_id="c")
@@ -320,3 +340,50 @@ def test_fleet_politeness_parity(spark, corpus, docs_df, tmp_path):
         s_nodes, s_edges = _fleet_member_state(spark, store, fid, members[i])
         o_nodes, o_edges = oracle_state(oracle)
         assert s_nodes == o_nodes and s_edges == o_edges, f"member {i}"
+
+
+def test_fleet_cancellation(spark, corpus, docs_df, tmp_path):
+    """Cancelling a whole fleet: one more wave, run even under
+    ``max_waves=0``, flips every member's PENDING rows to CANCELLED.  The
+    fleet and its live members end 'cancelled', each member equal to its
+    own oracle cancelled after the same wave; a member whose root failed
+    stays 'failed'."""
+    seeds = good_seeds(corpus, CFG)[:2]
+    store = SnapshotStore(tmp_path / "s")
+    eng = CrawlEngine(spark, store, docs_df, CFG)
+    fid = eng.start_fleet(seeds + ["HTTPS://NO-SUCH.BASE-9999.TEST"], 4, fleet_id="fx")
+    members = store.read_crawl_meta(fid)["members"]
+    eng.run_crawl(fid, max_waves=1)
+    eng.cancel_crawl(fid)
+    assert eng.run_crawl(fid, max_waves=0)["status"] == "cancelled"
+    assert store.read_crawl_meta(members[2])["status"] == "failed"
+    for i, seed in enumerate(seeds):
+        assert store.read_crawl_meta(members[i])["status"] == "cancelled"
+        oracle = OracleCrawler(corpus, CFG).crawl(
+            seed, 4, crawl_id=members[i], cancel_after_wave=1
+        )
+        s_nodes, s_edges = _fleet_member_state(spark, store, fid, members[i])
+        assert all(v[3] != "PENDING" for v in s_nodes.values()), f"member {i}"
+        assert (s_nodes, s_edges) == oracle_state(oracle), f"member {i}"
+
+
+def test_fleet_cancel_only_pending_member(spark, corpus, docs_df, tmp_path):
+    """Cancelling the only member with PENDING rows leaves a wave with no
+    fetched parent: its totals are zero, not null, the member's rows flip
+    to CANCELLED, and the fleet then completes."""
+    seed = good_seeds(corpus, CFG)[0]
+    store = SnapshotStore(tmp_path / "s")
+    eng = CrawlEngine(spark, store, docs_df, CFG)
+    fid = eng.start_fleet([seed], 4, fleet_id="f1")
+    [member] = store.read_crawl_meta(fid)["members"]
+    eng.run_crawl(fid, max_waves=1)
+    eng.cancel_crawl(member)
+    assert eng.run_crawl(fid)["status"] == "completed"
+    assert store.read_crawl_meta(member)["status"] == "cancelled"
+    summary = store.wave_summary(fid, 2)
+    assert (summary["fetched"], summary["ok"], summary["parent_retries"]) == (0, 0, 0)
+    assert summary["cancelled"] > 0
+    oracle = OracleCrawler(corpus, CFG).crawl(
+        seed, 4, crawl_id=member, cancel_after_wave=1
+    )
+    assert _fleet_member_state(spark, store, fid, member) == oracle_state(oracle)

@@ -81,9 +81,9 @@ def test_engine_equals_oracle_random_combo(spark, tmp_path, monkeypatch, idx):
     seed = seeds[0]
     oracle = OracleCrawler(corpus, cfg).crawl(seed, depth, crawl_id="c")
     docs = documents_df_from_py(spark, corpus).cache()
+    store = SnapshotStore(tmp_path / "s")
+    eng = CrawlEngine(spark, store, docs, cfg)
     try:
-        store = SnapshotStore(tmp_path / "s")
-        eng = CrawlEngine(spark, store, docs, cfg)
         cid = eng.start_crawl(seed, depth, crawl_id="c")
         meta = eng.run_crawl(cid)
         assert meta["status"] == "completed", (idx, meta)
@@ -99,4 +99,5 @@ def test_engine_equals_oracle_random_combo(spark, tmp_path, monkeypatch, idx):
         }
         assert m == {om["wave"]: om["fetched"] for om in oracle.wave_metrics}, idx
     finally:
+        eng.close()
         docs.unpersist()

@@ -3,11 +3,18 @@ multi-crawl reads, meta atomicity."""
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 from web_crawler_spark.store import (
     FRONTIER_SCHEMA,
     UPDATES_SCHEMA,
     SnapshotStore,
 )
+
+
+def _write(store, df, crawl_id, wave, kind):
+    """Write one ``kind`` delta the way a wave writes all of its deltas."""
+    store.write_delta_union(df.withColumn("kind", F.lit(kind)), crawl_id, wave)
 
 
 def _frontier_row(cid, h, key, status="PENDING", attempts=0, wave=0):
@@ -22,14 +29,14 @@ def test_merge_on_read_latest_update_wins(spark, tmp_path):
         [_frontier_row("c", 1, "HTTPS://A.TEST"), _frontier_row("c", 2, "HTTPS://B.TEST")],
         FRONTIER_SCHEMA,
     )
-    store.write_delta(ins, "c", 0, "inserts")
+    _write(store, ins, "c", 0, "inserts")
     store.commit_wave("c", 0, {})
     # wave 1: A -> PENDING attempts=1 ; wave 2: A -> COMPLETED
     u1 = spark.createDataFrame([("c", 1, "HTTPS://A.TEST", "PENDING", 1, 1)], UPDATES_SCHEMA)
-    store.write_delta(u1, "c", 1, "updates")
+    _write(store, u1, "c", 1, "updates")
     store.commit_wave("c", 1, {})
     u2 = spark.createDataFrame([("c", 1, "HTTPS://A.TEST", "COMPLETED", 1, 2)], UPDATES_SCHEMA)
-    store.write_delta(u2, "c", 2, "updates")
+    _write(store, u2, "c", 2, "updates")
     store.commit_wave("c", 2, {})
 
     rows = {r.full_key: (r.status, r.attempts) for r in store.frontier(spark, "c").collect()}
@@ -43,11 +50,11 @@ def test_uncommitted_wave_invisible_and_cleaned(spark, tmp_path):
     store = SnapshotStore(tmp_path)
     store.write_crawl_meta({"crawl_id": "c", "status": "running"})
     ins = spark.createDataFrame([_frontier_row("c", 1, "HTTPS://A.TEST")], FRONTIER_SCHEMA)
-    store.write_delta(ins, "c", 0, "inserts")
+    _write(store, ins, "c", 0, "inserts")
     store.commit_wave("c", 0, {})
     # wave 1 written but NOT committed
     ins2 = spark.createDataFrame([_frontier_row("c", 2, "HTTPS://B.TEST")], FRONTIER_SCHEMA)
-    store.write_delta(ins2, "c", 1, "inserts")
+    _write(store, ins2, "c", 1, "inserts")
     assert store.committed_waves("c") == [0]
     assert store.frontier(spark, "c").count() == 1
     dropped = store.clean_uncommitted("c")
@@ -62,7 +69,7 @@ def test_frontier_all_unions_crawls(spark, tmp_path):
         ins = spark.createDataFrame(
             [_frontier_row(cid, h, f"HTTPS://{cid.upper()}.TEST")], FRONTIER_SCHEMA
         )
-        store.write_delta(ins, cid, 0, "inserts")
+        _write(store, ins, cid, 0, "inserts")
         store.commit_wave(cid, 0, {})
     assert store.frontier_all(spark).count() == 2
     assert store.list_crawls() == ["c1", "c2"]
@@ -74,7 +81,7 @@ def test_meta_roundtrip_and_summary(spark, tmp_path):
     store.write_crawl_meta(meta)
     assert store.read_crawl_meta("c") == meta
     ins = spark.createDataFrame([], FRONTIER_SCHEMA)
-    store.write_delta(ins, "c", 0, "inserts")
+    _write(store, ins, "c", 0, "inserts")
     store.commit_wave("c", 0, {"children": 0})
     assert store.wave_summary("c", 0)["children"] == 0
 
@@ -90,12 +97,12 @@ def test_compact_preserves_state_and_gcs_wave_dirs(spark, tmp_path):
         [_frontier_row("c", 1, "HTTPS://A.TEST"), _frontier_row("c", 2, "HTTPS://B.TEST")],
         FRONTIER_SCHEMA,
     )
-    store.write_delta(ins, "c", 0, "inserts")
+    _write(store, ins, "c", 0, "inserts")
     store.commit_wave("c", 0, {})
     u1 = spark.createDataFrame(
         [("c", 1, "HTTPS://A.TEST", "COMPLETED", 1, 1)], UPDATES_SCHEMA
     )
-    store.write_delta(u1, "c", 1, "updates")
+    _write(store, u1, "c", 1, "updates")
     store.commit_wave("c", 1, {})
     before = {
         r.full_key: (r.status, r.attempts, r.wave)
@@ -120,7 +127,7 @@ def test_compact_preserves_state_and_gcs_wave_dirs(spark, tmp_path):
     u2 = spark.createDataFrame(
         [("c", 2, "HTTPS://B.TEST", "FAILED", 3, 2)], UPDATES_SCHEMA
     )
-    store.write_delta(u2, "c", 2, "updates")
+    _write(store, u2, "c", 2, "updates")
     store.commit_wave("c", 2, {})
     rows = {r.full_key: r.status for r in store.frontier(spark, "c").collect()}
     assert rows == {"HTTPS://A.TEST": "COMPLETED", "HTTPS://B.TEST": "FAILED"}
@@ -171,26 +178,6 @@ def test_crawl_compacts_mid_run_and_resumes(spark, tmp_path):
     assert engine_state(spark, store_c, cid) == engine_state(spark, store_p, "c")
 
 
-def test_registry_backfills_pre_registry_store(spark, tmp_path):
-    """A store written before the JSONL registry existed must not lose
-    its older crawls from the listing APIs when the first new write
-    creates the registry (round-4 ADVICE): the first write backfills
-    every existing crawl.json into the new registry."""
-    store = SnapshotStore(tmp_path)
-    store.write_crawl_meta({"crawl_id": "old1", "status": "completed"})
-    store.write_crawl_meta({"crawl_id": "old2", "status": "completed"})
-    # simulate the pre-registry layout: crawl.json dirs, no registry file
-    store._crawl_registry_path().unlink()
-    assert set(store.list_crawls()) == {"old1", "old2"}  # dir-scan fallback
-    store.write_crawl_meta({"crawl_id": "new", "status": "running"})
-    assert store._crawl_registry_path().exists()
-    assert set(store.list_crawls()) == {"old1", "old2", "new"}
-    # and the registry itself (not the fallback) now carries all three
-    metas = store.read_all_metas()
-    assert metas["old1"]["status"] == "completed"
-    assert metas["new"]["status"] == "running"
-
-
 def test_markerless_base_dir_gcd(spark, tmp_path):
     """A compact() that crashed before writing _BASE leaves a marker-less
     base_v dir; both clean_uncommitted and the next compact() (at ANY
@@ -200,7 +187,7 @@ def test_markerless_base_dir_gcd(spark, tmp_path):
     ins = spark.createDataFrame(
         [_frontier_row("c", 1, "HTTPS://A.TEST")], FRONTIER_SCHEMA
     )
-    store.write_delta(ins, "c", 0, "inserts")
+    _write(store, ins, "c", 0, "inserts")
     store.commit_wave("c", 0, {})
     # crashed attempt at a DIFFERENT wave number than the next compact
     stale = store.crawl_dir("c") / "base_v99999"

@@ -49,6 +49,12 @@ Scale design (10^10-URL frontier, 1000 executors):
 * every wave's Spark jobs run in the job group ``crawl/{crawl_id}/w{wave}``;
   the commit summary records their ids next to the wave totals and phase
   timings, so an event log resolves each wave to its stages and tasks.
+
+Lifecycle: ``start_crawl`` and ``start_fleet`` share one root admission
+and wave 0.  Every cancel rides a wave's updates delta: a cancelled fleet
+member's PENDING rows are flipped in the next wave, and a cancelled crawl
+or fleet gets one more wave in which every member is cancelled and
+nothing is eligible.
 """
 
 from __future__ import annotations
@@ -141,7 +147,7 @@ class WaveResult:
     # stayed PENDING for a retry, and children born PENDING (non-leaf)
     parent_retries: int = 0
     children_pending: int = 0
-    # PENDING rows of individually-cancelled fleet members flipped to
+    # PENDING rows of cancelled crawls or fleet members flipped to
     # CANCELLED by this wave's updates delta
     cancelled: int = 0
     # bloom prefilter effectiveness (0 when the prefilter is dormant):
@@ -172,6 +178,7 @@ class CrawlEngine:
         # Iceberg documents table by xxhash64(doc_id) instead of caching.
         # prepared=True: caller passes another engine's already-pruned,
         # partitioned, persisted corpus — avoids caching it twice.
+        self._owns_documents = not prepared
         if prepared:
             self.documents = documents
         else:
@@ -217,6 +224,12 @@ class CrawlEngine:
         # and rebuilding ~50 Column objects per wave is py4j round-trips
         # on the serial path for identical immutable trees
         self._union_cols_cache: dict = {}
+
+    def close(self) -> None:
+        """Unpersist the corpus copy this engine made; an engine built
+        with ``prepared=True`` made none and leaves the caller's alone."""
+        if self._owns_documents:
+            self.documents.unpersist()
 
     def _build_static_exprs(self) -> dict:
         cfg = self.cfg
@@ -271,49 +284,8 @@ class CrawlEngine:
     def start_crawl(
         self, seed_url: str, requested_depth: int, crawl_id: str | None = None
     ) -> str:
-        if not 1 <= requested_depth <= self.cfg.max_crawl_depth:
-            raise ValueError(
-                f"depth must be 1..{self.cfg.max_crawl_depth} (crawl.rs:36-42)"
-            )
         crawl_id = crawl_id or str(uuid.uuid4())
-        name, proto = normalize_url_py(seed_url)
-        seed_key = proto + name
-
-        # root admission runs driver-side with the same pure simulators the
-        # executors use (manager fetches the root once, no retry; DNS or
-        # fetch failure fails crawl creation — crawl.rs:45-83)
-        dns_ok, domain, ip = dns_py(name, self.cfg)
-        has_doc = seed_key in self._docs_present([seed_key])
-        fetch_ok, sim_status, _ = fetch_outcome_py(seed_key, has_doc, 0, self.cfg)
-        meta = {
-            "crawl_id": crawl_id,
-            "seed_url": seed_url,
-            "seed_key": seed_key,
-            "name": name,
-            "http_type": proto,
-            "domain": domain,
-            "ip": ip,
-            "requested_depth": requested_depth,
-            "created_at": time.time(),
-            "status": "running",
-        }
-        if not dns_ok or not fetch_ok:
-            meta["status"] = "failed"
-            meta["fail_reason"] = f"root fetch/dns failed (status={sim_status})"
-            self.store.write_crawl_meta(meta)
-            return crawl_id
-        self.store.write_crawl_meta(meta)
-
-        # wave 0: seed expansion (manager path — no retries, no parent
-        # status bookkeeping, empty seen set, no dedup beyond MERGE collapse)
-        seed_df = self.spark.createDataFrame(
-            [(crawl_id, seed_key, name, proto, 0, requested_depth, 0)],
-            "crawl_id string, full_key string, name string, http_type string, "
-            "depth int, requested_depth int, attempts int",
-        )
-        with self._wave_group(crawl_id, 0):
-            self._run_wave(crawl_id, 0, seed_df, seen=None)
-        return crawl_id
+        return self._seed([seed_url], [crawl_id], requested_depth)
 
     def start_fleet(
         self,
@@ -335,19 +307,35 @@ class CrawlEngine:
         with ``run_crawl(fleet_id)``; read one member's frontier with
         ``store.frontier(spark, fleet_id).filter(col('crawl_id') == ...)``.
         """
+        fleet_id = fleet_id or f"fleet-{uuid.uuid4()}"
+        members = [f"{fleet_id}-c{i:05d}" for i in range(len(seed_urls))]
+        return self._seed(seed_urls, members, requested_depth, fleet_id)
+
+    def _seed(
+        self,
+        seed_urls: list[str],
+        crawl_ids: list[str],
+        requested_depth: int,
+        fleet_id: str | None = None,
+    ) -> str:
+        """Admit the roots of ``crawl_ids`` (one per seed URL) and run
+        wave 0 of their wave-dir chain, which is the fleet's when
+        ``fleet_id`` is given and the one crawl's otherwise; returns the
+        chain id.
+
+        Root admission runs driver-side with the same pure simulators the
+        executors use (the manager fetches the root once, no retry; a DNS
+        or fetch failure fails that crawl's creation — crawl.rs:45-83),
+        after ONE existence-check job for all roots."""
         if not 1 <= requested_depth <= self.cfg.max_crawl_depth:
             raise ValueError(
                 f"depth must be 1..{self.cfg.max_crawl_depth} (crawl.rs:36-42)"
             )
-        fleet_id = fleet_id or f"fleet-{uuid.uuid4()}"
+        chain_id = fleet_id or crawl_ids[0]
         norm = [normalize_url_py(u) for u in seed_urls]
-        keys = [proto + name for name, proto in norm]
-        # ONE existence-check job for all roots (not one isEmpty per seed)
-        present = self._docs_present(keys)
-        rows, members = [], []
-        registry: dict[str, dict] = {}
-        for i, (seed_url, (name, proto)) in enumerate(zip(seed_urls, norm)):
-            crawl_id = f"{fleet_id}-c{i:05d}"
+        present = self._docs_present([proto + name for name, proto in norm])
+        rows, metas = [], {}
+        for crawl_id, seed_url, (name, proto) in zip(crawl_ids, seed_urls, norm):
             seed_key = proto + name
             dns_ok, domain, ip = dns_py(name, self.cfg)
             fetch_ok, sim_status, _ = fetch_outcome_py(
@@ -370,37 +358,41 @@ class CrawlEngine:
                 meta["status"] = "failed"
                 meta["fail_reason"] = f"root fetch/dns failed (status={sim_status})"
             else:
-                rows.append(
-                    (crawl_id, seed_key, name, proto, 0, requested_depth, 0)
-                )
-            registry[crawl_id] = meta
-            members.append(crawl_id)
-        # ONE registry write for the whole fleet (round-2 wrote one
-        # crawl.json per member driver-side — 2,000 members = 2,000 file
-        # round-trips before the first wave; the registry is a single
-        # atomic JSON the per-member read/write APIs route through)
-        self.store.write_member_metas(fleet_id, registry)
-        self.store.write_crawl_meta(
-            {
-                "crawl_id": fleet_id,
-                "is_fleet": True,
-                "members": members,
-                "seed_url": "",
-                "seed_key": "",
-                "requested_depth": requested_depth,
-                "created_at": time.time(),
-                "status": "running" if rows else "failed",
-            }
-        )
+                rows.append((crawl_id, seed_key, name, proto, 0, requested_depth, 0))
+            metas[crawl_id] = meta
+        if fleet_id is None:
+            self.store.write_crawl_meta(metas[chain_id])
+        else:
+            # ONE registry write for the whole fleet (round-2 wrote one
+            # crawl.json per member driver-side — 2,000 members = 2,000
+            # file round-trips before the first wave; the registry is a
+            # single atomic JSON the per-member read/write APIs route
+            # through)
+            self.store.write_member_metas(fleet_id, metas)
+            self.store.write_crawl_meta(
+                {
+                    "crawl_id": fleet_id,
+                    "is_fleet": True,
+                    "members": crawl_ids,
+                    "seed_url": "",
+                    "seed_key": "",
+                    "requested_depth": requested_depth,
+                    "created_at": time.time(),
+                    "status": "running" if rows else "failed",
+                }
+            )
         if rows:
+            # wave 0: seed expansion (manager path — no retries, no parent
+            # status bookkeeping, empty seen set, no dedup beyond MERGE
+            # collapse)
             seed_df = self.spark.createDataFrame(
                 rows,
                 "crawl_id string, full_key string, name string, http_type string, "
                 "depth int, requested_depth int, attempts int",
             )
-            with self._wave_group(fleet_id, 0):
-                self._run_wave(fleet_id, 0, seed_df, seen=None, root_fetched=len(rows))
-        return fleet_id
+            with self._wave_group(chain_id, 0):
+                self._run_wave(chain_id, 0, seed_df, seen=None, root_fetched=len(rows))
+        return chain_id
 
     def cancel_crawl(self, crawl_id: str) -> None:
         """U3: flag the crawl; the wave loop turns PENDING into CANCELLED
@@ -415,7 +407,16 @@ class CrawlEngine:
 
         Resumable: starts after the last committed snapshot; partial wave
         directories from a crash are dropped and the wave re-runs
-        deterministically (ST2/ST3 analogue, strictly stronger).
+        deterministically (ST2/ST3 analogue, strictly stronger).  That is
+        also how a lost frontier block is recovered: a local checkpoint
+        has no lineage to recompute it from, so the wave fails with
+        ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` and the caller calls
+        ``run_crawl`` again.
+
+        A cancelling crawl or fleet runs one more wave, whatever
+        ``max_waves`` says, in which every member is cancelled: nothing
+        is eligible, the wave's updates delta flips every PENDING row to
+        CANCELLED, and the chain and its members end ``cancelled``.
         """
         meta = self.store.read_crawl_meta(crawl_id)
         if meta["status"] in ("failed", "cancelled", "completed"):
@@ -445,21 +446,10 @@ class CrawlEngine:
         try:
             while True:
                 meta = self.store.read_crawl_meta(crawl_id)
-                if meta["status"] == "cancelling":
-                    with self._wave_group(crawl_id, wave):
-                        self._cancel_wave(crawl_id, wave)
-                    meta["status"] = "cancelled"
-                    self.store.write_crawl_meta(meta)
-                    if meta.get("is_fleet"):  # members follow the fleet
-
-                        def _cancel_all(reg: dict) -> None:
-                            for m in reg.values():
-                                if m["status"] in ("running", "cancelling"):
-                                    m["status"] = "cancelled"
-
-                        self.store.update_member_metas(crawl_id, _cancel_all)
-                    return meta
-                if max_waves is not None and waves_done >= max_waves:
+                # a cancelling chain gets its cancel wave whatever
+                # max_waves says (crawl_service.rs:219-235)
+                cancelling = meta["status"] == "cancelling"
+                if not cancelling and max_waves is not None and waves_done >= max_waves:
                     return meta
 
                 # the frontier lives in executor memory across waves as a
@@ -481,20 +471,21 @@ class CrawlEngine:
                             bloom_root, self.cfg, expect_wave=last_wave
                         )
 
-                # individually-cancelled fleet members (round-2 ADVICE:
-                # these were silently ignored): their PENDING rows are
-                # excluded from eligibility and flipped to CANCELLED by
-                # the NEXT wave's own updates delta — no extra snapshot,
-                # so BFS wave numbering (and oracle parity for the other
-                # members) is untouched.
+                # cancelled members: their PENDING rows are excluded from
+                # eligibility and flipped to CANCELLED by this wave's own
+                # updates delta — no extra snapshot, so BFS wave numbering
+                # (and oracle parity for the other members of a fleet) is
+                # untouched.  A cancelling chain cancels every member.
                 cancel_ids: list[str] = []
-                if meta.get("is_fleet"):
+                if cancelling:
+                    cancel_ids = meta.get("members", [crawl_id])
+                elif meta.get("is_fleet"):
                     reg = self.store.read_member_metas(crawl_id)
                     cancel_ids = sorted(
                         m for m, v in reg.items() if v["status"] == "cancelling"
                     )
 
-                if n_pending == 0:
+                if n_pending == 0 and not cancelling:
                     meta["status"] = "completed"
                     self.store.write_crawl_meta(meta)
                     if meta.get("is_fleet"):  # batch member completion
@@ -515,6 +506,7 @@ class CrawlEngine:
                 use_bloom = (
                     self.cfg.use_bloom_prefilter
                     and bloom_pays
+                    and not cancelling
                     and n_seen >= self.cfg.bloom_min_seen
                 )
                 with self._wave_group(crawl_id, wave):
@@ -537,16 +529,18 @@ class CrawlEngine:
                 # one, which nothing reads any more
                 _release(frontier)
                 frontier = nxt
-                if cancel_ids:  # the wave committed their CANCELLED rows
-                    # re-read + targeted mutation, NOT a write-back of the
-                    # pre-wave `reg` snapshot: a member cancelled DURING
-                    # the wave (from another thread) must not be reverted
-                    # to 'running' by a stale whole-dict write (round-3
-                    # ADVICE lost-update race)
+                if cancel_ids and meta.get("is_fleet"):
+                    # the wave committed their CANCELLED rows.  Re-read +
+                    # targeted mutation, NOT a write-back of the pre-wave
+                    # `reg` snapshot: a member cancelled DURING the wave
+                    # (from another thread) must not be reverted to
+                    # 'running' by a stale whole-dict write (round-3
+                    # ADVICE lost-update race); a member whose root
+                    # failed stays 'failed'
 
                     def _mark_cancelled(r: dict) -> None:
                         for m in cancel_ids:
-                            if m in r:
+                            if r[m]["status"] in ("running", "cancelling"):
                                 r[m]["status"] = "cancelled"
 
                     self.store.update_member_metas(crawl_id, _mark_cancelled)
@@ -607,6 +601,10 @@ class CrawlEngine:
                     and wave % self.cfg.store_compact_every_waves == 0
                 ):
                     self.store.compact(self.spark, crawl_id)
+                if cancelling:
+                    meta["status"] = "cancelled"
+                    self.store.write_crawl_meta(meta)
+                    return meta
                 wave += 1
                 waves_done += 1
         finally:
@@ -934,18 +932,12 @@ class CrawlEngine:
                 .observe(
                     upd_obs,
                     F.count(F.lit(1)).alias("fetched"),
-                    F.sum(F.when(F.col("fetch_ok"), 1).otherwise(0)).alias("ok"),
-                    F.sum(
-                        F.when(
-                            ~F.col("fetch_ok") & (F.col("sim_status") == 0), 1
-                        ).otherwise(0)
+                    F.count_if(F.col("fetch_ok")).alias("ok"),
+                    F.count_if(
+                        ~F.col("fetch_ok") & (F.col("sim_status") == 0)
                     ).alias("timeouts"),
-                    F.sum(F.when(status_expr == FAILED, 1).otherwise(0)).alias(
-                        "failed"
-                    ),
-                    F.sum(F.when(status_expr == PENDING, 1).otherwise(0)).alias(
-                        "retries"
-                    ),
+                    F.count_if(status_expr == FAILED).alias("failed"),
+                    F.count_if(status_expr == PENDING).alias("retries"),
                 )
             )
             updates = upd_base.select(
@@ -959,7 +951,7 @@ class CrawlEngine:
         else:
             updates, upd_obs = None, None
 
-        # ---- cancelled fleet members ride this wave's updates delta ----
+        # ---- cancelled crawls and members ride this wave's updates delta ----
         # (their rows were excluded from `parents`, so no fetch happened;
         # an Observation carries the flipped-row count for the driver's
         # pending arithmetic — zero extra jobs)
@@ -1148,22 +1140,3 @@ class CrawlEngine:
             ins = self.spark.read.schema(FRONTIER_SCHEMA).parquet(str(ins_path))
             merged = merged.unionByName(ins)
         return merged
-
-    def _cancel_wave(self, crawl_id: str, wave: int) -> None:
-        """Turn every PENDING row into CANCELLED in one updates-only
-        snapshot (crawl_service.rs:219-235)."""
-        frontier = self.store.frontier(self.spark, crawl_id)
-        updates = frontier.filter(F.col("status") == PENDING).select(
-            "crawl_id",
-            "url_hash",
-            "full_key",
-            F.lit(CANCELLED).alias("status"),
-            "attempts",
-            F.lit(wave).alias("wave"),
-        )
-        self.store.write_delta(updates, crawl_id, wave, "updates")
-        self.store.commit_wave(
-            crawl_id,
-            wave,
-            {"cancelled_wave": True, "job_ids": self._wave_job_ids(crawl_id, wave)},
-        )

@@ -13,9 +13,9 @@ engine relies on with parquet + commit markers:
   10^10-row design point rewriting the frontier per wave would be a full
   table write per wave; deltas keep per-wave I/O proportional to the wave,
   and the number of update files per URL is bounded by max_attempts+1.
-* **Atomic commit marker.**  ``_COMMITTED`` (a JSON summary) is written
-  last; a wave directory without it is invisible to readers and deleted on
-  resume — the reference's per-job Neo4j transaction boundary
+* **Atomic commit marker.**  ``commit.json`` (the wave's JSON summary) is
+  written last; a wave directory without it is invisible to readers and
+  deleted on resume — the reference's per-job Neo4j transaction boundary
   (/root/reference/feeder/src/job.rs:174-203) widened to a whole wave.
 * **Resume** = max committed wave + reconstructed current state; an
   interrupted wave simply re-runs (deterministic pipeline => identical
@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # parquet files per wave delta write (the coalesce target of
-# write_delta / write_delta_union); 32 measured no better in round 6
+# write_delta_union); 32 measured no better in round 6
 DELTA_FILES = 8
 
 FRONTIER_SCHEMA = T.StructType(
@@ -140,34 +140,16 @@ class SnapshotStore:
         tmp = d / "crawl.json.tmp"
         tmp.write_text(json.dumps(meta, indent=1))
         tmp.replace(d / "crawl.json")  # atomic rename
-        # first write on a PRE-REGISTRY store: backfill every existing
-        # crawl.json into the new registry before appending, or the older
-        # crawls silently vanish from the listing APIs the moment the
-        # registry file exists (round-4 ADVICE).  One O(n) scan, once.
-        reg_path = self._crawl_registry_path()
-        if not reg_path.exists():
-            lines = [
-                (p / "crawl.json").read_text().replace("\n", "")
-                for p in sorted(self.root.glob("crawls/*"))
-                if (p / "crawl.json").exists() and p != d
-            ]
-            if lines:
-                tmp_reg = reg_path.with_suffix(".tmp")
-                tmp_reg.write_text("".join(
-                    json.dumps(json.loads(ln)) + "\n" for ln in lines
-                ))
-                tmp_reg.replace(reg_path)
         # append-only index entry: O(1) write; a torn tail line from a
         # crash is skipped by readers, and crawl.json stays authoritative
         # for single-crawl reads
-        with reg_path.open("a") as f:
+        with self._crawl_registry_path().open("a") as f:
             f.write(json.dumps(meta) + "\n")
 
     def read_all_metas(self) -> dict[str, dict]:
         """Latest meta for every crawl (fleet members included) from
         O(1 + n_fleets) file reads: one registry JSONL scan (last line
-        per id wins) + one members.json per fleet.  Falls back to a
-        directory scan for stores written before the registry existed."""
+        per id wins) + one members.json per fleet."""
         out: dict[str, dict] = {}
         reg_path = self._crawl_registry_path()
         if reg_path.exists():
@@ -177,13 +159,6 @@ class SnapshotStore:
                 except json.JSONDecodeError:  # torn tail line (crash mid-append)
                     continue
                 out[m["crawl_id"]] = m
-        else:  # pre-registry store layout
-            base = self.root / "crawls"
-            if base.exists():
-                for p in base.iterdir():
-                    if (p / "crawl.json").exists():
-                        m = json.loads((p / "crawl.json").read_text())
-                        out[m["crawl_id"]] = m
         for fleet_id in [cid for cid, m in out.items() if m.get("is_fleet")]:
             out.update(self.read_member_metas(fleet_id))
         return out
@@ -352,7 +327,7 @@ class SnapshotStore:
             return []
         out = []
         for p in d.iterdir():
-            if p.name.startswith("wave_") and (p / "_COMMITTED").exists():
+            if p.name.startswith("wave_") and (p / "commit.json").exists():
                 out.append(int(p.name[5:]))
         return sorted(out)
 
@@ -363,60 +338,47 @@ class SnapshotStore:
         dropped = []
         if d.exists():
             for p in d.iterdir():
-                if p.name.startswith("wave_") and not (p / "_COMMITTED").exists():
+                if p.name.startswith("wave_") and not (p / "commit.json").exists():
                     shutil.rmtree(p)
                     dropped.append(int(p.name[5:]))
         self._gc_incomplete_bases(crawl_id)
         return dropped
 
     def commit_wave(self, crawl_id: str, wave: int, summary: dict) -> None:
-        """Atomic commit marker; carries the wave summary (incl. crawl_id
-        and wave so the marker doubles as an exactly-once progress record
-        for the streaming tailer — markers are written once via rename and
-        never rewritten, unlike the parquet part files a crashed wave
-        re-run regenerates under fresh names)."""
-        payload = json.dumps(
+        """Atomic commit marker ``commit.json``; carries the wave summary
+        (incl. crawl_id and wave so the marker doubles as an exactly-once
+        progress record for the streaming tailer — markers are written
+        once via rename and never rewritten, unlike the parquet part files
+        a crashed wave re-run regenerates under fresh names)."""
+        target = self.wave_dir(crawl_id, wave) / "commit.json"
+        tmp = target.with_suffix(".tmp")
+        tmp.write_text(json.dumps(
             {"ts": time.time(), "crawl_id": crawl_id, "wave": wave, **summary}
-        )
-        # commit.json first (underscore-prefixed files are hidden from
-        # Spark file sources), then the _COMMITTED marker readers key on.
-        # A crash between the two renames leaves an uncommitted dir that
-        # clean_uncommitted removes and the deterministic re-run rewrites
-        # byte-identically at the same path — the stream never sees a
-        # record for a wave whose content could change.
-        for name in ("commit.json", "_COMMITTED"):
-            target = self.wave_dir(crawl_id, wave) / name
-            tmp = target.with_suffix(".tmp")
-            tmp.write_text(payload)
-            tmp.replace(target)
+        ))
+        tmp.replace(target)
 
     def wave_summary(self, crawl_id: str, wave: int) -> dict:
-        return json.loads((self.wave_dir(crawl_id, wave) / "_COMMITTED").read_text())
+        return json.loads((self.wave_dir(crawl_id, wave) / "commit.json").read_text())
 
     # ---- writers (called by the engine inside a wave, pre-commit) ----
-    def write_delta(self, df: DataFrame, crawl_id: str, wave: int, kind: str) -> None:
-        """Write one wave delta.  Coalesced to a few files: per-wave deltas
-        are small relative to the table, and the merge-on-read reader
-        lists every delta file of every committed wave — at file counts,
-        not bytes, that listing is the cost that grows with crawl depth.
-        (Iceberg's manifest tree solves this structurally at production.)"""
-        path = self.wave_dir(crawl_id, wave) / f"{kind}.parquet"
-        df.coalesce(DELTA_FILES).write.mode("overwrite").parquet(str(path))
-
     def write_delta_union(self, df: DataFrame, crawl_id: str, wave: int) -> None:
         """Write ALL of a wave's deltas as ONE Spark job: ``df`` is the
         union of the inserts/edges/updates rows over a superset schema
         with a ``kind`` discriminator column, written
         ``partitionBy("kind")`` so each kind lands in its own
-        subdirectory (``delta.parquet/kind=inserts/...``) that readers
-        scan exactly like the per-kind files of the 3-job layout.
+        subdirectory (``delta.parquet/kind=inserts/...``).
 
         Round 3 submitted three separate write jobs per wave (concurrent
         via threads, but three Catalyst analyses + three job submissions
         on the serial driver path — the per-wave driver floor is what
         caps pre-saturation scaling, BENCH/BASELINE.md).  Reading the
         partition subdirectory directly yields only the file columns (no
-        inferred ``kind``), so per-kind reads keep their exact schema."""
+        inferred ``kind``), so per-kind reads keep their exact schema.
+        Coalesced to a few files: per-wave deltas are small relative to
+        the table, and the merge-on-read reader lists every delta file of
+        every committed wave — at file counts, not bytes, that listing is
+        the cost that grows with crawl depth.  (Iceberg's manifest tree
+        solves this structurally at production.)"""
         path = self.wave_dir(crawl_id, wave) / "delta.parquet"
         (
             df.coalesce(DELTA_FILES)
@@ -426,15 +388,15 @@ class SnapshotStore:
         )
 
     def delta_path(self, crawl_id: str, wave: int, kind: str) -> Path | None:
-        """Existing on-disk path of one wave's ``kind`` delta, in either
-        layout (single-job ``delta.parquet/kind=...`` preferred, per-kind
-        ``{kind}.parquet`` legacy), or None if the wave wrote none."""
+        """Existing on-disk path of one wave's ``kind`` rows, or None if
+        the wave wrote none: ``metrics.parquet`` (the totals row) or one
+        kind of the union delta (``delta.parquet/kind=...``)."""
         wd = self.wave_dir(crawl_id, wave)
-        union = wd / "delta.parquet" / f"kind={kind}"
-        if union.exists():
-            return union
-        per_kind = wd / f"{kind}.parquet"
-        return per_kind if per_kind.exists() else None
+        if kind == "metrics":
+            path = wd / "metrics.parquet"
+        else:
+            path = wd / "delta.parquet" / f"kind={kind}"
+        return path if path.exists() else None
 
     def write_metrics_row(self, row: tuple, crawl_id: str, wave: int) -> None:
         """Driver-side write of the wave's total row (pyarrow, no Spark job).

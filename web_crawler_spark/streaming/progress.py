@@ -3,7 +3,7 @@ re-expressed as Structured Streaming over the wave commit markers.
 
 The reference pushes progress JSON every 2 s per open WebSocket until the
 crawl is terminal (/root/reference/manager/src/routes/ws.rs:25-53), which
-is a poll of the same counts query.  Our engine commits one ``_COMMITTED``
+is a poll of the same counts query.  Our engine commits one ``commit.json``
 marker per wave (a JSON summary with crawl_id, wave, and the wave totals),
 so a *stream* of progress is just ``readStream`` over the marker layout:
 new wave commits become new micro-batch input files — no server, no push
@@ -27,8 +27,9 @@ from pyspark.sql import types as T
 
 from ..store import SnapshotStore
 
-# _COMMITTED marker payload (store.commit_wave): WaveResult fields +
-# identity; cancel-wave markers carry only identity + cancelled_wave
+# commit.json payload (store.commit_wave): identity + WaveResult fields.
+# Every wave commits through the engine's one wave path, the cancel wave
+# of a cancelled crawl or fleet included, so every marker carries them
 COMMIT_SCHEMA = T.StructType(
     [
         T.StructField("ts", T.DoubleType()),
@@ -43,16 +44,13 @@ COMMIT_SCHEMA = T.StructType(
         T.StructField("dns_dropped", T.LongType()),
         T.StructField("children", T.LongType()),
         T.StructField("elapsed_ms", T.LongType()),
-        T.StructField("cancelled_wave", T.BooleanType()),
     ]
 )
 
 
 def commit_stream(spark: SparkSession, store: SnapshotStore) -> DataFrame:
     """Unbounded wave-commit source: every committed wave's marker,
-    across all crawls in the store (exactly one record per commit).
-    Reads the ``commit.json`` twin of ``_COMMITTED`` — underscore-prefixed
-    files are hidden from Spark file sources."""
+    across all crawls in the store (exactly one record per commit)."""
     pattern = str(store.root / "crawls" / "*" / "wave_*" / "commit.json")
     return (
         spark.readStream.schema(COMMIT_SCHEMA)
