@@ -5,8 +5,6 @@ bucket's bitmap; state lives in files, never on the driver)."""
 
 from __future__ import annotations
 
-import json
-
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -113,7 +111,8 @@ def test_bloom_sizing_bits_per_key_at_capacity():
 
 def test_bloom_path_equals_plain_join_path(spark, tmp_path):
     """use_bloom_prefilter on/off produce bit-identical crawl state (the
-    bloom is a pure physical optimization; the exact join absorbs FPs)."""
+    bloom is a pure physical optimization; the exact join absorbs FPs),
+    and the completed crawl leaves no bloom state behind."""
     params = CorpusParams(n_docs=80)
     corpus = build_corpus_py(params)
     docs = documents_df_from_py(spark, corpus).cache()
@@ -129,6 +128,7 @@ def test_bloom_path_equals_plain_join_path(spark, tmp_path):
         eng = CrawlEngine(spark, store, docs, cfg)
         cid = eng.start_crawl(seed, 2, crawl_id="c")
         eng.run_crawl(cid)
+        assert not (store.crawl_dir(cid) / "bloom").exists(), label
         states[label] = engine_state(spark, store, cid)
     docs.unpersist()
     assert states["bloom"] == states["plain"]
@@ -214,36 +214,9 @@ def test_bloom_state_incremental_equals_full(spark, tmp_path):
     assert tester.test(np.array(all_keys, dtype=np.int64)).all()
 
 
-def test_bloom_state_load_guards(spark, tmp_path):
-    df = _keys_df(spark, [xxhash64_str(f"k{i}") for i in range(1000)])
-    root = tmp_path / "bloom"
-    st = BloomState.build(df, CrawlConfig(), n_seen=1000, root=root, wave=7)
-    loaded = BloomState.load(root, CrawlConfig(), expect_wave=7)
-    assert loaded is not None and loaded.m_bits == st.m_bits
-    assert loaded.bucket_paths == st.bucket_paths
-    # stale state (wrong wave) must be rejected -> full rebuild instead
-    assert BloomState.load(root, CrawlConfig(), expect_wave=8) is None
-    # geometry change (bucket count / probes) would produce false
-    # negatives under the new math -> rejected (round-2 ADVICE)
-    assert BloomState.load(root, CrawlConfig(dedup_buckets=64), 7) is None
-    assert BloomState.load(root, CrawlConfig(bloom_num_probes=3), 7) is None
-    # missing dir
-    assert BloomState.load(tmp_path / "nope", CrawlConfig(), 7) is None
-    # truncated/corrupt manifest (crash mid-save is the expected failure
-    # mode of a best-effort cache) -> None, not an exception
-    (root / BloomState.MANIFEST).write_text('{"wave": 7, "m_bi')
-    assert BloomState.load(root, CrawlConfig(), 7) is None
-    # manifest referencing a deleted bitmap file -> None
-    st2_root = tmp_path / "bloom2"
-    st2 = BloomState.build(df, CrawlConfig(), n_seen=1000, root=st2_root, wave=3)
-    some_rel = next(iter(st2.bucket_paths.values()))
-    (st2_root / some_rel).unlink()
-    assert BloomState.load(st2_root, CrawlConfig(), 3) is None
-
-
 def test_bloom_state_gc_drops_stale_versions(spark, tmp_path):
     """Version GC with ONE-update deferral (round-3 ADVICE): dirs live in
-    the current or immediately-previous manifest survive; older ones are
+    the current or immediately-previous state survive; older ones are
     collected — and a verdict taken before an update stays computable
     across that update (its captured bucket files still exist)."""
     root = tmp_path / "bloom"
@@ -265,16 +238,15 @@ def test_bloom_state_gc_drops_stale_versions(spark, tmp_path):
     live = {p.split("/", 1)[0] for p in st.bucket_paths.values()}
     on_disk = {d.name for d in root.iterdir() if d.is_dir()}
     assert live <= on_disk <= live | prev_live  # one-version deferral only
-    m = json.loads((root / BloomState.MANIFEST).read_text())
-    assert m["wave"] == 3
 
 
 def test_bloom_resume_with_persisted_state(spark, tmp_path):
-    """Crash/resume across waves with the partition-local bloom forced
-    on: resume loads (or safely rebuilds) the file-backed state and the
-    final crawl state matches the no-bloom twin bit-exactly.  Both runs
-    free every checkpoint they stored, the bloom waves' flagged
-    candidate sets included."""
+    """Stop/resume across waves with the partition-local bloom forced
+    on: the stopped run removes its bloom state, the resumed run builds
+    it again from the frontier checkpoint, and the final crawl state
+    matches the no-bloom twin bit-exactly.  Both runs free every
+    checkpoint they stored, the bloom waves' flagged candidate sets
+    included."""
     params = CorpusParams(n_docs=80)
     corpus = build_corpus_py(params)
     docs = documents_df_from_py(spark, corpus).cache()
@@ -286,11 +258,18 @@ def test_bloom_resume_with_persisted_state(spark, tmp_path):
     before = stored_rdd_ids(spark)
     cid = eng.start_crawl(seed, 3, crawl_id="c")
     eng.run_crawl(cid, max_waves=2)          # stop mid-crawl
-    # persisted manifest matches the last committed wave
-    st = BloomState.load(store.crawl_dir(cid) / "bloom", cfg, expect_wave=2)
-    assert st is not None and st.wave == 2
+    bloom_root = store.crawl_dir(cid) / "bloom"
+    assert store.committed_waves(cid) == [0, 1, 2]
+    assert not bloom_root.exists()  # the state lived for that call only
     eng2 = CrawlEngine(spark, store, docs, cfg)   # fresh engine => resume
     eng2.run_crawl(cid)
+    assert not bloom_root.exists()
+    # the resumed run built its own state: its waves tested candidates
+    assert sum(
+        int(store.wave_summary(cid, w)["bloom_candidates"])
+        for w in store.committed_waves(cid)
+        if w > 2
+    ) > 0
     assert_released(spark, before)
     plain_store = SnapshotStore(tmp_path / "b")
     eng3 = CrawlEngine(
@@ -340,13 +319,6 @@ def test_partition_local_tester_unit():
 # adaptive payoff gate (round-4: measured-cut auto-disable)
 # ---------------------------------------------------------------------------
 
-def test_bloom_min_cut_frac_validated():
-    with pytest.raises(ValueError, match="bloom_min_cut_frac"):
-        CrawlConfig(bloom_min_cut_frac=1.5)
-    with pytest.raises(ValueError, match="bloom_min_cut_frac"):
-        CrawlConfig(bloom_min_cut_frac=-0.1)
-
-
 @pytest.mark.parametrize(
     "kwargs, field",
     [
@@ -377,7 +349,7 @@ def test_bench_config_shape_constructs():
 def test_bloom_adaptive_gate_disables_in_dup_regime(spark, tmp_path, monkeypatch):
     """A bloom over the seen set can only certify definitely-NOT-seen
     candidates; when a wave's measured cut falls below
-    bloom_min_cut_frac the engine must drop the prefilter for the rest
+    BLOOM_MIN_CUT_FRAC the engine must drop the prefilter for the rest
     of the crawl (sticky), with crawl output unchanged.  Gate disabled
     (frac=0) keeps the prefilter active for every wave — the control."""
     import web_crawler_spark.engine as engine_mod
@@ -388,7 +360,8 @@ def test_bloom_adaptive_gate_disables_in_dup_regime(spark, tmp_path, monkeypatch
     docs = documents_df_from_py(spark, corpus).cache()
     seed = good_seeds(corpus, CFG)[0]
 
-    def run(label, cfg):
+    def run(label, cfg, min_cut_frac=0.0):
+        monkeypatch.setattr(engine_mod, "BLOOM_MIN_CUT_FRAC", min_cut_frac)
         store = SnapshotStore(tmp_path / label)
         eng = CrawlEngine(spark, store, docs, cfg)
         cid = eng.start_crawl(seed, 3, crawl_id="c")
@@ -400,12 +373,9 @@ def test_bloom_adaptive_gate_disables_in_dup_regime(spark, tmp_path, monkeypatch
         return engine_state(spark, store, cid), per_wave
 
     # cut threshold impossibly high => first measured wave trips the gate
-    gated_state, gated_waves = run("gated", CrawlConfig(
-        use_bloom_prefilter=True, bloom_min_seen=0, bloom_min_cut_frac=0.999,
-    ))
-    control_state, control_waves = run("control", CrawlConfig(
-        use_bloom_prefilter=True, bloom_min_seen=0, bloom_min_cut_frac=0.0,
-    ))
+    bloom_cfg = CrawlConfig(use_bloom_prefilter=True, bloom_min_seen=0)
+    gated_state, gated_waves = run("gated", bloom_cfg, min_cut_frac=0.999)
+    control_state, control_waves = run("control", bloom_cfg, min_cut_frac=0.0)
     plain_state, plain_waves = run("plain", CrawlConfig(
         use_bloom_prefilter=False,
     ))
@@ -432,18 +402,17 @@ def test_bloom_gate_trip_persists_across_resume(spark, tmp_path, monkeypatch):
     every resume re-built the O(frontier) BloomState and re-paid the
     one-wave measurement before re-tripping.  The trip is now persisted
     in the crawl meta; a resume starts with the prefilter already off,
-    the stale on-disk bucket state deleted, and zero candidates tested
-    on the resumed waves.  Final state stays oracle-parity-identical."""
+    no bucket state on disk, and zero candidates tested on the resumed
+    waves.  Final state stays oracle-parity-identical."""
     import web_crawler_spark.engine as engine_mod
 
     monkeypatch.setattr(engine_mod, "BLOOM_GATE_MIN_SAMPLE", 1)
+    monkeypatch.setattr(engine_mod, "BLOOM_MIN_CUT_FRAC", 0.999)
     params = CorpusParams(n_docs=80)
     corpus = build_corpus_py(params)
     docs = documents_df_from_py(spark, corpus).cache()
     seed = good_seeds(corpus, CFG)[0]
-    cfg = CrawlConfig(
-        use_bloom_prefilter=True, bloom_min_seen=0, bloom_min_cut_frac=0.999,
-    )
+    cfg = CrawlConfig(use_bloom_prefilter=True, bloom_min_seen=0)
     store = SnapshotStore(tmp_path / "s")
     eng = CrawlEngine(spark, store, docs, cfg)
     cid = eng.start_crawl(seed, 3, crawl_id="c")
@@ -452,9 +421,7 @@ def test_bloom_gate_trip_persists_across_resume(spark, tmp_path, monkeypatch):
     meta = store.read_crawl_meta(cid)
     assert meta.get("bloom_gate_tripped"), "gate should have tripped"
     trip_wave = meta["bloom_gate_tripped"]
-    assert not (store.crawl_dir(cid) / "bloom").exists(), (
-        "stale bucket state must be deleted on trip"
-    )
+    assert not (store.crawl_dir(cid) / "bloom").exists()
     # resume with a FRESH engine: the persisted trip must hold — no
     # rebuild, no candidates tested on any resumed wave
     eng2 = CrawlEngine(spark, store, docs, cfg, prepared=False)

@@ -117,17 +117,17 @@ def test_parity_politeness_budget(spark, corpus, docs_df, tmp_path):
 
 
 def test_parity_robots(spark, corpus, docs_df, tmp_path):
-    cfg = CrawlConfig(respect_robots=True)
-    seed = good_seeds(corpus, cfg)[0]
+    """Robots rules apply whenever a robots table is given."""
+    seed = good_seeds(corpus, CFG)[0]
     blocked = {"BASE-0001.TEST", "BASE-0003.TEST"}
-    oracle = OracleCrawler(corpus, cfg, robots_disallowed=blocked).crawl(
+    oracle = OracleCrawler(corpus, CFG, robots_disallowed=blocked).crawl(
         seed, 3, crawl_id="c"
     )
     robots_df = spark.createDataFrame(
         [(h, True) for h in blocked], "host string, disallowed boolean"
     )
     store = SnapshotStore(tmp_path / "s")
-    eng = CrawlEngine(spark, store, docs_df, cfg, robots=robots_df)
+    eng = CrawlEngine(spark, store, docs_df, CFG, robots=robots_df)
     cid = eng.start_crawl(seed, 3, crawl_id="c")
     eng.run_crawl(cid)
     assert_parity(spark, store, cid, oracle)
@@ -152,6 +152,49 @@ def test_parity_cancellation(spark, corpus, docs_df, tmp_path):
     meta = eng.run_crawl(cid)
     assert meta["status"] == "cancelled"
     assert_parity(spark, store, cid, oracle)
+
+
+def test_cancel_wave_folds_nothing(
+    spark, corpus, docs_df, tmp_path, caplog, monkeypatch
+):
+    """The cancel wave commits the CANCELLED rows but folds no next
+    frontier (no wave would read it), and the wave-arithmetic check
+    still holds on it: nothing stays PENDING."""
+    store = SnapshotStore(tmp_path / "s")
+    eng = CrawlEngine(spark, store, docs_df, CFG)
+    cid = eng.start_crawl(good_seeds(corpus, CFG)[0], 4, crawl_id="c")
+    eng.run_crawl(cid, max_waves=1)
+    eng.cancel_crawl(cid)
+    folded: list[int] = []
+    fold = eng._fold_frontier
+
+    def spy(prev, crawl_id, wave):
+        folded.append(wave)
+        return fold(prev, crawl_id, wave)
+
+    monkeypatch.setattr(eng, "_fold_frontier", spy)
+    with caplog.at_level("ERROR", logger="web_crawler_spark.engine"):
+        meta = eng.run_crawl(cid)
+    assert meta["status"] == "cancelled"
+    assert folded == []
+    assert not [
+        r for r in caplog.records
+        if r.name == "web_crawler_spark.engine" and r.levelno >= logging.ERROR
+    ]
+    assert store.committed_waves(cid) == [0, 1, 2]
+    assert store.wave_summary(cid, 2)["cancelled"] > 0
+
+
+def test_engine_leaves_session_conf_alone(spark, docs_df, tmp_path):
+    """Building an engine changes no setting of the caller's session."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    spark.conf.set(key, "10000")
+    try:
+        eng = CrawlEngine(spark, SnapshotStore(tmp_path / "s"), docs_df, CFG)
+        eng.close()
+        assert spark.conf.get(key) == "10000"
+    finally:
+        spark.conf.unset(key)
 
 
 def test_cancel_with_nothing_pending(spark, corpus, docs_df, tmp_path):

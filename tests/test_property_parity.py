@@ -26,7 +26,7 @@ from web_crawler_spark.store import SnapshotStore
 N_COMBOS = 12
 
 
-def _draw(idx: int) -> tuple[CorpusParams, CrawlConfig, int]:
+def _draw(idx: int) -> tuple[CorpusParams, CrawlConfig, int, float]:
     r = random.Random(1000 + idx)
     params = CorpusParams(
         n_docs=r.randint(50, 140),
@@ -49,7 +49,8 @@ def _draw(idx: int) -> tuple[CorpusParams, CrawlConfig, int]:
     host_budget = r.choice([None, 1, 2, 3])
     salt = r.choice([2, 4, 16])
     r.choice(["partition_local", "broadcast"])
-    # gate half the bloom-on runs hard enough to trip mid-crawl
+    # gate half the bloom-on runs hard enough to trip mid-crawl (the
+    # engine's BLOOM_MIN_CUT_FRAC, set by the test)
     min_cut = r.choice([0.0, 0.999])
     buckets = r.choice([4, 32])
     r.random()
@@ -61,12 +62,11 @@ def _draw(idx: int) -> tuple[CorpusParams, CrawlConfig, int]:
         politeness_salt=salt,
         use_bloom_prefilter=bloom_on,
         bloom_min_seen=0 if bloom_on else 5_000_000,
-        bloom_min_cut_frac=min_cut,
         dedup_buckets=buckets,
         store_compact_every_waves=store_compact,
     )
     depth = r.choice([2, 3, 3])
-    return params, cfg, depth
+    return params, cfg, depth, min_cut
 
 
 @pytest.mark.parametrize("idx", range(N_COMBOS))
@@ -74,7 +74,8 @@ def test_engine_equals_oracle_random_combo(spark, tmp_path, monkeypatch, idx):
     import web_crawler_spark.engine as engine_mod
 
     monkeypatch.setattr(engine_mod, "BLOOM_GATE_MIN_SAMPLE", 1)
-    params, cfg, depth = _draw(idx)
+    params, cfg, depth, min_cut = _draw(idx)
+    monkeypatch.setattr(engine_mod, "BLOOM_MIN_CUT_FRAC", min_cut)
     corpus = build_corpus_py(params)
     seeds = good_seeds(corpus, cfg, limit=1)
     assert seeds, f"combo {idx}: no admissible seed (params={params})"

@@ -2,9 +2,10 @@
 
 Defaults mirror the reference's configuration surface
 (feeder/src/config.rs:30-38, manager/src/routes/crawl.rs:28):
-max_attempts=3, max_dns_depth=5, max_crawl_depth=5.  Politeness / robots /
-bloom knobs are new capabilities required by the north rule (the reference
-has no per-host awareness).
+max_attempts=3, max_dns_depth=5, max_crawl_depth=5.  Politeness and bloom
+knobs are new capabilities required by the north rule (the reference has
+no per-host awareness); robots rules apply whenever the engine is given a
+robots table, so they need no knob.
 
 ``__post_init__`` rejects every value the wave loop cannot run with, so it
 fails when the config is built, not mid-crawl.
@@ -29,7 +30,6 @@ class CrawlConfig:
     # politeness / skew (north-rule additions; None = unlimited, reference parity)
     host_budget_per_wave: int | None = None
     politeness_salt: int = 16         # salt fan-out for the per-host top-k window
-    respect_robots: bool = False
 
     # dedup physical plan
     use_bloom_prefilter: bool = True
@@ -56,19 +56,11 @@ class CrawlConfig:
     # huge relative to executor memory and most candidates are duplicates
     # (late-crawl convergence at the 10^10-row design point); below the
     # threshold the exact join alone is simpler and at least as fast.
-    # The operator stays first-class: incremental, persisted,
-    # equivalence-tested (tests force it on with bloom_min_seen=0).
+    # The operator stays first-class: incremental, rebuilt from the
+    # frontier checkpoint in each run_crawl call, equivalence-tested
+    # (tests force it on with bloom_min_seen=0).  Once active it must
+    # also pass the measured-cut gate (engine.BLOOM_MIN_CUT_FRAC).
     bloom_min_seen: int = 5_000_000
-    # adaptive payoff gate: once active, the prefilter must certify at
-    # least this fraction of a wave's candidates as definitely-fresh
-    # (cut = 1 - maybe/candidates) or it is switched off for the rest of
-    # the crawl.  A bloom over the SEEN set can only remove
-    # definitely-NOT-seen candidates, so in a dup-dominated regime
-    # (late-wave BFS convergence inside a closed corpus: measured cut
-    # 0.22% on a 10x600k fleet past 5M seen, BENCH/ANALYSIS.md round 4)
-    # the verdict shuffle+UDF is pure overhead — the size gate alone
-    # cannot see that, only the measured cut can.  0 disables the gate.
-    bloom_min_cut_frac: float = 0.05
 
     # the per-parent local distinct groups on the full child URL string.
     # False is the only accepted value; the field stays so existing
@@ -108,11 +100,6 @@ class CrawlConfig:
             )
         # fail at construction, not mid-crawl, on a value the wave loop
         # cannot run with
-        if not 0.0 <= self.bloom_min_cut_frac < 1.0:
-            raise ValueError(
-                f"bloom_min_cut_frac must be in [0, 1) "
-                f"(got {self.bloom_min_cut_frac!r})"
-            )
         n = self.dedup_buckets
         if n <= 0 or n & (n - 1):
             raise ValueError(

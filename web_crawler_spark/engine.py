@@ -44,8 +44,13 @@ Scale design (10^10-URL frontier, 1000 executors):
   ``xxhash64(full_key)`` — bucket both tables by it in production so the
   joins are co-partitioned (no shuffle of the 100 TB side).
 * the politeness top-B per host is computed with a two-stage window
-  (salted local top-B, then exact top-B over survivors): a hot host with
-  10^8 pending URLs never lands in a single window partition (axis B).
+  (``operators.skew.top_n_per_bucket``: salted local top-B, then exact
+  top-B over survivors): a hot host with 10^8 pending URLs never lands in
+  a single window partition (axis B).
+* the bloom prefilter (``operators.dedup``) is an accelerator in front of
+  the exact seen-set join, never a source of truth: its per-bucket bitmap
+  files live for one ``run_crawl`` call, built from the frontier
+  checkpoint and removed when the call ends.
 * every wave's Spark jobs run in the job group ``crawl/{crawl_id}/w{wave}``;
   the commit summary records their ids next to the wave totals and phase
   timings, so an event log resolves each wave to its stages and tasks.
@@ -71,19 +76,34 @@ from pyspark.sql import functions as F
 
 from .config import CrawlConfig
 from .functions.urls import URL_REGEX_JAVA, normalize_cols, normalize_url_py
+from .operators.skew import top_n_per_bucket
 from .sources.simulators import (
     dns_cols_unrolled,
     dns_py,
     fetch_outcome_cols,
     fetch_outcome_py,
 )
-from .store import FRONTIER_SCHEMA, METRICS_SCHEMA, SnapshotStore
+from .store import (
+    FRONTIER_SCHEMA,
+    UPDATES_SCHEMA,
+    SnapshotStore,
+    apply_updates,
+)
 
 log = logging.getLogger(__name__)
 
-# adaptive bloom gate: a wave must test at least this many candidates
-# before its measured cut can switch the prefilter off — tail waves with
-# a handful of candidates would otherwise noise-trip the sticky gate
+# adaptive bloom payoff gate: once active, the prefilter must certify at
+# least BLOOM_MIN_CUT_FRAC of a wave's candidates as definitely-fresh
+# (cut = 1 - maybe/candidates) or it is switched off for the rest of the
+# crawl.  A bloom over the SEEN set can only remove definitely-NOT-seen
+# candidates, so in a dup-dominated regime (late-wave BFS convergence
+# inside a closed corpus: measured cut 0.22% on a 10x600k fleet past 5M
+# seen, BENCH/ANALYSIS.md round 4) the verdict shuffle+UDF is pure
+# overhead — the size gate (cfg.bloom_min_seen) cannot see that, only the
+# measured cut can.  A wave must test at least BLOOM_GATE_MIN_SAMPLE
+# candidates before its cut counts — tail waves with a handful of
+# candidates would otherwise noise-trip the sticky gate.
+BLOOM_MIN_CUT_FRAC = 0.05
 BLOOM_GATE_MIN_SAMPLE = 1024
 
 PENDING, COMPLETED, FAILED, CANCELLED = "PENDING", "COMPLETED", "FAILED", "CANCELLED"
@@ -188,10 +208,8 @@ class CrawlEngine:
                 .repartition(n_part, "doc_id")
                 .persist()
             )
-        self.robots = robots  # columns: host, disallowed
-        # larger Arrow batches for the narrow bloom verdict UDF: fewer
-        # batch boundaries => better JVM<->Python pipelining per task
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
+        # robots rules apply iff a table is given; columns: host, disallowed
+        self.robots = robots
         # PySpark wraps every DataFrame/Column API call in a call-site
         # capture for error context (`pyspark.errors.utils._with_origin`):
         # an inspect stack walk plus 2-3 extra py4j round-trips PER CALL
@@ -244,11 +262,6 @@ class CrawlEngine:
             "parent_key", "pos"
         )
         x["host"] = _host_col(F.col("name"))
-        x["salt"] = F.pmod(F.col("url_hash"), F.lit(cfg.politeness_salt))
-        x["elig_w1"] = Window.partitionBy("crawl_id", "host", "salt").orderBy(
-            "full_key"
-        )
-        x["elig_w2"] = Window.partitionBy("crawl_id", "host").orderBy("full_key")
         x["child_http"] = F.when(
             F.col("child_full").startswith("HTTPS://"), F.lit("HTTPS://")
         ).otherwise(F.lit("HTTP://"))
@@ -416,7 +429,13 @@ class CrawlEngine:
         A cancelling crawl or fleet runs one more wave, whatever
         ``max_waves`` says, in which every member is cancelled: nothing
         is eligible, the wave's updates delta flips every PENDING row to
-        CANCELLED, and the chain and its members end ``cancelled``.
+        CANCELLED, and the chain and its members end ``cancelled``.  That
+        wave folds no next frontier, since no wave reads one.
+
+        The bloom prefilter's state belongs to this call: it is built from
+        the frontier checkpoint the first time a wave qualifies, updated
+        every wave, and its directory is removed when the call returns or
+        raises.  A resume builds it again from the checkpoint it loads.
         """
         meta = self.store.read_crawl_meta(crawl_id)
         if meta["status"] in ("failed", "cancelled", "completed"):
@@ -424,21 +443,20 @@ class CrawlEngine:
         from .operators.dedup import BloomState
 
         self.store.clean_uncommitted(crawl_id)
-        last_wave = self.store.last_committed_wave(crawl_id)
-        wave = last_wave + 1
+        wave = self.store.last_committed_wave(crawl_id) + 1
         bloom_root = self.store.crawl_dir(crawl_id) / "bloom"
 
         waves_done = 0
         frontier: DataFrame | None = None
         n_seen = n_pending = 0
         bloom: BloomState | None = None
-        # adaptive payoff gate (cfg.bloom_min_cut_frac): sticky-off once
-        # a measured wave shows the prefilter certifying almost nothing —
-        # in a BFS the duplicate fraction of candidates only grows as the
+        # adaptive payoff gate (BLOOM_MIN_CUT_FRAC): sticky-off once a
+        # measured wave shows the prefilter certifying almost nothing — in
+        # a BFS the duplicate fraction of candidates only grows as the
         # frontier converges, so a wave that cannot pay never pays again.
         # The trip is PERSISTED in the crawl meta (round-4 ADVICE): without
         # it every resume reset the gate, triggering a full O(frontier)
-        # BloomState rebuild before the gate re-tripped one wave later —
+        # BloomState build before the gate re-tripped one wave later —
         # repeated wasted scans in exactly the dup-dominated regime the
         # gate exists for.
         bloom_pays = not meta.get("bloom_gate_tripped")
@@ -462,14 +480,6 @@ class CrawlEngine:
                     frontier, n_seen, n_pending = self._prepare_frontier(
                         self.store.frontier(self.spark, crawl_id)
                     )
-                    if last_wave and bloom_pays:
-                        # resume: reuse persisted per-bucket state only if
-                        # its manifest matches the last committed wave.
-                        # Skipped entirely when the persisted gate already
-                        # tripped: the on-disk state is stale by design.
-                        bloom = BloomState.load(
-                            bloom_root, self.cfg, expect_wave=last_wave
-                        )
 
                 # cancelled members: their PENDING rows are excluded from
                 # eligibility and flipped to CANCELLED by this wave's own
@@ -499,8 +509,8 @@ class CrawlEngine:
 
                         self.store.update_member_metas(crawl_id, _complete_all)
                     return meta
-                # incremental bloom lifecycle: build once the seen set is
-                # worth prefiltering, grow by full rebuild when outgrown;
+                # bloom lifecycle: build from the frontier checkpoint once
+                # the seen set is worth prefiltering, rebuild when outgrown;
                 # per-wave maintenance is an O(wave) delta update inside
                 # _run_wave instead of the O(crawl) frontier re-scan
                 use_bloom = (
@@ -521,14 +531,19 @@ class CrawlEngine:
                     elif not use_bloom:
                         bloom = None
                     eligible = self._eligible(frontier, exclude_crawl_ids=cancel_ids)
-                    result, (nxt, obs_rows, obs_pending) = self._run_wave(
+                    result, nxt = self._run_wave(
                         crawl_id, wave, eligible, seen=frontier,
-                        bloom=bloom, cancel_ids=cancel_ids,
+                        bloom=bloom, cancel_ids=cancel_ids, fold=not cancelling,
                     )
                 # the next frontier is materialized from the superseded
                 # one, which nothing reads any more
                 _release(frontier)
-                frontier = nxt
+                if nxt is not None:
+                    frontier, obs_rows, obs_pending = nxt
+                else:
+                    # the cancel wave folds no frontier: nothing was
+                    # eligible, so it adds no row and leaves none PENDING
+                    frontier, obs_rows, obs_pending = None, n_seen, 0
                 if cancel_ids and meta.get("is_fleet"):
                     # the wave committed their CANCELLED rows.  Re-read +
                     # targeted mutation, NOT a write-back of the pre-wave
@@ -571,29 +586,22 @@ class CrawlEngine:
                     n_seen, n_pending = obs_rows, obs_pending
                 # adaptive payoff gate: judge on a measured wave (sample
                 # floor guards tiny tail waves from noise-tripping it)
-                if (
-                    bloom_pays
-                    and self.cfg.bloom_min_cut_frac > 0
-                    and result.bloom_candidates >= BLOOM_GATE_MIN_SAMPLE
-                ):
+                if bloom_pays and result.bloom_candidates >= BLOOM_GATE_MIN_SAMPLE:
                     cut = 1.0 - result.bloom_maybe / result.bloom_candidates
-                    if cut < self.cfg.bloom_min_cut_frac:
+                    if cut < BLOOM_MIN_CUT_FRAC:
                         log.info(
                             "bloom prefilter off for crawl %s: wave %d cut "
                             "%.2f%% of %d candidates < min %.1f%% — "
                             "dup-dominated regime, stage-2 exact join alone",
                             crawl_id, wave, 100 * cut,
-                            result.bloom_candidates,
-                            100 * self.cfg.bloom_min_cut_frac,
+                            result.bloom_candidates, 100 * BLOOM_MIN_CUT_FRAC,
                         )
                         bloom_pays = False
                         bloom = None
                         # persist the trip so a resume neither rebuilds
-                        # the state nor re-pays the one-wave measurement;
-                        # the stale on-disk bucket files go with it
+                        # the state nor re-pays the one-wave measurement
                         meta["bloom_gate_tripped"] = wave
                         self.store.write_crawl_meta(meta)
-                        shutil.rmtree(bloom_root, ignore_errors=True)
                 # the checkpointed frontier reads none of the wave files
                 # compact() deletes
                 if (
@@ -610,6 +618,7 @@ class CrawlEngine:
         finally:
             if frontier is not None:
                 _release(frontier)
+            shutil.rmtree(bloom_root, ignore_errors=True)
 
     # ------------------------------------------------------------------
     # wave internals
@@ -660,8 +669,9 @@ class CrawlEngine:
         """PENDING rows, capped per host by the politeness budget (W1).
 
         Exact top-B per host in sorted full-key order, computed skew-safely
-        in two stages: (1) top-B within (host, salt) buckets — bounds any
-        single window partition; (2) exact top-B over the ≤ S*B survivors.
+        by ``top_n_per_bucket``: (1) top-B within (host, salt) buckets —
+        bounds any single window partition; (2) exact top-B over the ≤ S*B
+        survivors.
         ``exclude_crawl_ids``: cancelling fleet members — their PENDING
         rows are never claimed (the wave flips them to CANCELLED instead).
         """
@@ -671,16 +681,13 @@ class CrawlEngine:
         budget = self.cfg.host_budget_per_wave
         if budget is None:
             return pending
-        eligible = (
-            pending.withColumn("host", self._x["host"])
-            .withColumn("salt", self._x["salt"])
-            .withColumn("_lrn", F.row_number().over(self._x["elig_w1"]))
-            .filter(F.col("_lrn") <= budget)
-            .withColumn("_grn", F.row_number().over(self._x["elig_w2"]))
-            .filter(F.col("_grn") <= budget)
-            .drop("host", "salt", "_lrn", "_grn")
-        )
-        return eligible
+        return top_n_per_bucket(
+            pending.withColumn("host", self._x["host"]),
+            ["crawl_id", "host"],
+            "full_key",
+            budget,
+            self.cfg.politeness_salt,
+        ).drop("host")
 
     def _run_wave(
         self,
@@ -691,13 +698,14 @@ class CrawlEngine:
         root_fetched: int = 1,
         bloom=None,  # BloomState, managed by run_crawl
         cancel_ids: list[str] | None = None,
+        fold: bool = True,
     ) -> tuple[WaveResult, tuple[DataFrame, int, int] | None]:
         """Run and commit one wave; every Spark action runs on the calling
         thread.  ``seen`` is the current frontier, None on the root wave.
-        Returns the WaveResult and, when ``seen`` is given, the next
-        frontier folded from it, as ``_prepare_frontier`` returns it."""
+        Returns the WaveResult and, when ``seen`` is given and ``fold`` is
+        set, the next frontier folded from it, as ``_prepare_frontier``
+        returns it."""
         t0 = time.time()
-        cfg = self.cfg
 
         # ---- fetch simulation (S1): join against the corpus ----
         # documents is pre-partitioned by doc_id and cached (init), so
@@ -779,10 +787,6 @@ class CrawlEngine:
         # are never mixed.
         bloom_candidates = bloom_maybe = 0
         flagged = None
-        # the prefilter runs only when run_crawl decided the seen set is
-        # worth it and handed over live state (below cfg.bloom_min_seen
-        # the bloom stage costs more than the exact join it would trim)
-        use_bloom = cfg.use_bloom_prefilter and bloom is not None
         if seen is not None:
             seen_keys = seen.select(
                 "crawl_id",
@@ -790,7 +794,7 @@ class CrawlEngine:
                 F.col("full_key").alias("child_full"),
                 F.lit(True).alias("_seen"),
             )
-            if use_bloom:
+            if bloom is not None:
                 # stage 1: bloom verdict (no false negatives) — certainly-
                 # fresh candidates skip the exact join shuffle entirely.
                 # The bloom key is crawl-scoped (xxhash64(crawl_id, key)):
@@ -843,7 +847,7 @@ class CrawlEngine:
             .withColumn("child_domain", dns["domain"])
             .withColumn("child_ip", dns["ip"])
         )
-        if cfg.respect_robots and self.robots is not None:
+        if self.robots is not None:
             rb = self.robots.select(
                 F.col("host").alias("_r_host"), F.col("disallowed").alias("_r_disallowed")
             )
@@ -1021,8 +1025,8 @@ class CrawlEngine:
             if bloom is not None:
                 # O(wave) incremental maintenance: OR this wave's insert
                 # keys into the state — a bucket-partitioned job writes
-                # only the touched buckets' files + a new manifest.  It
-                # reads the inserts from the `cand` cache the write filled.
+                # only the touched buckets' files.  It reads the inserts
+                # from the `cand` cache the write filled.
                 bloom.update(
                     children.select(
                         F.xxhash64("crawl_id", "full_key").alias("url_hash")
@@ -1030,7 +1034,7 @@ class CrawlEngine:
                     wave,
                 )
             lap("bloom_upd")
-            if seen is not None:
+            if seen is not None and fold:
                 # fold the next frontier from the files just written (the
                 # current frontier appears ONCE + stable file scans — an
                 # in-memory fold through the wave pipeline references it
@@ -1109,33 +1113,16 @@ class CrawlEngine:
 
     def _fold_frontier(self, prev: DataFrame, crawl_id: str, wave: int) -> DataFrame:
         """Fold one written wave's deltas into the cached frontier: apply
-        the status updates to existing rows (a shuffled left join), append
-        the inserts.  Reads only the new wave's files — stable, bounded
-        lineage (prev appears exactly once in the plan); updates-only
-        waves simply have no inserts file."""
-        from .store import UPDATES_SCHEMA
-
+        the status updates to existing rows (``apply_updates``, a shuffled
+        left join), append the inserts.  Reads only the new wave's files —
+        stable, bounded lineage (prev appears exactly once in the plan);
+        updates-only waves simply have no inserts file."""
         upd_path = self.store.delta_path(crawl_id, wave, "updates")
         ins_path = self.store.delta_path(crawl_id, wave, "inserts")
         merged = prev
         if upd_path is not None:
-            upd = (
-                self.spark.read.schema(UPDATES_SCHEMA)
-                .parquet(str(upd_path))
-                .select(
-                    "crawl_id",
-                    "url_hash",
-                    "full_key",
-                    F.col("status").alias("_u_status"),
-                    F.col("attempts").alias("_u_attempts"),
-                )
-            )
-            merged = (
-                prev.join(upd, ["crawl_id", "url_hash", "full_key"], "left")
-                .withColumn("status", F.coalesce("_u_status", "status"))
-                .withColumn("attempts", F.coalesce("_u_attempts", "attempts"))
-                .drop("_u_status", "_u_attempts")
-            )
+            upd = self.spark.read.schema(UPDATES_SCHEMA).parquet(str(upd_path))
+            merged = apply_updates(prev, upd)
         if ins_path is not None:
             ins = self.spark.read.schema(FRONTIER_SCHEMA).parquet(str(ins_path))
             merged = merged.unionByName(ins)

@@ -32,9 +32,8 @@ n_seen=10^10 x 16 bits/key is ~40 GB of driver memory AND ~40 GB of
 broadcast per wave.  Now:
 
 * State lives as one bitmap **file per bucket** in the snapshot store
-  (the stand-in for a distributed FS; Iceberg would carry these as
-  puffin/side files next to the table), referenced by an atomic
-  ``manifest.json``.  Nothing bloom-sized ever lives on the driver.
+  (the stand-in for a distributed FS); the driver holds only the
+  bucket -> file path map.  Nothing bloom-sized ever lives on the driver.
 * **build/update are distributed jobs**: seen/delta keys are shuffled
   *by bucket* (each bucket's keys land in one task), each task builds or
   ORs only *its* buckets' bitmaps and writes them back.  Per-task memory
@@ -44,10 +43,14 @@ broadcast per wave.  Now:
   bucket-contiguous Arrow batches and holds AT MOST ONE bucket bitmap
   resident at a time (``_PartitionLocalTester``) — per-task state is
   exactly total_bits / n_buckets, as the north rule specifies.
-* **incremental manifests**: a wave's update writes new files only for
+* **incremental updates**: a wave's update writes new files only for
   buckets its delta touched and carries the other buckets' paths forward
-  (Iceberg-manifest style) — per-wave maintenance I/O is O(wave), not
-  O(state).
+  — per-wave maintenance I/O is O(wave), not O(state).
+* **one run's lifetime**: the state is an accelerator, never the source
+  of truth (the exact join against the frontier checkpoint is).  The
+  engine builds it from that checkpoint within one ``run_crawl`` call and
+  deletes its directory when the call ends, so no bitmap outlives its
+  crawl; a resumed crawl builds it again.
 
 The bucket of a key is the low ``log2(n_buckets)`` bits of its uint64
 xxhash64 (``n_buckets`` must be a power of two): Spark-side
@@ -57,7 +60,6 @@ exactly for every signed/unsigned reinterpretation.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import uuid
@@ -131,17 +133,17 @@ def _atomic_write_bytes(path: Path, data: bytes) -> None:
 # worker-level tester cache for the narrow partition-local verdict UDF:
 # a scalar pandas UDF is re-invoked per Arrow batch, and Python workers
 # are reused across batches/stages/waves — the cache keeps ONE tester
-# (holding ONE resident bucket bitmap) alive per manifest version so a
+# (holding ONE resident bucket bitmap) alive per state version so a
 # bucket file is read once per task, not once per batch.  Keyed by the
-# manifest content; at most one entry is retained (a new wave's manifest
-# evicts the old state).
+# bucket path map; at most one entry is retained (a new wave's state
+# evicts the old one).
 _TESTER_CACHE: dict = {}
 
 
 def _cached_tester(root: str, paths_items: tuple, n_buckets: int, n_probes: int):
     key = (root, paths_items, n_buckets, n_probes)
     if key not in _TESTER_CACHE:
-        _TESTER_CACHE.clear()  # one live manifest per worker
+        _TESTER_CACHE.clear()  # one live state per worker
         _TESTER_CACHE[key] = _PartitionLocalTester(
             root, dict(paths_items), n_buckets, n_probes
         )
@@ -202,30 +204,26 @@ class _PartitionLocalTester:
 
 
 class BloomState:
-    """File-backed, partition-local bloom seen-set state for one crawl.
+    """File-backed, partition-local bloom seen-set state for one crawl,
+    owned by one ``run_crawl`` call (which removes ``root`` when it ends).
 
     Layout under ``root`` (inside the snapshot store — the distributed-FS
-    stand-in; at production these are Iceberg side/puffin files)::
+    stand-in)::
 
-        manifest.json            {wave, m_bits, capacity, dedup_buckets,
-                                  bloom_num_probes, buckets: {id: relpath}}
         v{wave}/b{bucket}.npy    one bitmap per bucket (written by tasks)
 
     Lifecycle mirrors the hash-table-style amortized growth of round 2
     (build once the seen set is worth prefiltering, full rebuild at 2x
     when outgrown, O(wave) delta updates in between) — but every step is
     a distributed job over bucket-partitioned keys and NOTHING bloom-sized
-    touches the driver: the driver handles only the manifest (a 32-entry
-    path dict).
+    touches the driver: the driver handles only ``bucket_paths`` (a
+    32-entry path dict).
 
-    Correctness invariant: state must never MISS a seen key, so a loaded
-    manifest is used only when its recorded wave equals the store's last
-    committed wave AND its bucket/probe geometry matches the current
-    config (a geometry change would silently produce false negatives —
-    ADVICE round 2); anything else falls back to a full rebuild.
+    Correctness invariant: state must never MISS a seen key.  It is only
+    ever built from the seen set of the wave it serves and then ORed with
+    every later wave's inserts, under the geometry of the one config that
+    built it, so it has no stale or re-geometried form to guard against.
     """
-
-    MANIFEST = "manifest.json"
 
     def __init__(
         self,
@@ -233,14 +231,12 @@ class BloomState:
         cfg: CrawlConfig,
         m_bits: int,
         capacity: int,
-        wave: int,
         bucket_paths: dict[int, str],
     ) -> None:
         self.root = Path(root)
         self.cfg = cfg
         self.m_bits = m_bits
         self.capacity = capacity
-        self.wave = wave
         self.bucket_paths = bucket_paths
 
     # -- internals ---------------------------------------------------------
@@ -311,22 +307,9 @@ class BloomState:
             out[int(r.bucket)] = r.relpath
         return out
 
-    def _save_manifest(self) -> None:
-        payload = json.dumps(
-            {
-                "wave": self.wave,
-                "m_bits": self.m_bits,
-                "capacity": self.capacity,
-                "dedup_buckets": self.cfg.dedup_buckets,
-                "bloom_num_probes": self.cfg.bloom_num_probes,
-                "buckets": {str(b): p for b, p in self.bucket_paths.items()},
-            }
-        )
-        _atomic_write_bytes(self.root / self.MANIFEST, payload.encode())
-
-    def _gc_versions(self, prev_paths: dict[int, str] | None = None) -> None:
-        """Drop version dirs referenced by neither the current manifest
-        nor the immediately-previous one (best-effort).
+    def _gc_versions(self, prev_paths: dict[int, str]) -> None:
+        """Drop version dirs referenced by neither the current state nor
+        the immediately-previous one (best-effort).
 
         GC is deferred by ONE version on purpose: a ``verdict()``
         DataFrame captures the bucket file paths of the state it was
@@ -334,11 +317,12 @@ class BloomState:
         may re-read those files after the next ``update()`` — immediate
         GC made that public sequence fail at task level with
         FileNotFoundError (round-3 ADVICE).  One deferral window covers
-        one subsequent update/build; see the staleness note on
-        :meth:`verdict`."""
-        live = {p.split("/", 1)[0] for p in self.bucket_paths.values()}
-        if prev_paths:
-            live |= {p.split("/", 1)[0] for p in prev_paths.values()}
+        one subsequent update; see the staleness note on :meth:`verdict`."""
+        live = {
+            p.split("/", 1)[0]
+            for paths in (self.bucket_paths, prev_paths)
+            for p in paths.values()
+        }
         try:
             for d in self.root.iterdir():
                 if d.is_dir() and d.name.startswith("v") and d.name not in live:
@@ -356,21 +340,15 @@ class BloomState:
         root: str | Path,
         wave: int,
     ) -> "BloomState":
-        """Full rebuild from the current seen set, sized for 2x headroom.
+        """Full rebuild from the current seen set, sized for 2x headroom;
+        replaces whatever ``root`` held (a superseded state's verdicts
+        must be materialized before the rebuild).
 
         Sizing is per-bucket (capacity / n_buckets keys per bucket at
         bloom_bits_per_key) — round 2 divided by n_buckets twice, leaving
         bitmaps ~32x undersized at design capacity (ADVICE round 2)."""
         root = Path(root)
-        # the superseded state's files (if any) survive one build — same
-        # one-version GC deferral as update(), so a pre-rebuild verdict
-        # stays computable (see _gc_versions)
-        prev: dict[int, str] | None = None
-        try:
-            m = json.loads((root / cls.MANIFEST).read_text())
-            prev = {int(b): p for b, p in m["buckets"].items()}
-        except Exception:  # noqa: BLE001 — no/corrupt prior manifest
-            prev = None
+        shutil.rmtree(root, ignore_errors=True)
         capacity = max(2 * n_seen, 2 * cfg.bloom_min_seen, 1 << 17)
         per_bucket = max(1 << 12, -(-capacity // cfg.dedup_buckets))
         m_bits = _bucket_bits(cfg, per_bucket)
@@ -378,55 +356,21 @@ class BloomState:
             seen_keys, root, wave, m_bits, cfg.dedup_buckets,
             cfg.bloom_num_probes, prev_paths=None,
         )
-        st = cls(root, cfg, m_bits, capacity, wave, paths)
-        st._save_manifest()
-        st._gc_versions(prev_paths=prev)
-        return st
+        return cls(root, cfg, m_bits, capacity, paths)
 
     def needs_rebuild(self, n_seen: int) -> bool:
         return n_seen > self.capacity
 
     def update(self, delta_keys: DataFrame, wave: int) -> None:
         """OR one wave's insert keys into the state (distributed job,
-        O(delta) work): only buckets the delta touches get new files;
-        the manifest carries the rest forward by reference."""
+        O(delta) work): only buckets the delta touches get new files; the
+        path map carries the rest forward by reference."""
         prev = self.bucket_paths
         self.bucket_paths = self._write_bucket_files(
             delta_keys, self.root, wave, self.m_bits, self.cfg.dedup_buckets,
             self.cfg.bloom_num_probes, prev_paths=prev,
         )
-        self.wave = wave
-        self._save_manifest()
-        self._gc_versions(prev_paths=prev)
-
-    @classmethod
-    def load(
-        cls, root: str | Path, cfg: CrawlConfig, expect_wave: int
-    ) -> "BloomState | None":
-        """Load persisted state; None unless the manifest matches
-        ``expect_wave`` exactly AND the bucket/probe geometry matches the
-        current config (stale or re-geometried state would have false
-        negatives => duplicate URLs in the frontier).  This is a
-        best-effort cache: ANY read/parse failure (truncated manifest,
-        missing bitmap file, …) falls back to a full rebuild."""
-        try:
-            m = json.loads((Path(root) / cls.MANIFEST).read_text())
-            if (
-                int(m["wave"]) != expect_wave
-                or int(m["dedup_buckets"]) != cfg.dedup_buckets
-                or int(m["bloom_num_probes"]) != cfg.bloom_num_probes
-            ):
-                return None
-            paths = {int(b): p for b, p in m["buckets"].items()}
-            for p in paths.values():  # verify referenced files exist
-                if not (Path(root) / p).is_file():
-                    return None
-            return cls(
-                root, cfg, int(m["m_bits"]), int(m["capacity"]),
-                int(m["wave"]), paths,
-            )
-        except Exception:  # noqa: BLE001 — best-effort cache by contract
-            return None
+        self._gc_versions(prev)
 
     # -- verdict -----------------------------------------------------------
     def verdict(
@@ -449,10 +393,9 @@ class BloomState:
 
         Staleness: the returned DataFrame reads the bucket FILES of the
         state as of this call.  Version GC is deferred by one update, so
-        the result stays computable across ONE subsequent
-        ``update()``/``build()`` on this state; materialize it fully
-        before a second one, after which the captured files may be
-        garbage-collected.
+        the result stays computable across ONE subsequent ``update()`` on
+        this state; materialize it fully before a second one or a
+        ``build()``, after which the captured files may be gone.
         """
         from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
 

@@ -7,7 +7,8 @@ hot (a host with 10^8 pending URLs), the window that exists to *bound*
 the hot bucket becomes the skew bottleneck itself (round-3 VERDICT
 What's-wrong #3).
 
-The fix is the crawl engine's politeness pattern (engine._eligible):
+The fix, which the crawl engine's per-host politeness budget
+(engine._eligible) uses too:
 
 * stage 1 — ``row_number`` within (bucket, salt) sub-buckets, keep the
   first n of each: bounds any single window partition to ~|bucket| /

@@ -154,7 +154,7 @@ class OracleCrawler:
 
     def _admit(self, name: str) -> tuple[bool, str | None, str | None]:
         """DNS + robots admission for a normalized child name."""
-        if self.cfg.respect_robots and _host_of(name) in self.robots:
+        if _host_of(name) in self.robots:
             return False, None, None
         return dns_py(name, self.cfg)
 

@@ -102,6 +102,26 @@ METRICS_SCHEMA = T.StructType(
 )
 
 
+def apply_updates(rows: DataFrame, upd: DataFrame) -> DataFrame:
+    """The one update rule: a URL's ``status``/``attempts`` come from its
+    row in ``upd`` (at most one per URL) when it has one, else from
+    ``rows``.  Merge-on-read applies it to the latest update per URL, the
+    engine's frontier fold to one wave's updates."""
+    u = upd.select(
+        "crawl_id",
+        "url_hash",
+        "full_key",
+        F.col("status").alias("_u_status"),
+        F.col("attempts").alias("_u_attempts"),
+    )
+    return (
+        rows.join(u, ["crawl_id", "url_hash", "full_key"], "left")
+        .withColumn("status", F.coalesce("_u_status", "status"))
+        .withColumn("attempts", F.coalesce("_u_attempts", "attempts"))
+        .drop("_u_status", "_u_attempts")
+    )
+
+
 class SnapshotStore:
     def __init__(self, root: str | Path) -> None:
         self.root = Path(root)
@@ -491,23 +511,10 @@ class SnapshotStore:
         w = Window.partitionBy("crawl_id", "url_hash", "full_key").orderBy(
             F.desc("wave")
         )
-        latest = (
-            upd.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(
-                "crawl_id",
-                "url_hash",
-                "full_key",
-                F.col("status").alias("_u_status"),
-                F.col("attempts").alias("_u_attempts"),
-            )
+        latest = upd.withColumn("_rn", F.row_number().over(w)).filter(
+            F.col("_rn") == 1
         )
-        return (
-            ins.join(latest, ["crawl_id", "url_hash", "full_key"], "left")
-            .withColumn("status", F.coalesce("_u_status", "status"))
-            .withColumn("attempts", F.coalesce("_u_attempts", "attempts"))
-            .drop("_u_status", "_u_attempts")
-        )
+        return apply_updates(ins, latest)
 
     def frontier(self, spark: SparkSession, crawl_id: str) -> DataFrame:
         """Current frontier = inserts merged with the latest status update
