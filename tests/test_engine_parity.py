@@ -257,6 +257,45 @@ def test_resume_drops_uncommitted_wave(spark, corpus, docs_df, tmp_path):
     assert_parity(spark, store, cid, oracle)
 
 
+def test_lost_frontier_block_reruns_wave(
+    spark, corpus, docs_df, tmp_path, caplog, monkeypatch
+):
+    """A wave whose frontier checkpoint lost its blocks (an executor
+    gone) fails with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND; run_crawl drops
+    the wave's partial files, reloads the frontier from the store and
+    re-runs the wave once, within the same call."""
+    seed = good_seeds(corpus, CFG)[0]
+    store = SnapshotStore(tmp_path / "s")
+    eng = CrawlEngine(spark, store, docs_df, CFG)
+    cid = eng.start_crawl(seed, 2, crawl_id="c")
+    prepare = eng._prepare_frontier
+    n_calls = 0
+
+    def lose_wave1_fold(df):
+        nonlocal n_calls
+        out = prepare(df)
+        n_calls += 1
+        # call 1 loads the frontier before wave 1, call 2 is wave 1's
+        # fold; its blocks go before wave 2 reads them (blocking, so the
+        # loss is certain when wave 2 starts)
+        if n_calls == 2:
+            out[0]._jdf.queryExecution().analyzed().rdd().unpersist(True)
+        return out
+
+    monkeypatch.setattr(eng, "_prepare_frontier", lose_wave1_fold)
+    with caplog.at_level("WARNING", logger="web_crawler_spark.engine"):
+        meta = eng.run_crawl(cid)
+    assert meta["status"] == "completed"
+    logged = [
+        r.levelno for r in caplog.records if r.name == "web_crawler_spark.engine"
+    ]
+    assert logged == [logging.WARNING]
+    assert store.committed_waves(cid) == [0, 1, 2]
+    assert_parity(
+        spark, store, cid, OracleCrawler(corpus, CFG).crawl(seed, 2, crawl_id="c")
+    )
+
+
 def test_crawl_isolation_same_store(spark, corpus, docs_df, tmp_path):
     """Two crawls in one store: per-crawl seen sets never interact
     (feeder/src/job.rs:137-165 crawl_id scoping)."""

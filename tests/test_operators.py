@@ -562,6 +562,8 @@ def test_streaming_progress_matches_batch(spark, tmp_path):
     seed = good_seeds(corpus, cfg)[0]
     cid = eng.start_crawl(seed, 2, crawl_id="c")
     eng.run_crawl(cid)
+    # compaction folds every wave's deltas and keeps every marker
+    assert store.compact(spark, cid) == store.committed_waves(cid)[-1]
 
     tail_progress(spark, store, table_name="t_progress")
     stream_rows = {r.crawl_id: r.asDict() for r in spark.table("t_progress").collect()}
@@ -574,7 +576,8 @@ def test_streaming_progress_matches_batch(spark, tmp_path):
     }
     assert stream_rows == batch_rows
     assert stream_rows[cid]["urls_fetched"] > 0
-    # and the marker totals agree with the metrics table's wave totals
+    assert stream_rows[cid]["last_wave"] == store.committed_waves(cid)[-1]
+    # and store.metrics() reads the same markers
     from pyspark.sql import functions as F2
 
     m = (

@@ -111,10 +111,13 @@ def test_compact_preserves_state_and_gcs_wave_dirs(spark, tmp_path):
     n_metrics = store.metrics(spark, "c").count()
 
     assert store.compact(spark, "c") == 1
-    # folded wave dirs are gone; resume point survives via the base marker
-    assert store.committed_waves("c") == []
+    # folded deltas are gone; every commit marker stays, and so does the
+    # resume point
+    assert store.committed_waves("c") == [0, 1]
     assert store.last_committed_wave("c") == 1
-    assert not store.wave_dir("c", 0).exists()
+    assert not any(
+        (store.wave_dir("c", w) / "delta.parquet").exists() for w in (0, 1)
+    )
     # state identical through the same reader APIs (discovery wave kept)
     after = {
         r.full_key: (r.status, r.attempts, r.wave)
@@ -135,6 +138,9 @@ def test_compact_preserves_state_and_gcs_wave_dirs(spark, tmp_path):
 
     # second compaction folds base + the new delta, drops the old base
     assert store.compact(spark, "c") == 2
+    assert store.current_base("c")[0] == 2
+    # nothing newer than the base: no fold, the base stays
+    assert store.compact(spark, "c") is None
     assert store.current_base("c")[0] == 2
     rows = {r.full_key: r.status for r in store.frontier(spark, "c").collect()}
     assert rows == {"HTTPS://A.TEST": "COMPLETED", "HTTPS://B.TEST": "FAILED"}

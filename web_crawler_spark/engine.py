@@ -13,8 +13,9 @@ at once, as a single declarative DataFrame pipeline:
                 frontier on (crawl_id,url_hash,full_key) => is_fresh flag
     admitted  = DNS simulation + robots filter (column expressions only)
     winners   = row_number() OVER (PARTITION BY child ORDER BY parent,pos)=1
-    commit    = inserts(children) + updates(parent transitions) + edges +
-                metrics, one atomic snapshot                 [store.py]
+    commit    = inserts(children) + updates(parent transitions) + edges,
+                one atomic snapshot whose commit.json marker carries the
+                wave's totals                                [store.py]
 
 Everything between `eligible` and `commit` is one Catalyst plan per output:
 JVM-side expressions throughout (regexp_extract_all / xxhash64 / split /
@@ -71,6 +72,7 @@ import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -107,6 +109,11 @@ BLOOM_MIN_CUT_FRAC = 0.05
 BLOOM_GATE_MIN_SAMPLE = 1024
 
 PENDING, COMPLETED, FAILED, CANCELLED = "PENDING", "COMPLETED", "FAILED", "CANCELLED"
+
+# Spark's error condition for a read of a local checkpoint block that is
+# gone (executor lost, or the block released); it arrives only in the
+# Py4JJavaError's text
+_LOST_BLOCK = "CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"
 
 # posexplode link index < 100000 per span by construction (pages are bounded)
 _POS_STRIDE = 100_000
@@ -420,11 +427,12 @@ class CrawlEngine:
 
         Resumable: starts after the last committed snapshot; partial wave
         directories from a crash are dropped and the wave re-runs
-        deterministically (ST2/ST3 analogue, strictly stronger).  That is
-        also how a lost frontier block is recovered: a local checkpoint
-        has no lineage to recompute it from, so the wave fails with
-        ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` and the caller calls
-        ``run_crawl`` again.
+        deterministically (ST2/ST3 analogue, strictly stronger).  A lost
+        frontier block is recovered the same way, in place: a local
+        checkpoint has no lineage to recompute it from, so a wave that
+        fails with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` drops its partial
+        files, reloads the frontier from the store and runs again, once;
+        a second loss in the same wave raises.
 
         A cancelling crawl or fleet runs one more wave, whatever
         ``max_waves`` says, in which every member is cancelled: nothing
@@ -447,6 +455,7 @@ class CrawlEngine:
         bloom_root = self.store.crawl_dir(crawl_id) / "bloom"
 
         waves_done = 0
+        retried_wave = -1  # the wave already re-run after a lost block
         frontier: DataFrame | None = None
         n_seen = n_pending = 0
         bloom: BloomState | None = None
@@ -519,22 +528,38 @@ class CrawlEngine:
                     and not cancelling
                     and n_seen >= self.cfg.bloom_min_seen
                 )
-                with self._wave_group(crawl_id, wave):
-                    if use_bloom and (bloom is None or bloom.needs_rebuild(n_seen)):
-                        seen_hashed = frontier.select(
-                            F.xxhash64("crawl_id", "full_key").alias("url_hash")
+                try:
+                    with self._wave_group(crawl_id, wave):
+                        if use_bloom and (bloom is None or bloom.needs_rebuild(n_seen)):
+                            seen_hashed = frontier.select(
+                                F.xxhash64("crawl_id", "full_key").alias("url_hash")
+                            )
+                            # state as of the last committed wave (= wave-1)
+                            bloom = BloomState.build(
+                                seen_hashed, self.cfg, n_seen, bloom_root, wave - 1
+                            )
+                        elif not use_bloom:
+                            bloom = None
+                        eligible = self._eligible(frontier, cancel_ids)
+                        result, nxt = self._run_wave(
+                            crawl_id, wave, eligible, seen=frontier, bloom=bloom,
+                            cancel_ids=cancel_ids, fold=not cancelling,
                         )
-                        # state as of the last committed wave (= wave-1)
-                        bloom = BloomState.build(
-                            seen_hashed, self.cfg, n_seen, bloom_root, wave - 1
-                        )
-                    elif not use_bloom:
-                        bloom = None
-                    eligible = self._eligible(frontier, exclude_crawl_ids=cancel_ids)
-                    result, nxt = self._run_wave(
-                        crawl_id, wave, eligible, seen=frontier,
-                        bloom=bloom, cancel_ids=cancel_ids, fold=not cancelling,
+                except Py4JJavaError as e:
+                    # a lost frontier block cannot be recomputed: recover
+                    # as a resume does, once per wave
+                    if retried_wave == wave or _LOST_BLOCK not in str(e):
+                        raise
+                    log.warning(
+                        "crawl %s wave %d lost a frontier block; reloading "
+                        "the frontier from the store and re-running the wave",
+                        crawl_id, wave,
                     )
+                    retried_wave = wave
+                    _release(frontier)
+                    frontier = bloom = None
+                    self.store.clean_uncommitted(crawl_id)
+                    continue
                 # the next frontier is materialized from the superseded
                 # one, which nothing reads any more
                 _release(frontier)
@@ -1045,12 +1070,6 @@ class CrawlEngine:
             lap("fold")
 
             elapsed_ms = int((time.time() - t0) * 1000)
-            total_row = (
-                crawl_id, wave, -1, fetched, ok, n_failed, timeouts, candidates,
-                raw_total - candidates, dns_dropped, n_children, elapsed_ms,
-            )
-            self.store.write_metrics_row(total_row, crawl_id, wave)
-
             result = WaveResult(
                 wave=wave,
                 fetched=fetched,

@@ -1,11 +1,11 @@
 """Snapshot store: one atomic, resumable checkpoint per crawl wave.
 
 Production design is Iceberg (BASELINE.json north_rule): ``frontier`` /
-``edges`` / ``metrics`` tables partitioned by ``(crawl_id, bucket(P,
-url_hash))``, one Iceberg snapshot committed per wave, resume = read the
-last committed snapshot.  This sandbox's pyspark distribution ships no
-Iceberg runtime jar, so this module reproduces the exact semantics the
-engine relies on with parquet + commit markers:
+``edges`` tables partitioned by ``(crawl_id, bucket(P, url_hash))``, one
+Iceberg snapshot committed per wave whose summary carries the wave's
+totals, resume = read the last committed snapshot.  This sandbox's pyspark
+distribution ships no Iceberg runtime jar, so this module reproduces the
+exact semantics the engine relies on with parquet + commit markers:
 
 * **Append-only deltas, never rewrite.**  A wave writes only its *new*
   frontier rows (``inserts``) and its *status transitions* (``updates``)
@@ -13,10 +13,12 @@ engine relies on with parquet + commit markers:
   10^10-row design point rewriting the frontier per wave would be a full
   table write per wave; deltas keep per-wave I/O proportional to the wave,
   and the number of update files per URL is bounded by max_attempts+1.
-* **Atomic commit marker.**  ``commit.json`` (the wave's JSON summary) is
-  written last; a wave directory without it is invisible to readers and
-  deleted on resume — the reference's per-job Neo4j transaction boundary
-  (/root/reference/feeder/src/job.rs:174-203) widened to a whole wave.
+* **Atomic commit marker.**  ``commit.json`` (the wave's JSON summary,
+  ``COMMIT_SCHEMA``: the snapshot summary and the one record of the
+  wave's totals) is written last; a wave directory without it is
+  invisible to readers and deleted on resume — the reference's per-job
+  Neo4j transaction boundary (/root/reference/feeder/src/job.rs:174-203)
+  widened to a whole wave.  Compaction keeps every marker.
 * **Resume** = max committed wave + reconstructed current state; an
   interrupted wave simply re-runs (deterministic pipeline => identical
   output), mirroring the reference's stale-claim reclamation
@@ -81,14 +83,16 @@ EDGES_SCHEMA = T.StructType(
     ]
 )
 
-# one row per committed wave: its totals.  ``partition_id`` is always -1
-# (the wave-total marker readers filter on); per-task lineage lives in the
-# event log, reached through the ``job_ids`` of the wave's commit summary
-METRICS_SCHEMA = T.StructType(
+# commit.json payload (commit_wave): identity + WaveResult fields, the one
+# record of a wave's totals.  Every wave commits through the engine's one
+# wave path, the cancel wave of a cancelled crawl or fleet included, so
+# every marker carries them; per-task lineage lives in the event log,
+# reached through the ``job_ids`` of the marker
+COMMIT_SCHEMA = T.StructType(
     [
+        T.StructField("ts", T.DoubleType()),
         T.StructField("crawl_id", T.StringType()),
         T.StructField("wave", T.IntegerType()),
-        T.StructField("partition_id", T.IntegerType()),
         T.StructField("fetched", T.LongType()),
         T.StructField("ok", T.LongType()),
         T.StructField("failed", T.LongType()),
@@ -263,18 +267,17 @@ class SnapshotStore:
         return bases[-1] if bases else None
 
     def last_committed_wave(self, crawl_id: str) -> int:
-        """Resume point: the max committed wave, whether it still exists
-        as a wave dir or has been folded into a compacted base (0 = no
-        committed wave yet)."""
+        """Resume point: the max committed wave (0 = none yet); compaction
+        keeps every wave's marker."""
         waves = self.committed_waves(crawl_id)
-        base = self.current_base(crawl_id)
-        return max(waves[-1] if waves else 0, base[0] if base else 0)
+        return waves[-1] if waves else 0
 
     def compact(self, spark: SparkSession, crawl_id: str) -> int | None:
-        """Fold every committed wave delta (and any older base) into one
-        consolidated base snapshot, then GC the folded wave dirs —
-        Iceberg's ``rewrite_data_files``.  Returns the folded-up-to wave,
-        or None if there was nothing to fold.
+        """Fold the committed wave deltas newer than the current base (and
+        that base) into one consolidated base snapshot, then GC the folded
+        waves' ``delta.parquet`` — Iceberg's ``rewrite_data_files``.
+        Returns the folded-up-to wave, or None if no committed wave is
+        newer than the current base.
 
         Why it matters at scale: merge-on-read cost grows with the number
         of delta FILES (listing + the latest-update window over all
@@ -282,48 +285,45 @@ class SnapshotStore:
         compaction the current state is a single base read + the window
         over post-base deltas only.
 
+        Every wave's ``commit.json`` stays, as an Iceberg snapshot's
+        summary outlives a rewrite: ``committed_waves``, ``wave_summary``,
+        ``metrics`` and the streaming tailer see every committed wave.
+
         Crash-safe by construction: the new ``base_v{W}`` dir is complete
         only once its ``_BASE`` marker exists (written last, atomic
         rename); readers use the newest marker-complete base; GC of the
         folded sources happens strictly after the marker, so a crash at
-        any point leaves a readable store (at worst with leftover dirs
+        any point leaves a readable store (at worst with leftover files
         the next compaction removes).  Frontier rows keep their original
         discovery ``wave``; their folded current status/attempts act as
         the insert image, overridden by any post-base update (same
-        merge-on-read rule as before).
-
-        Note: the streaming progress tailer reads ``wave_*/commit.json``;
-        compaction deletes those for folded waves, which is invisible to
-        a RUNNING stream (processed files are checkpointed) but a stream
-        started afterwards only sees post-compaction waves."""
+        merge-on-read rule as before)."""
         waves = self.committed_waves(crawl_id)
-        if not waves:
+        old_bases = self._base_dirs(crawl_id)
+        if not waves or (old_bases and waves[-1] <= old_bases[-1][0]):
             return None
         upto = waves[-1]
-        old_bases = self._base_dirs(crawl_id)
         # GC every marker-less base dir (a compact() that crashed before
         # its _BASE marker, at ANY wave number — round-4 ADVICE: the old
         # same-name check only caught a crash that recurred at the exact
         # same upto wave), including a leftover at the target name
         self._gc_incomplete_bases(crawl_id)
         new_base = self.crawl_dir(crawl_id) / f"base_v{upto:05d}"
-        # consolidated current state (reads old base + all wave deltas)
+        # consolidated current state (reads old base + post-base deltas)
         self.frontier(spark, crawl_id).coalesce(8).write.parquet(
             str(new_base / "frontier.parquet")
         )
         self.edges(spark, crawl_id).coalesce(8).write.parquet(
             str(new_base / "edges.parquet")
         )
-        self.metrics(spark, crawl_id).coalesce(4).write.parquet(
-            str(new_base / "metrics.parquet")
-        )
         marker = new_base / "_BASE"
         tmp = marker.with_suffix(".tmp")
         tmp.write_text(json.dumps({"ts": time.time(), "upto_wave": upto}))
         tmp.replace(marker)
-        # GC strictly after the marker: folded wave dirs + superseded bases
+        # GC strictly after the marker: folded deltas + superseded bases
         for w in waves:
-            shutil.rmtree(self.wave_dir(crawl_id, w), ignore_errors=True)
+            delta = self.wave_dir(crawl_id, w) / "delta.parquet"
+            shutil.rmtree(delta, ignore_errors=True)
         for _, p in old_bases:
             shutil.rmtree(p, ignore_errors=True)
         return upto
@@ -408,41 +408,15 @@ class SnapshotStore:
         )
 
     def delta_path(self, crawl_id: str, wave: int, kind: str) -> Path | None:
-        """Existing on-disk path of one wave's ``kind`` rows, or None if
-        the wave wrote none: ``metrics.parquet`` (the totals row) or one
-        kind of the union delta (``delta.parquet/kind=...``)."""
-        wd = self.wave_dir(crawl_id, wave)
-        if kind == "metrics":
-            path = wd / "metrics.parquet"
-        else:
-            path = wd / "delta.parquet" / f"kind={kind}"
+        """Existing on-disk path of one kind of a wave's union delta
+        (``delta.parquet/kind=...``), or None if the wave wrote none."""
+        path = self.wave_dir(crawl_id, wave) / "delta.parquet" / f"kind={kind}"
         return path if path.exists() else None
-
-    def write_metrics_row(self, row: tuple, crawl_id: str, wave: int) -> None:
-        """Driver-side write of the wave's total row (pyarrow, no Spark job).
-
-        The row is tiny and already driver-resident; routing it through
-        spark.createDataFrame + a parquet write job costs a ~5 s
-        single-task stage per wave (profiled: a Python-worker round-trip
-        for the pickled local rows).  pyarrow writes the same schema
-        directly; readers are unchanged."""
-        import pyarrow as pa  # noqa: PLC0415
-        import pyarrow.parquet as pq  # noqa: PLC0415
-        from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
-
-        table = pa.Table.from_pylist(
-            [dict(zip(METRICS_SCHEMA.names, row))],
-            schema=to_arrow_schema(METRICS_SCHEMA),
-        )
-        d = self.wave_dir(crawl_id, wave)
-        d.mkdir(parents=True, exist_ok=True)
-        pq.write_table(table, d / "metrics.parquet")
 
     # ---- readers (see only committed waves + the compacted base) ----
     _BASE_FILE_OF_KIND = {
         "inserts": "frontier.parquet",  # folded current rows act as inserts
         "edges": "edges.parquet",
-        "metrics": "metrics.parquet",
         # updates: none — folded into the base frontier rows
     }
 
@@ -454,8 +428,9 @@ class SnapshotStore:
             p = base[1] / self._BASE_FILE_OF_KIND[kind]
             if p.exists():
                 out.append(str(p))
-        # waves <= base_wave are folded; surviving dirs for them (a crash
-        # between marker and GC) must not be double-read
+        # waves <= base_wave are folded: their markers stay, and a delta
+        # surviving a crash between base marker and GC must not be
+        # double-read
         paths = [
             self.delta_path(crawl_id, w, kind)
             for w in self.committed_waves(crawl_id)
@@ -482,7 +457,19 @@ class SnapshotStore:
         return self._read_kind(spark, crawl_id, "edges", EDGES_SCHEMA)
 
     def metrics(self, spark: SparkSession, crawl_id: str) -> DataFrame:
-        return self._read_kind(spark, crawl_id, "metrics", METRICS_SCHEMA)
+        """Every committed wave's totals, read from its ``commit.json``
+        (``COMMIT_SCHEMA``), with the wave-total marker column
+        ``partition_id = -1`` readers filter on."""
+        paths = [
+            str(self.wave_dir(crawl_id, w) / "commit.json")
+            for w in self.committed_waves(crawl_id)
+        ]
+        df = (
+            spark.read.schema(COMMIT_SCHEMA).json(paths)
+            if paths
+            else spark.createDataFrame([], COMMIT_SCHEMA)
+        )
+        return df.withColumn("partition_id", F.lit(-1))
 
     def frontier_all(self, spark: SparkSession) -> DataFrame:
         """Current frontier across every crawl (the list/stats APIs).

@@ -10,7 +10,8 @@ new wave commits become new micro-batch input files — no server, no push
 loop, any number of concurrent readers.
 
 Exactly-once by construction: markers are written once via atomic rename
-and never rewritten.
+and never rewritten.  Compaction keeps every marker, so a stream started
+after a compaction still sees the waves it folded.
 
 ``tail_progress`` aggregates per crawl (cumulative fetched/children/
 failed and last wave) into an in-memory sink table the caller can query;
@@ -23,29 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..store import SnapshotStore
-
-# commit.json payload (store.commit_wave): identity + WaveResult fields.
-# Every wave commits through the engine's one wave path, the cancel wave
-# of a cancelled crawl or fleet included, so every marker carries them
-COMMIT_SCHEMA = T.StructType(
-    [
-        T.StructField("ts", T.DoubleType()),
-        T.StructField("crawl_id", T.StringType()),
-        T.StructField("wave", T.IntegerType()),
-        T.StructField("fetched", T.LongType()),
-        T.StructField("ok", T.LongType()),
-        T.StructField("failed", T.LongType()),
-        T.StructField("timeouts", T.LongType()),
-        T.StructField("candidates", T.LongType()),
-        T.StructField("dedup_dropped", T.LongType()),
-        T.StructField("dns_dropped", T.LongType()),
-        T.StructField("children", T.LongType()),
-        T.StructField("elapsed_ms", T.LongType()),
-    ]
-)
+from ..store import COMMIT_SCHEMA, SnapshotStore
 
 
 def commit_stream(spark: SparkSession, store: SnapshotStore) -> DataFrame:
